@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.DimKey
+import graft.operators.{LocalGate, Seal}
 import graft.sources.Tables
 
 /** Round-11 queries (q714+). Separate object: the earlier query objects'
@@ -32,9 +33,8 @@ object R15Queries {
                                         gateRows: Long = 4096L): DataFrame = {
     val spark = tr.sparkSession
     import spark.implicits._
-    if (tr.count() <= gateRows) {
-      val rows = tr.select(col("f"), col("t"), col("ppm"))
-        .as[(String, String, Long)].collect()
+    LocalGate(tr.select("f", "t", "ppm"), gateRows, new Seal.Tracker) {
+        (rows: Array[(String, String, Long)]) =>
       val states = rows.map(_._1).distinct.toSeq
       val scen = states.filter(_ != "START") :+ "__base__"
       val byF = rows.groupBy(_._1)
@@ -51,32 +51,33 @@ object R15Queries {
           (sc, f) -> acc / 1000000L
         }).toMap
       }
-      return p.toSeq.map { case ((sc, st), v) => (sc, st, v) }
+      p.toSeq.map { case ((sc, st), v) => (sc, st, v) }
         .toDF("sc", "state", "p")
-    }
-    val states = tr.select(col("f").as("state")).distinct()
-      .localCheckpoint()
-    val scen = states.filter(col("state") =!= "START")
-      .select(col("state").as("sc"))
-      .unionByName(states.sparkSession.range(1)
-        .select(lit("__base__").as("sc")))
-      .localCheckpoint()
-    var p = scen.crossJoin(states).withColumn("p", lit(0L))
-      .select("sc", "state", "p").localCheckpoint()
-    for (_ <- 1 to iters) {
-      p = scen.crossJoin(tr)
-        .join(p.select(col("sc"), col("state").as("t"),
-                       col("p").as("pv")), Seq("sc", "t"), "left")
-        .withColumn("v",
-          when(col("t") === "CONV", lit(1000000L))
-            .when(col("t") === col("sc"), lit(0L))
-            .otherwise(coalesce(col("pv"), lit(0L))))
-        .groupBy(col("sc"), col("f").as("state"))
-        .agg(expr("sum(ppm * v) DIV 1000000L").as("p"))
-        .select("sc", "state", "p")
+    } { tr =>
+      val states = tr.select(col("f").as("state")).distinct()
         .localCheckpoint()
+      val scen = states.filter(col("state") =!= "START")
+        .select(col("state").as("sc"))
+        .unionByName(states.sparkSession.range(1)
+          .select(lit("__base__").as("sc")))
+        .localCheckpoint()
+      var p = scen.crossJoin(states).withColumn("p", lit(0L))
+        .select("sc", "state", "p").localCheckpoint()
+      for (_ <- 1 to iters) {
+        p = scen.crossJoin(tr)
+          .join(p.select(col("sc"), col("state").as("t"),
+                         col("p").as("pv")), Seq("sc", "t"), "left")
+          .withColumn("v",
+            when(col("t") === "CONV", lit(1000000L))
+              .when(col("t") === col("sc"), lit(0L))
+              .otherwise(coalesce(col("pv"), lit(0L))))
+          .groupBy(col("sc"), col("f").as("state"))
+          .agg(expr("sum(ppm * v) DIV 1000000L").as("p"))
+          .select("sc", "state", "p")
+          .localCheckpoint()
+      }
+      p
     }
-    p
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

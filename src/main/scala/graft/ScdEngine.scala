@@ -63,19 +63,9 @@ object ScdEngine {
   private val BucketManifest = "_SCD_BUCKETS"
 
   private def readBucketManifest(fs: FileSystem,
-                                 targetPath: String): Option[Seq[Int]] = {
-    val p = new Path(s"$targetPath/$BucketManifest")
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](4096)
-          Iterator.continually(in.read(chunk)).takeWhile(_ >= 0)
-            .foreach(k => buf.write(chunk, 0, k))
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
+                                 targetPath: String): Option[Seq[Int]] =
+    SmallFile.readIfPresent(fs, new Path(s"$targetPath/$BucketManifest"))
+      .flatMap { txt =>
         val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
         // toIntOption, not toInt (ADVICE r12): an all-digit line exceeding
         // Int range must degrade to the listing fallback like any other
@@ -85,22 +75,12 @@ object ScdEngine {
           Some(parsed.map(_.get))
         else None // half-written/foreign/oversized content: fall back to listing
       }
-    } catch { case _: java.io.IOException => None }
-  }
 
+  // A missing manifest is SAFE: readers fall back to one listing.
   private def writeBucketManifest(fs: FileSystem, targetPath: String,
-                                  buckets: Seq[Int]): Unit = {
-    val dst = new Path(s"$targetPath/$BucketManifest")
-    val tmp = new Path(s"$targetPath/.${BucketManifest}_tmp_" +
-      java.util.UUID.randomUUID().toString)
-    val out = fs.create(tmp, true)
-    try out.write(buckets.distinct.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(dst, false) // missing manifest is SAFE: readers fall back
-      if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-    }
-  }
+                                  buckets: Seq[Int]): Unit =
+    SmallFile.publish(fs, targetPath, BucketManifest,
+                      buckets.distinct.sorted.mkString("\n"))
 
   /** One top-level listStatus for `<BucketCol>=<b>` directory NAMES — the
     * manifest fallback and the post-swap seed. Directory names only: never
@@ -467,7 +447,8 @@ object ScdEngine {
       val dst = new Path(s"$targetPath/$BucketCol=$b")
       val src = new Path(s"$tmp/$BucketCol=$b")
       fs.delete(dst, true)
-      if (fs.exists(src)) { fs.rename(src, dst); present += b }
+      // the merged bucket in tmp is now the ONLY copy of its history
+      if (fs.exists(src)) { rename(fs, src, dst); present += b }
     }
     fs.delete(new Path(tmp), true)
     // Manifest forward: survivors = (previous − touched) ∪ the touched
@@ -478,6 +459,13 @@ object ScdEngine {
     contract.foreach(c =>
       fs.create(contractMarkerPath(targetPath, c), true).close())
   }
+
+  /** `fs.rename` that fails loudly: a false return throws before the
+    * caller's next delete can remove the only other copy of the data.
+    */
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"rename $src -> $dst failed; $src is kept")
 
   /** Write-new-dir-and-swap (SURVEY.md §4.3.2): breaks the read-write cycle on
     * `targetPath` (the snapshot's lineage reads the same path it replaces).
@@ -512,8 +500,8 @@ object ScdEngine {
       Contracts.enforceNotNull(spark.read.parquet(tmp.toString), c))
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
     fs.delete(old, true)
-    if (fs.exists(dst)) fs.rename(dst, old)
-    fs.rename(tmp, dst)
+    if (fs.exists(dst)) rename(fs, dst, old)
+    rename(fs, tmp, dst) // on failure `.old` holds the previous table
     fs.delete(old, true)
     // Seed the bucket manifest from ONE top-level listing of the freshly
     // written table — every later pruned incremental run then reads bucket

@@ -45,27 +45,13 @@ object VersionedTable {
   // unreadable half-written one) fall back to the listing path.
   private val Manifest = "_MANIFEST"
 
-  private def manifestVersions(f: FileSystem, root: String): Option[Seq[Long]] = {
-    val p = new Path(s"$root/$Manifest")
-    try {
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        val bytes = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](4096)
-          Iterator.continually(in.read(chunk)).takeWhile(_ >= 0)
-            .foreach(n => buf.write(chunk, 0, n))
-          buf.toByteArray
-        } finally in.close()
-        val lines = new String(bytes, "UTF-8").split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        if (lines.nonEmpty && lines.forall(l => l.nonEmpty && l.forall(_.isDigit)))
-          Some(lines.map(_.toLong))
-        else None // half-written/foreign content: fall back to listing
-      }
-    } catch { case _: java.io.IOException => None }
-  }
+  private def manifestVersions(f: FileSystem, root: String): Option[Seq[Long]] =
+    SmallFile.readIfPresent(f, new Path(s"$root/$Manifest")).flatMap { txt =>
+      val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+      if (lines.nonEmpty && lines.forall(l => l.nonEmpty && l.forall(_.isDigit)))
+        Some(lines.map(_.toLong))
+      else None // half-written/foreign content: fall back to listing
+    }
 
   /** Publish the manifest atomically: write a temp file, then rename into
     * place. Rewriting `_MANIFEST` with create(overwrite) truncated the old
@@ -80,18 +66,8 @@ object VersionedTable {
     * is correct (same pattern as [[graft.plans.ResultCache]]'s publish).
     */
   private def writeManifest(f: FileSystem, root: String,
-                            versions: Seq[Long]): Unit = {
-    val dst = new Path(s"$root/$Manifest")
-    val tmp = new Path(
-      s"$root/.${Manifest}_tmp_${java.util.UUID.randomUUID().toString}")
-    val out = f.create(tmp, true)
-    try out.write(versions.distinct.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!f.rename(tmp, dst)) { // e.g. HDFS: rename refuses existing dst
-      f.delete(dst, false) // missing manifest is SAFE: readers fall back to listing
-      if (!f.rename(tmp, dst)) f.delete(tmp, false)
-    }
-  }
+                            versions: Seq[Long]): Unit =
+    SmallFile.publish(f, root, Manifest, versions.distinct.sorted.mkString("\n"))
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     FileSystem.get(new URI(root), spark.sparkContext.hadoopConfiguration)
@@ -831,21 +807,13 @@ object VersionedTable {
   }
 
   private def txnPins(f: FileSystem, base: String,
-                      txnId: Long): Seq[(String, Long)] = {
-    val in = f.open(new Path(s"$base/$TxnDir/$txnId"))
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      Iterator.continually(in.read(chunk)).takeWhile(_ >= 0)
-        .foreach(n => buf.write(chunk, 0, n))
-      buf.toByteArray
-    } finally in.close()
-    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+                      txnId: Long): Seq[(String, Long)] =
+    SmallFile.read(f, new Path(s"$base/$TxnDir/$txnId"))
+      .split("\n").toSeq.filter(_.nonEmpty)
       .map { line =>
         val Array(n, v) = line.split(" ")
         n -> v.toLong
       }
-  }
 
   /** The latest transaction's consistent cross-table view: each pinned
     * table read at exactly the version the txn committed — immune to a

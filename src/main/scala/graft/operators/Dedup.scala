@@ -112,19 +112,8 @@ object Dedup {
   // verified banded-candidate relation per (corpus, n, bands, rows).
   // ~20 gate queries derive from the SAME documents pipeline; each
   // previously re-ran tokenize→shingle→12×md5→band-join→verify per query.
-  // Created lazily, deleted on JVM exit, so entries can never go stale
-  // across runs — every bench/oracle invocation computes from the parquet
-  // inputs.
-  private[graft] lazy val lshCacheDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_lsh_cache")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(d.toFile)
-    }))
-    d.toString
-  }
+  private[graft] lazy val lshCacheDir: String =
+    graft.plans.ResultCache.jvmDir("graft_lsh_cache")
 
   /** Cache key of the (id, text) corpus projection — the CONTENT
     * fingerprint (plan + input-file stats token), with repartition nodes
@@ -1335,71 +1324,87 @@ object Dedup {
     * trivial clusters of size 1 by definition and would dominate the output).
     *
     * Adaptive small-graph path (AQE-style size-based planning): when the
-    * materialized edge list is under `smallGraphEdges`, union-find on the
-    * driver replaces the iterative rounds — the edge count is already known
-    * (the checkpoint materialization doubles as the measurement), the
-    * collect is bounded by the threshold, and per-round job overhead
-    * disappears. Identical labels either way (min id per component).
+    * materialized edge list is under `smallGraphEdges` and its ids are
+    * integral, union-find on the driver replaces the iterative rounds —
+    * the edge count is already known (the checkpoint materialization
+    * doubles as the measurement), the collect is bounded by the
+    * threshold, and per-round job overhead disappears. Roots track the
+    * component MINIMUM (union by min, path compression), so labels are
+    * bit-identical to the distributed min-label propagation.
     */
   def clusterPairs(pairs: DataFrame,
                    aCol: String = "doc_a",
                    bCol: String = "doc_b",
                    smallGraphEdges: Long = 1000000L): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val ck = new Seal.Tracker
     val half = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val edges = half
+    LocalGate(half
       .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(false) // scanned once per round
-
-    val integralIds = edges.schema.fields.forall(f =>
-      f.dataType == org.apache.spark.sql.types.LongType ||
-        f.dataType == org.apache.spark.sql.types.IntegerType ||
-        f.dataType == org.apache.spark.sql.types.ShortType)
-    if (integralIds && edges.count() <= smallGraphEdges) {
-      val local = clusterPairsLocal(edges)
-      releaseCheckpoint(edges) // collected to the driver; nothing reads it again
-      return local
-    }
-    // Seed with min(node, min(neighbor)) — identical to one propagation
-    // round from identity labels, but a single aggregation on the edge list
-    // instead of a join+union round.
-    var labels = edges.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("_mn"))
-      .select(col("node"), least(col("node"), col("_mn")).as("label"))
-      .localCheckpoint(false)
-    var converged = false
-    while (!converged) {
-      val viaEdges = edges
-        .join(labels, edges("dst") === labels("node"))
-        .select(edges("src").as("node"), col("label"))
-      val next = labels.unionByName(viaEdges)
-        .groupBy("node").agg(min("label").as("label"))
+      .distinct(), smallGraphEdges, ck, guard = Seq("src", "dst"),
+      accept = LocalGate.IntegralIds) { (es: Array[(Long, Long)]) =>
+      val parent = scala.collection.mutable.HashMap[Long, Long]()
+      def find(x: Long): Long = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      for ((a, b) <- es) {
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      }
+      val labels = parent.keys.toSeq.sorted.map(n => (n, find(n)))
+      val sizes = labels.groupBy(_._2).map { case (c, g) => c -> g.size.toLong }
+      labels.map { case (n, c) => (n, c, sizes(c)) }
+        .toDF("doc_id", "cluster_id", "cluster_size")
+    } { edges => // scanned once per round
+      // Seed with min(node, min(neighbor)) — identical to one propagation
+      // round from identity labels, but a single aggregation on the edge list
+      // instead of a join+union round.
+      var labels = edges.groupBy(col("src").as("node"))
+        .agg(min(col("dst")).as("_mn"))
+        .select(col("node"), least(col("node"), col("_mn")).as("label"))
         .localCheckpoint(false)
-      // One job per round: counting the changed labels scans every partition,
-      // which both materializes the (lazy) checkpoint and decides convergence.
-      converged = next
-        .join(labels.withColumnRenamed("label", "_old"), "node")
-        .filter(col("label") =!= col("_old"))
-        .count() == 0L
-      // `next` is materialized by the count above, so the previous round's
-      // checkpoint blocks are dead weight — release them as the loop walks
-      // (round-12 verdict task 4: iterative operators must not accumulate
-      // one label checkpoint per round for the session's lifetime).
-      releaseCheckpoint(labels)
-      labels = next
+      var converged = false
+      while (!converged) {
+        val viaEdges = edges
+          .join(labels, edges("dst") === labels("node"))
+          .select(edges("src").as("node"), col("label"))
+        val next = labels.unionByName(viaEdges)
+          .groupBy("node").agg(min("label").as("label"))
+          .localCheckpoint(false)
+        // One job per round: counting the changed labels scans every partition,
+        // which both materializes the (lazy) checkpoint and decides convergence.
+        converged = next
+          .join(labels.withColumnRenamed("label", "_old"), "node")
+          .filter(col("label") =!= col("_old"))
+          .count() == 0L
+        // `next` is materialized by the count above, so the previous round's
+        // checkpoint blocks are dead weight — release them as the loop walks
+        // (round-12 verdict task 4: iterative operators must not accumulate
+        // one label checkpoint per round for the session's lifetime).
+        releaseCheckpoint(labels)
+        labels = next
+      }
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
+      // Integral ids surface as LongType so both planning paths (driver
+      // union-find below the edge threshold, iterative rounds above it)
+      // produce ONE schema — the threshold must never flip output types.
+      // Non-integral ids (strings) only ever take this distributed path.
+      val (docId, clusterId) =
+        if (LocalGate.typed(edges, Seq("src", "dst"), LocalGate.IntegralIds))
+          (col("node").cast("long"), col("label").cast("long"))
+        else (col("node"), col("label"))
+      ck.track(labels)
+      ck.seal(labels
+        .select(docId.as("doc_id"), clusterId.as("cluster_id"))
+        .withColumn("cluster_size", count(lit(1)).over(w)))
     }
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
-    // Integral ids surface as LongType so both planning paths (driver
-    // union-find below the edge threshold, iterative rounds above it)
-    // produce ONE schema — the threshold must never flip output types.
-    // Non-integral ids (strings) only ever take this distributed path.
-    val (docId, clusterId) =
-      if (integralIds) (col("node").cast("long"), col("label").cast("long"))
-      else (col("node"), col("label"))
-    sealOp(labels
-      .select(docId.as("doc_id"), clusterId.as("cluster_id"))
-      .withColumn("cluster_size", count(lit(1)).over(w)),
-      cached = Nil, ckpts = Seq(edges, labels))
   }
 
   /** Near-duplicate removal: drop every clustered document except its
@@ -1450,36 +1455,6 @@ object Dedup {
       .select(col("_cid").as(idCol)),
       cached = Nil, ckpts = Seq(clusterCkpt))
     df.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** Driver-side union-find for the adaptive small-graph path: roots track
-    * the component MINIMUM (union by min, path compression), so labels are
-    * bit-identical to the distributed min-label propagation.
-    */
-  private def clusterPairsLocal(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    for ((a, b) <- es) {
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    val labels = parent.keys.toSeq.sorted.map(n => (n, find(n)))
-    val sizes = labels.groupBy(_._2).map { case (c, g) => c -> g.size.toLong }
-    labels.map { case (n, c) => (n, c, sizes(c)) }
-      .toDF("doc_id", "cluster_id", "cluster_size")
   }
 
   /** Benchmark decontamination: for every training document, how many of its

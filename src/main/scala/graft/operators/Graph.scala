@@ -34,19 +34,10 @@ object Graph {
     * results are bit-identical across the gate (pinned in
     * GraphLocalGateSpec — every mirror reproduces the exact integer
     * arithmetic, node universe, edge multiplicity, and fixed-round
-    * semantics of its distributed twin).
+    * semantics of its distributed twin). [[LocalGate]] runs the gate;
+    * operators that do not cast their endpoints guard them as LongType.
     */
   private[graft] val SmallGraphGate = 100000L
-
-  /** True when every named column is LongType. The local mirrors collect
-    * `Dataset[(Long, …)]` and rebuild LOCAL relations with LONG columns,
-    * so an edge list carried in another integral type (which the
-    * distributed fold would propagate into its output schema) must take
-    * the distributed path to keep the output schema identical.
-    */
-  private def longCols(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c => df.schema(c).dataType ==
-      org.apache.spark.sql.types.LongType)
 
   /** Distinct undirected co-occurrence edges (src < dst) between items
     * sharing a group: one self-equi-join on the group key over the
@@ -76,18 +67,9 @@ object Graph {
       .agg(count(lit(1)).as("_n"))
   }
 
-  // Per-JVM disk cache for the counted pair relation: created lazily,
-  // deleted on JVM exit, so entries can never go stale across runs.
-  private lazy val edgeCacheDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_edge_cache")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(d.toFile)
-    }))
-    d.toString
-  }
+  // Per-JVM disk cache for the counted pair relation.
+  private lazy val edgeCacheDir: String =
+    graft.plans.ResultCache.jvmDir("graft_edge_cache")
 
   /** [[coOccurrenceEdges]] through `plans.ResultCache` on a per-JVM temp
     * dir. Seven gate queries (triangles, degree distribution, neighbor
@@ -294,13 +276,12 @@ object Graph {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val edges = ck.track(edges0.localCheckpoint())
-    if (longCols(edges, "src", "dst") && edges.count() <= gateEdges) {
+    LocalGate(edges0.select(col("src"), col("dst")), gateEdges, ck,
+              guard = Seq("src", "dst")) { (es: Array[(Long, Long)]) =>
       // Driver mirror of the distributed fold below: same node universe
       // (src ∪ dst), same edge MULTIPLICITY (no distinct — a multi-edge
       // contributes twice, exactly as the distributed join does), same
       // `1e6 + α·Σin DIV 1000` truncating arithmetic.
-      val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
       val ns = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
       var x = ns.iterator.map(_ -> 1000000L).toMap
       for (_ <- 1 to iters) {
@@ -310,35 +291,36 @@ object Graph {
           n -> (1000000L + alphaPermille * in.getOrElse(n, 0L) / 1000L)).toMap
       }
       val indeg = es.groupBy(_._2).map { case (v, a) => v -> a.length.toLong }
-      return ck.seal(ns.toSeq.map(n => (n, x(n), indeg.getOrElse(n, 0L)))
+      ck.seal(ns.toSeq.map(n => (n, x(n), indeg.getOrElse(n, 0L)))
         .toDF("node", "katz_micro", "indeg"))
+    } { edges =>
+      val nodes = ck.track(edges.select(col("src").as("node"))
+        .union(edges.select(col("dst").as("node")))
+        .distinct().localCheckpoint())
+      var x = nodes.withColumn("katz_micro", lit(1000000L))
+      for (i <- 1 to iters) {
+        val contrib = edges
+          .join(x.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("katz_micro")).as("_in"))
+        // eager checkpoint: round i materializes here, so round i-1's x is
+        // already dead — release as the loop walks (bounds in-call storage
+        // to two rounds instead of iters)
+        val prev = x
+        x = nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"),
+                  expr(s"1000000L + $alphaPermille * coalesce(_in, 0L)" +
+                       " DIV 1000").as("katz_micro"))
+          .localCheckpoint()
+        if (i > 1) Seal.releaseCheckpoint(prev)
+      }
+      val indeg = edges.groupBy(col("dst").as("node"))
+        .agg(count(lit(1)).as("indeg"))
+      ck.track(x)
+      ck.seal(x.join(indeg, Seq("node"), "left")
+        .select(col("node"), col("katz_micro"),
+                coalesce(col("indeg"), lit(0L)).as("indeg")))
     }
-    val nodes = ck.track(edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint())
-    var x = nodes.withColumn("katz_micro", lit(1000000L))
-    for (i <- 1 to iters) {
-      val contrib = edges
-        .join(x.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("katz_micro")).as("_in"))
-      // eager checkpoint: round i materializes here, so round i-1's x is
-      // already dead — release as the loop walks (bounds in-call storage
-      // to two rounds instead of iters)
-      val prev = x
-      x = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-                expr(s"1000000L + $alphaPermille * coalesce(_in, 0L)" +
-                     " DIV 1000").as("katz_micro"))
-        .localCheckpoint()
-      if (i > 1) Seal.releaseCheckpoint(prev)
-    }
-    val indeg = edges.groupBy(col("dst").as("node"))
-      .agg(count(lit(1)).as("indeg"))
-    ck.track(x)
-    ck.seal(x.join(indeg, Seq("node"), "left")
-      .select(col("node"), col("katz_micro"),
-              coalesce(col("indeg"), lit(0L)).as("indeg")))
   }
 
   /** Fixed-point integer PageRank over a directed edge list (src → dst):
@@ -362,14 +344,14 @@ object Graph {
     require(iters >= 1 && dampingPpm >= 0 && dampingPpm <= 1000000L)
     val spark = edges0.sparkSession
     import spark.implicits._
-    val edges = edges0.localCheckpoint()
-    if (longCols(edges, "src", "dst") && edges.count() <= gateEdges) {
+    val ck = new Seal.Tracker
+    LocalGate(edges0.select(col("src"), col("dst")), gateEdges, ck,
+              guard = Seq("src", "dst")) { (es: Array[(Long, Long)]) =>
       // Driver mirror: node universe = edge SOURCES; after each round the
       // rank relation holds exactly the dsts that received ≥1 contribution
       // row (the distributed inner join's semantics — a zero contribution
       // still counts as a row), multiplicity preserved, `pr DIV outdeg`
       // then `(1e6−d) + d·Σ DIV 1e6` truncating.
-      val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
       val outdeg = es.groupBy(_._1).map { case (u, a) => u -> a.length.toLong }
       val esD = es.filter { case (_, v) => outdeg.contains(v) }
       var pr: Map[Long, Long] = outdeg.map { case (u, _) => u -> 1000000L }
@@ -382,34 +364,34 @@ object Graph {
         pr = sc.iterator.map { case (v, s) =>
           v -> ((1000000L - dampingPpm) + dampingPpm * s / 1000000L) }.toMap
       }
-      return Seal(pr.toSeq.map { case (n, p) => (n, p, outdeg(n)) }
-        .toDF("node", "pr_micro", "outdeg"), ckpts = Seq(edges))
+      ck.seal(pr.toSeq.map { case (n, p) => (n, p, outdeg(n)) }
+        .toDF("node", "pr_micro", "outdeg"))
+    } { edges =>
+      val deg = ck.track(edges.groupBy(col("src"))
+        .agg(count(lit(1)).as("outdeg")).localCheckpoint())
+      // Attach the DESTINATION's out-degree to the edge list ONCE: each
+      // iteration's rollup then carries the outdeg the next contrib needs,
+      // so no per-iteration degree join exists — the plan is exactly one
+      // (edges ⋈ contrib) shuffle + one rollup per iteration, and the
+      // identical edge-side exchange is reused across iterations.
+      val edgesD = ck.track(edges
+        .join(deg.select(col("src").as("dst"),
+                         col("outdeg").as("dst_outdeg")), Seq("dst"))
+        .localCheckpoint())
+      var pr = deg.select(col("src").as("node"), lit(1000000L).as("pr"),
+                          col("outdeg"))
+      for (_ <- 1 to iters) {
+        val contrib = pr.select(col("node"), expr("pr DIV outdeg").as("c"))
+        pr = edgesD.join(contrib, edgesD("src") === contrib("node"))
+          .groupBy(col("dst"), col("dst_outdeg"))
+          .agg(sum(col("c")).as("sc"))
+          .select(col("dst").as("node"),
+                  expr(s"${1000000L - dampingPpm}L" +
+                       s" + ${dampingPpm}L * sc DIV 1000000L").as("pr"),
+                  col("dst_outdeg").as("outdeg"))
+      }
+      ck.seal(pr.select(col("node"), col("pr").as("pr_micro"), col("outdeg")))
     }
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    // Attach the DESTINATION's out-degree to the edge list ONCE: each
-    // iteration's rollup then carries the outdeg the next contrib needs,
-    // so no per-iteration degree join exists — the plan is exactly one
-    // (edges ⋈ contrib) shuffle + one rollup per iteration, and the
-    // identical edge-side exchange is reused across iterations.
-    val edgesD = edges
-      .join(deg.select(col("src").as("dst"),
-                       col("outdeg").as("dst_outdeg")), Seq("dst"))
-      .localCheckpoint()
-    var pr = deg.select(col("src").as("node"), lit(1000000L).as("pr"),
-                        col("outdeg"))
-    for (_ <- 1 to iters) {
-      val contrib = pr.select(col("node"), expr("pr DIV outdeg").as("c"))
-      pr = edgesD.join(contrib, edgesD("src") === contrib("node"))
-        .groupBy(col("dst"), col("dst_outdeg"))
-        .agg(sum(col("c")).as("sc"))
-        .select(col("dst").as("node"),
-                expr(s"${1000000L - dampingPpm}L" +
-                     s" + ${dampingPpm}L * sc DIV 1000000L").as("pr"),
-                col("dst_outdeg").as("outdeg"))
-    }
-    Seal(pr.select(col("node"), col("pr").as("pr_micro"), col("outdeg")),
-         ckpts = Seq(edges, deg, edgesD))
   }
 
   /** Personalized PageRank in exact integer micro-units: identical loop
@@ -438,13 +420,13 @@ object Graph {
     require(iters >= 1 && dampingPpm >= 0 && dampingPpm <= 1000000L)
     val spark = edges0.sparkSession
     import spark.implicits._
-    val edges = edges0.localCheckpoint()
-    if (longCols(edges, "src", "dst") && edges.count() <= gateEdges) {
+    val ck = new Seal.Tracker
+    LocalGate(edges0.select(col("src"), col("dst")), gateEdges, ck,
+              guard = Seq("src", "dst")) { (es: Array[(Long, Long)]) =>
       // Driver mirror of the loop below: rank init s·1e6 on sources, the
       // seed∩sources zero-contribution anchor keeps in-edge-less seeds in
       // every round's rollup, and a zero contribution from a rank-0
       // source still counts as a rollup row (inner-join semantics).
-      val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
       val seedSet = seeds0
         .select(col(seeds0.columns.head).cast("long")).distinct()
         .as[Long].collect().toSet
@@ -465,46 +447,46 @@ object Graph {
           v -> ((1000000L - dampingPpm) * sOf(v) +
             dampingPpm * s / 1000000L) }.toMap
       }
-      return Seal(pr.toSeq.map { case (n, p) => (n, p, outdeg(n)) }
-        .toDF("node", "ppr_micro", "outdeg"), ckpts = Seq(edges))
-    }
-    val seeds = seeds0
-      .select(col(seeds0.columns.head).cast("long").as("node")).distinct()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val edgesD = edges
-      .join(deg.select(col("src").as("dst"),
-                       col("outdeg").as("dst_outdeg")), Seq("dst"))
-      .localCheckpoint()
-    val isSeed = broadcast(seeds.withColumn("_seed", lit(1L)))
-    def seedGate(df: DataFrame): DataFrame =
-      df.join(isSeed, Seq("node"), "left")
-        .withColumn("_s", coalesce(col("_seed"), lit(0L))).drop("_seed")
-    var pr = seedGate(deg.select(col("src").as("node"), col("outdeg")))
-      .select(col("node"), (col("_s") * lit(1000000L)).as("pr"),
-              col("outdeg"))
-    // Teleport anchor: seed ∩ sources as zero-contribution rows riding the
-    // per-iteration rollup, so in-edge-less seeds survive each round.
-    val seedZero = deg.join(broadcast(seeds), deg("src") === seeds("node"))
-      .select(deg("src").as("dst"), deg("outdeg").as("dst_outdeg"),
-              lit(0L).as("c"))
-    for (_ <- 1 to iters) {
-      val contrib = pr.select(col("node"), expr("pr DIV outdeg").as("c"))
-      pr = seedGate(
-        edgesD.join(contrib, edgesD("src") === contrib("node"))
-          .select(col("dst"), col("dst_outdeg"), col("c"))
-          .unionByName(seedZero)
-          .groupBy(col("dst"), col("dst_outdeg"))
-          .agg(sum(col("c")).as("sc"))
-          .select(col("dst").as("node"), col("sc"),
-                  col("dst_outdeg").as("outdeg")))
-        .select(col("node"),
-                expr(s"${1000000L - dampingPpm}L * _s" +
-                     s" + ${dampingPpm}L * sc DIV 1000000L").as("pr"),
+      ck.seal(pr.toSeq.map { case (n, p) => (n, p, outdeg(n)) }
+        .toDF("node", "ppr_micro", "outdeg"))
+    } { edges =>
+      val seeds = seeds0
+        .select(col(seeds0.columns.head).cast("long").as("node")).distinct()
+      val deg = ck.track(edges.groupBy(col("src"))
+        .agg(count(lit(1)).as("outdeg")).localCheckpoint())
+      val edgesD = ck.track(edges
+        .join(deg.select(col("src").as("dst"),
+                         col("outdeg").as("dst_outdeg")), Seq("dst"))
+        .localCheckpoint())
+      val isSeed = broadcast(seeds.withColumn("_seed", lit(1L)))
+      def seedGate(df: DataFrame): DataFrame =
+        df.join(isSeed, Seq("node"), "left")
+          .withColumn("_s", coalesce(col("_seed"), lit(0L))).drop("_seed")
+      var pr = seedGate(deg.select(col("src").as("node"), col("outdeg")))
+        .select(col("node"), (col("_s") * lit(1000000L)).as("pr"),
                 col("outdeg"))
+      // Teleport anchor: seed ∩ sources as zero-contribution rows riding the
+      // per-iteration rollup, so in-edge-less seeds survive each round.
+      val seedZero = deg.join(broadcast(seeds), deg("src") === seeds("node"))
+        .select(deg("src").as("dst"), deg("outdeg").as("dst_outdeg"),
+                lit(0L).as("c"))
+      for (_ <- 1 to iters) {
+        val contrib = pr.select(col("node"), expr("pr DIV outdeg").as("c"))
+        pr = seedGate(
+          edgesD.join(contrib, edgesD("src") === contrib("node"))
+            .select(col("dst"), col("dst_outdeg"), col("c"))
+            .unionByName(seedZero)
+            .groupBy(col("dst"), col("dst_outdeg"))
+            .agg(sum(col("c")).as("sc"))
+            .select(col("dst").as("node"), col("sc"),
+                    col("dst_outdeg").as("outdeg")))
+          .select(col("node"),
+                  expr(s"${1000000L - dampingPpm}L * _s" +
+                       s" + ${dampingPpm}L * sc DIV 1000000L").as("pr"),
+                  col("outdeg"))
+      }
+      ck.seal(pr.select(col("node"), col("pr").as("ppr_micro"), col("outdeg")))
     }
-    Seal(pr.select(col("node"), col("pr").as("ppr_micro"), col("outdeg")),
-         ckpts = Seq(edges, deg, edgesD))
   }
 
   /** Synchronous label-propagation community detection, fully
@@ -530,14 +512,13 @@ object Graph {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val edges = ck.track(edges0.localCheckpoint())
-    if (longCols(edges, "src", "dst") && edges.count() <= gateEdges) {
+    LocalGate(edges0.select(col("src"), col("dst")), gateEdges, ck,
+              guard = Seq("src", "dst")) { (es: Array[(Long, Long)]) =>
       // Driver mirror: label universe = sources, neighbor labels read via
       // the edge's dst (multiplicity counts — a multi-edge votes twice),
       // mode with (count desc, label asc) tie-break; a node none of whose
       // dsts currently carry a label DROPS from the relation, exactly as
       // the distributed inner join does.
-      val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
       var labels: Map[Long, Long] = es.iterator.map(_._1).toArray.distinct
         .iterator.map(n => n -> n).toMap
       for (_ <- 1 to iters) {
@@ -551,28 +532,29 @@ object Graph {
             .minBy { case (l, c) => (-c, l) }._1
         }
       }
-      return ck.seal(labels.toSeq.toDF("node", "community"))
+      ck.seal(labels.toSeq.toDF("node", "community"))
+    } { edges =>
+      var labels = edges.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lab"))
+      for (i <- 1 to iters) {
+        import org.apache.spark.sql.expressions.Window
+        val w = Window.partitionBy(col("node"))
+          .orderBy(col("c").desc, col("lab").asc)
+        val prev = labels
+        labels = edges
+          .join(labels.select(col("node").as("dst"), col("lab")), Seq("dst"))
+          .groupBy(col("src").as("node"), col("lab"))
+          .agg(count(lit(1)).as("c"))
+          .withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === 1)
+          .select(col("node"), col("lab"))
+          .localCheckpoint()
+        // eager: round i materialized, round i-1's checkpoint is dead
+        if (i > 1) Seal.releaseCheckpoint(prev)
+      }
+      ck.track(labels)
+      ck.seal(labels.select(col("node"), col("lab").as("community")))
     }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lab"))
-    for (i <- 1 to iters) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("node"))
-        .orderBy(col("c").desc, col("lab").asc)
-      val prev = labels
-      labels = edges
-        .join(labels.select(col("node").as("dst"), col("lab")), Seq("dst"))
-        .groupBy(col("src").as("node"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select(col("node"), col("lab"))
-        .localCheckpoint()
-      // eager: round i materialized, round i-1's checkpoint is dead
-      if (i > 1) Seal.releaseCheckpoint(prev)
-    }
-    ck.track(labels)
-    ck.seal(labels.select(col("node"), col("lab").as("community")))
   }
 
   /** Connected components by alternating large-star / small-star rounds
@@ -602,17 +584,15 @@ object Graph {
     val spark = pairs.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val init = ck.track(pairs
+    LocalGate(pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("hi"),
               least(col("u"), col("v")).as("lo"))
-      .distinct().localCheckpoint(false))
-    if (init.count() <= gateEdges) {
+      .distinct(), gateEdges, ck) { (es: Array[(Long, Long)]) =>
       // Driver union-find (already long-cast above): identical labels —
       // cluster_id = the component's minimum node id — and sizes; the
       // star-contraction fixpoint computes exactly this.
-      val es = init.select(col("hi"), col("lo")).as[(Long, Long)].collect()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -631,64 +611,65 @@ object Graph {
       val lab = ns.iterator.map(n => n -> find(n)).toMap
       val size = lab.valuesIterator.toSeq.groupBy(identity)
         .map { case (c, xs) => c -> xs.size.toLong }
-      return ck.seal(ns.toSeq.map(n => (n, lab(n), size(lab(n))))
+      ck.seal(ns.toSeq.map(n => (n, lab(n), size(lab(n))))
         .toDF("doc_id", "cluster_id", "cluster_size"))
-    }
-    val allNodes = ck.track(init.select(col("hi").as("node"))
-      .union(init.select(col("lo").as("node")))
-      .distinct().localCheckpoint(false))
-    def signature(e: DataFrame): (Long, Long) = {
-      // Two scalars per round decide convergence — the only driver data,
-      // independent of graph size (same budget as clusterPairs' count()).
-      // Hashes are masked to 32 bits before summing: ANSI mode makes a
-      // full-width xxhash64 sum overflow long on a handful of edges.
-      val r = e.agg(count(lit(1)),
-                    coalesce(sum(xxhash64(col("hi"), col("lo"))
-                                   .bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var edges = init
-    var sig = signature(edges)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val nbrs = edges.select(col("hi").as("u"), col("lo").as("v"))
-        .union(edges.select(col("lo").as("u"), col("hi").as("v")))
-      val mins = nbrs.groupBy(col("u")).agg(min(col("v")).as("_mn"))
-        .select(col("u"), least(col("u"), col("_mn")).as("m"))
-      val ls = nbrs.join(mins, "u")
-        .filter(col("v") > col("u") && col("v") =!= col("m"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-        .distinct()
-      val sNbrs = ls.select(col("hi").as("u"), col("lo").as("v"))
-      val sMins = sNbrs.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = ck.track(sNbrs.join(sMins, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-        .union(sMins.select(col("u").as("hi"), col("m").as("lo")))
+    } { init =>
+      val allNodes = ck.track(init.select(col("hi").as("node"))
+        .union(init.select(col("lo").as("node")))
         .distinct().localCheckpoint(false))
-      val nextSig = signature(ss)
-      converged = nextSig == sig
-      sig = nextSig
-      edges = ss
-      rounds += 1
+      def signature(e: DataFrame): (Long, Long) = {
+        // Two scalars per round decide convergence — the only driver data,
+        // independent of graph size (same budget as clusterPairs' count()).
+        // Hashes are masked to 32 bits before summing: ANSI mode makes a
+        // full-width xxhash64 sum overflow long on a handful of edges.
+        val r = e.agg(count(lit(1)),
+                      coalesce(sum(xxhash64(col("hi"), col("lo"))
+                                     .bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)))
+          .head()
+        (r.getLong(0), r.getLong(1))
+      }
+      var edges = init
+      var sig = signature(edges)
+      var rounds = 0
+      var converged = false
+      while (!converged && rounds < maxRounds) {
+        val nbrs = edges.select(col("hi").as("u"), col("lo").as("v"))
+          .union(edges.select(col("lo").as("u"), col("hi").as("v")))
+        val mins = nbrs.groupBy(col("u")).agg(min(col("v")).as("_mn"))
+          .select(col("u"), least(col("u"), col("_mn")).as("m"))
+        val ls = nbrs.join(mins, "u")
+          .filter(col("v") > col("u") && col("v") =!= col("m"))
+          .select(col("v").as("hi"), col("m").as("lo"))
+          .distinct()
+        val sNbrs = ls.select(col("hi").as("u"), col("lo").as("v"))
+        val sMins = sNbrs.groupBy(col("u")).agg(min(col("v")).as("m"))
+        val ss = ck.track(sNbrs.join(sMins, "u")
+          .filter(col("v") =!= col("m"))
+          .select(col("v").as("hi"), col("m").as("lo"))
+          .union(sMins.select(col("u").as("hi"), col("m").as("lo")))
+          .distinct().localCheckpoint(false))
+        val nextSig = signature(ss)
+        converged = nextSig == sig
+        sig = nextSig
+        edges = ss
+        rounds += 1
+      }
+      // Non-convergence must not masquerade as a result: intermediate star
+      // labels are WRONG component ids. O(log² n) rounds suffice for any
+      // realistic graph, so hitting the cap means the caller's budget is
+      // too small (or the input is degenerate) — fail loudly.
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponentsStar: no fixpoint after $maxRounds rounds; " +
+            "raise maxRounds — intermediate labels are not component ids")
+      val parents = edges.groupBy(col("hi").as("node"))
+        .agg(min(col("lo")).as("_lab"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
+      ck.seal(allNodes.join(parents, Seq("node"), "left")
+        .select(col("node").as("doc_id"),
+                coalesce(col("_lab"), col("node")).as("cluster_id"))
+        .withColumn("cluster_size", count(lit(1)).over(w)))
     }
-    // Non-convergence must not masquerade as a result: intermediate star
-    // labels are WRONG component ids. O(log² n) rounds suffice for any
-    // realistic graph, so hitting the cap means the caller's budget is
-    // too small (or the input is degenerate) — fail loudly.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar: no fixpoint after $maxRounds rounds; " +
-          "raise maxRounds — intermediate labels are not component ids")
-    val parents = edges.groupBy(col("hi").as("node"))
-      .agg(min(col("lo")).as("_lab"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
-    ck.seal(allNodes.join(parents, Seq("node"), "left")
-      .select(col("node").as("doc_id"),
-              coalesce(col("_lab"), col("node")).as("cluster_id"))
-      .withColumn("cluster_size", count(lit(1)).over(w)))
   }
 
   /** Multi-source BFS: minimum hop distance from any seed, bounded by
@@ -704,13 +685,11 @@ object Graph {
     val ck = new Seal.Tracker
     val e = edges0.select(col("src").cast("long").as("src"),
                           col("dst").cast("long").as("dst"))
-    val sym = ck.track(e.union(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(false))
-    if (sym.count() <= gateEdges) {
+    LocalGate(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct(), gateEdges, ck) { (arcs: Array[(Long, Long)]) =>
       // Driver BFS (already long-cast): seeds at hop 0 — including seeds
       // with no edges, exactly as the distributed visited init keeps them.
-      val adj = sym.as[(Long, Long)].collect().groupBy(_._1)
+      val adj = arcs.groupBy(_._1)
         .map { case (u, a) => u -> a.map(_._2) }
       val vis = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
       seeds.select(col(seeds.columns.head).cast("long")).distinct()
@@ -723,27 +702,28 @@ object Graph {
         frontier.foreach(n => vis.update(n, h))
         h += 1
       }
-      return ck.seal(vis.toSeq.toDF("node", "hop"))
+      ck.seal(vis.toSeq.toDF("node", "hop"))
+    } { sym =>
+      var visited = ck.track(seeds
+        .select(col(seeds.columns.head).cast("long").as("node")).distinct()
+        .withColumn("hop", lit(0)).localCheckpoint(false))
+      var frontier = visited.select("node")
+      var h = 1
+      var exhausted = false
+      while (h <= maxHops && !exhausted) {
+        val next = ck.track(frontier.join(sym, frontier("node") === sym("src"))
+          .select(sym("dst").as("node")).distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .withColumn("hop", lit(h)).localCheckpoint(false))
+        // One count per level: materializes the checkpoint and decides
+        // whether the frontier died out before the hop budget.
+        exhausted = next.count() == 0L
+        visited = ck.track(visited.union(next).localCheckpoint(false))
+        frontier = next.select("node")
+        h += 1
+      }
+      ck.seal(visited)
     }
-    var visited = ck.track(seeds
-      .select(col(seeds.columns.head).cast("long").as("node")).distinct()
-      .withColumn("hop", lit(0)).localCheckpoint(false))
-    var frontier = visited.select("node")
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      val next = ck.track(frontier.join(sym, frontier("node") === sym("src"))
-        .select(sym("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("hop", lit(h)).localCheckpoint(false))
-      // One count per level: materializes the checkpoint and decides
-      // whether the frontier died out before the hop budget.
-      exhausted = next.count() == 0L
-      visited = ck.track(visited.union(next).localCheckpoint(false))
-      frontier = next.select("node")
-      h += 1
-    }
-    ck.seal(visited)
   }
 
   /** Bounded-hop single-source shortest paths by synchronous Bellman-Ford
@@ -763,15 +743,13 @@ object Graph {
     val spark = edges.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val e = ck.track(edges.select(col("src").cast("long").as("src"),
-                         col("dst").cast("long").as("dst"),
-                         col("cost").cast("long").as("cost"))
-      .localCheckpoint(false))
-    if (e.count() <= gateEdges) {
+    LocalGate(edges.select(col("src").cast("long").as("src"),
+                           col("dst").cast("long").as("dst"),
+                           col("cost").cast("long").as("cost")),
+              gateEdges, ck) { (es: Array[(Long, Long, Long)]) =>
       // Driver Bellman-Ford (already long-cast): exactly `rounds` sweeps,
       // each relaxing from the PREVIOUS sweep's distance snapshot (the
       // synchronous semantics of the union + min-combine below).
-      val es = e.as[(Long, Long, Long)].collect()
       var dist: Map[Long, Long] = seed
         .select(col(seed.columns.head).cast("long")).distinct()
         .as[Long].collect().iterator.map(_ -> 0L).toMap
@@ -786,20 +764,21 @@ object Graph {
         }
         dist = next.toMap
       }
-      return ck.seal(dist.toSeq.toDF("node", "cost"))
+      ck.seal(dist.toSeq.toDF("node", "cost"))
+    } { e =>
+      var dist = seed.select(col(seed.columns.head).cast("long").as("node"))
+        .distinct().withColumn("cost", lit(0L))
+      for (_ <- 1 to rounds) {
+        val d = dist.as("d")
+        val relaxed = d.join(e.as("e"), col("d.node") === col("e.src"))
+          .select(col("e.dst").as("node"),
+                  (col("d.cost") + col("e.cost")).as("cost"))
+        dist = ck.track(dist.unionAll(relaxed)
+          .groupBy(col("node")).agg(min(col("cost")).as("cost"))
+          .localCheckpoint(false))
+      }
+      ck.seal(dist)
     }
-    var dist = seed.select(col(seed.columns.head).cast("long").as("node"))
-      .distinct().withColumn("cost", lit(0L))
-    for (_ <- 1 to rounds) {
-      val d = dist.as("d")
-      val relaxed = d.join(e.as("e"), col("d.node") === col("e.src"))
-        .select(col("e.dst").as("node"),
-                (col("d.cost") + col("e.cost")).as("cost"))
-      dist = ck.track(dist.unionAll(relaxed)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint(false))
-    }
-    ck.seal(dist)
   }
 
   /** Longest-path levels of a DAG via `sweeps` relaxation rounds:
@@ -818,14 +797,12 @@ object Graph {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val e = ck.track(edges0.select(col("src").cast("long").as("src"),
-                          col("dst").cast("long").as("dst"))
-      .distinct().localCheckpoint(false))
-    if (e.count() <= gateEdges) {
+    LocalGate(edges0.select(col("src").cast("long").as("src"),
+                            col("dst").cast("long").as("dst")).distinct(),
+              gateEdges, ck) { (es: Array[(Long, Long)]) =>
       // Driver relaxation (already long-cast + distinct): `sweeps` max
       // sweeps from lvl ≡ 0 over the src ∪ dst universe, each from the
       // previous sweep's snapshot.
-      val es = e.as[(Long, Long)].collect()
       val ns = (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct
       var lvl: Map[Long, Long] = ns.iterator.map(_ -> 0L).toMap
       for (_ <- 1 to sweeps) {
@@ -837,19 +814,20 @@ object Graph {
         }
         lvl = next.toMap
       }
-      return ck.seal(lvl.toSeq.toDF("node", "lvl"))
+      ck.seal(lvl.toSeq.toDF("node", "lvl"))
+    } { e =>
+      var lvl = ck.track(e.select(col("src").as("node"))
+        .unionAll(e.select(col("dst").as("node")))
+        .distinct().withColumn("lvl", lit(0L)).localCheckpoint(false))
+      for (i <- 1 to sweeps) {
+        val relaxed = lvl.as("l").join(e.as("e"), col("l.node") === col("e.src"))
+          .select(col("e.dst").as("node"), (col("l.lvl") + lit(1L)).as("lvl"))
+        lvl = lvl.unionAll(relaxed)
+          .groupBy(col("node")).agg(max(col("lvl")).as("lvl"))
+        if (i % 6 == 0 || i == sweeps) lvl = ck.track(lvl.localCheckpoint(false))
+      }
+      ck.seal(lvl)
     }
-    var lvl = ck.track(e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node")))
-      .distinct().withColumn("lvl", lit(0L)).localCheckpoint(false))
-    for (i <- 1 to sweeps) {
-      val relaxed = lvl.as("l").join(e.as("e"), col("l.node") === col("e.src"))
-        .select(col("e.dst").as("node"), (col("l.lvl") + lit(1L)).as("lvl"))
-      lvl = lvl.unionAll(relaxed)
-        .groupBy(col("node")).agg(max(col("lvl")).as("lvl"))
-      if (i % 6 == 0 || i == sweeps) lvl = ck.track(lvl.localCheckpoint(false))
-    }
-    ck.seal(lvl)
   }
 
   /** Fixed-sweep k-core peeling: `sweeps` rounds of "drop every node whose
@@ -873,17 +851,14 @@ object Graph {
     val ck = new Seal.Tracker
     val e = edges0.select(col("src").cast("long").as("src"),
                           col("dst").cast("long").as("dst")).distinct()
-    val sym = ck.track(e.union(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false))
-    if (sym.count() <= gateEdges) {
+    LocalGate(e.union(e.select(col("dst").as("src"), col("src").as("dst"))),
+              gateEdges, ck) { (arcs: Array[(Long, Long)]) =>
       // Driver peel (already long-cast): identical incremental-decrement
       // loop — full first degree count, then per sweep only the edges
       // incident to the just-removed set, ending early at the fixpoint or
       // at the sweep budget, whichever first. Note sym deliberately keeps
       // a (a,b)+(b,a) input pair as two arcs each way, exactly as the
       // union above does.
-      val arcs = sym.as[(Long, Long)].collect()
       var deg = scala.collection.mutable.HashMap.empty[Long, Long]
       arcs.foreach { case (u, _) => deg.update(u, deg.getOrElse(u, 0L) + 1L) }
       var removed = deg.iterator.filter(_._2 < k).map(_._1).toArray
@@ -905,43 +880,44 @@ object Graph {
           sweep += 1
         }
       }
-      return ck.seal(deg.toSeq.toDF("node", "deg"))
-    }
-    // Incremental peel: after the full first count, each sweep only
-    // touches edges INCIDENT TO newly-removed nodes (semi-join on the
-    // removed set) and decrements survivors' degrees — total join work
-    // across all sweeps is bounded by |E|, where recomputing the induced
-    // degree per sweep costs |E| PER SWEEP (measured 85 s → the full
-    // recompute at 16 M edges; the peel's deltas are a fraction of
-    // that). An empty removal set ends the loop early — the fixpoint is
-    // reached, and continuing would change nothing, so fixed-sweep
-    // reproducibility is preserved.
-    val first = ck.track(sym.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(false))
-    var deg = ck.track(first.filter(col("deg") >= k).localCheckpoint(false))
-    var removed = ck.track(first.filter(col("deg") < k).select("node")
-      .localCheckpoint(false))
-    var sweep = 2
-    var done = false
-    while (sweep <= sweeps && !done) {
-      if (removed.isEmpty) done = true
-      else {
-        val lost = sym
-          .join(removed.withColumnRenamed("node", "dst"),
-                Seq("dst"), "left_semi")
-          .groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("_lost"))
-        val updated = ck.track(deg.join(lost, Seq("node"), "left")
-          .select(col("node"),
-                  (col("deg") - coalesce(col("_lost"), lit(0L))).as("deg"))
-          .localCheckpoint(false))
-        removed = ck.track(updated.filter(col("deg") < k).select("node")
-          .localCheckpoint(false))
-        deg = ck.track(updated.filter(col("deg") >= k).localCheckpoint(false))
-        sweep += 1
+      ck.seal(deg.toSeq.toDF("node", "deg"))
+    } { sym =>
+      // Incremental peel: after the full first count, each sweep only
+      // touches edges INCIDENT TO newly-removed nodes (semi-join on the
+      // removed set) and decrements survivors' degrees — total join work
+      // across all sweeps is bounded by |E|, where recomputing the induced
+      // degree per sweep costs |E| PER SWEEP (measured 85 s → the full
+      // recompute at 16 M edges; the peel's deltas are a fraction of
+      // that). An empty removal set ends the loop early — the fixpoint is
+      // reached, and continuing would change nothing, so fixed-sweep
+      // reproducibility is preserved.
+      val first = ck.track(sym.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("deg")).localCheckpoint(false))
+      var deg = ck.track(first.filter(col("deg") >= k).localCheckpoint(false))
+      var removed = ck.track(first.filter(col("deg") < k).select("node")
+        .localCheckpoint(false))
+      var sweep = 2
+      var done = false
+      while (sweep <= sweeps && !done) {
+        if (removed.isEmpty) done = true
+        else {
+          val lost = sym
+            .join(removed.withColumnRenamed("node", "dst"),
+                  Seq("dst"), "left_semi")
+            .groupBy(col("src").as("node"))
+            .agg(count(lit(1)).as("_lost"))
+          val updated = ck.track(deg.join(lost, Seq("node"), "left")
+            .select(col("node"),
+                    (col("deg") - coalesce(col("_lost"), lit(0L))).as("deg"))
+            .localCheckpoint(false))
+          removed = ck.track(updated.filter(col("deg") < k).select("node")
+            .localCheckpoint(false))
+          deg = ck.track(updated.filter(col("deg") >= k).localCheckpoint(false))
+          sweep += 1
+        }
       }
+      ck.seal(deg)
     }
-    ck.seal(deg)
   }
 
   /** HITS hubs/authorities, integer-exact: unnormalized mutual
@@ -961,16 +937,14 @@ object Graph {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val e = ck.track(edges0.select(col("src").cast("long").as("src"),
-                          col("dst").cast("long").as("dst")).distinct()
-      .localCheckpoint(false))
-    if (e.count() <= gateEdges) {
+    LocalGate(edges0.select(col("src").cast("long").as("src"),
+                            col("dst").cast("long").as("dst")).distinct(),
+              gateEdges, ck) { (es: Array[(Long, Long)]) =>
       // Driver mirror (already long-cast + distinct): per double-sweep,
       // a(v) = Σ h(u) over in-edges whose u currently holds a hub score,
       // then h(u) = Σ a(v) over out-edges into the fresh authority set —
       // inner-join semantics (nodes out of the frontier drop), final
       // full-outer with 0 fill.
-      val es = e.as[(Long, Long)].collect()
       var hub: Map[Long, Long] = es.iterator.map(_._1).toArray.distinct
         .iterator.map(_ -> 1L).toMap
       var auth: Map[Long, Long] = es.iterator.map(_._2).toArray.distinct
@@ -987,26 +961,27 @@ object Graph {
         hub = hNew.toMap
       }
       val ns = (hub.keysIterator ++ auth.keysIterator).toArray.distinct
-      return ck.seal(ns.toSeq.map(n =>
+      ck.seal(ns.toSeq.map(n =>
           (n, hub.getOrElse(n, 0L), auth.getOrElse(n, 0L)))
         .toDF("node", "hub", "auth"))
+    } { e =>
+      var hub = ck.track(e.select(col("src").as("node")).distinct()
+        .withColumn("h", lit(1L)).localCheckpoint(false))
+      var auth = e.select(col("dst").as("node")).distinct()
+        .withColumn("a", lit(0L))
+      for (_ <- 1 to iters) {
+        auth = ck.track(e.join(hub.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
+          .localCheckpoint(false))
+        hub = ck.track(e.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
+          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
+          .localCheckpoint(false))
+      }
+      ck.seal(hub.join(auth, Seq("node"), "full_outer")
+        .select(col("node"),
+                coalesce(col("h"), lit(0L)).as("hub"),
+                coalesce(col("a"), lit(0L)).as("auth")))
     }
-    var hub = ck.track(e.select(col("src").as("node")).distinct()
-      .withColumn("h", lit(1L)).localCheckpoint(false))
-    var auth = e.select(col("dst").as("node")).distinct()
-      .withColumn("a", lit(0L))
-    for (_ <- 1 to iters) {
-      auth = ck.track(e.join(hub.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-        .localCheckpoint(false))
-      hub = ck.track(e.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-        .localCheckpoint(false))
-    }
-    ck.seal(hub.join(auth, Seq("node"), "full_outer")
-      .select(col("node"),
-              coalesce(col("h"), lit(0L)).as("hub"),
-              coalesce(col("a"), lit(0L)).as("auth")))
   }
 
   /** Per-source bounded BFS: like [[bfsHops]] but the frontier carries its
@@ -1024,13 +999,11 @@ object Graph {
     val ck = new Seal.Tracker
     val e = edges0.select(col("src").cast("long").as("src"),
                           col("dst").cast("long").as("dst"))
-    val sym = ck.track(e.union(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(false))
-    if (sym.count() <= gateEdges) {
+    LocalGate(e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct(), gateEdges, ck) { (arcs: Array[(Long, Long)]) =>
       // Driver per-root BFS (already long-cast): one synchronized sweep
       // over all roots, roots at hop 0 even when edge-less.
-      val adj = sym.as[(Long, Long)].collect().groupBy(_._1)
+      val adj = arcs.groupBy(_._1)
         .map { case (u, a) => u -> a.map(_._2) }
       val vis = scala.collection.mutable.LinkedHashMap.empty[(Long, Long), Int]
       val roots = seeds.select(col(seeds.columns.head).cast("long"))
@@ -1045,27 +1018,28 @@ object Graph {
         frontier.foreach(p => vis.update(p, h))
         h += 1
       }
-      return ck.seal(vis.toSeq.map { case ((r, n), hp) => (r, n, hp) }
+      ck.seal(vis.toSeq.map { case ((r, n), hp) => (r, n, hp) }
         .toDF("root", "node", "hop"))
+    } { sym =>
+      var visited = ck.track(seeds
+        .select(col(seeds.columns.head).cast("long").as("root")).distinct()
+        .select(col("root"), col("root").as("node"))
+        .withColumn("hop", lit(0)).localCheckpoint(false))
+      var frontier = visited.select("root", "node")
+      var h = 1
+      var exhausted = false
+      while (h <= maxHops && !exhausted) {
+        val next = ck.track(frontier.join(sym, frontier("node") === sym("src"))
+          .select(frontier("root"), sym("dst").as("node")).distinct()
+          .join(visited, Seq("root", "node"), "left_anti")
+          .withColumn("hop", lit(h)).localCheckpoint(false))
+        exhausted = next.count() == 0L
+        visited = ck.track(visited.union(next).localCheckpoint(false))
+        frontier = next.select("root", "node")
+        h += 1
+      }
+      ck.seal(visited)
     }
-    var visited = ck.track(seeds
-      .select(col(seeds.columns.head).cast("long").as("root")).distinct()
-      .select(col("root"), col("root").as("node"))
-      .withColumn("hop", lit(0)).localCheckpoint(false))
-    var frontier = visited.select("root", "node")
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      val next = ck.track(frontier.join(sym, frontier("node") === sym("src"))
-        .select(frontier("root"), sym("dst").as("node")).distinct()
-        .join(visited, Seq("root", "node"), "left_anti")
-        .withColumn("hop", lit(h)).localCheckpoint(false))
-      exhausted = next.count() == 0L
-      visited = ck.track(visited.union(next).localCheckpoint(false))
-      frontier = next.select("root", "node")
-      h += 1
-    }
-    ck.seal(visited)
   }
 
   /** Strongly connected components on a DIRECTED graph by mutual
@@ -1092,14 +1066,12 @@ object Graph {
     val e = edges0.select(col("src").cast("long").as("src"),
                           col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    var r = ck.track(e.localCheckpoint(false))
-    if (r.count() <= gateEdges) {
+    LocalGate(e, gateEdges, ck) { (es: Array[(Long, Long)]) =>
       // Driver mirror (already long-cast + distinct): the same
       // `doublingRounds` rounds of R ← R ∪ R∘R (bounded path length
       // 2^rounds — NOT a full transitive closure, so a longer-path-only
       // mutual pair is equally invisible on both sides of the gate), then
       // scc_id(v) = min(v, min mutual peer).
-      val es = r.as[(Long, Long)].collect()
       var reach: Set[(Long, Long)] = es.toSet
       for (_ <- 1 to doublingRounds) {
         val bySrc = reach.groupBy(_._1)
@@ -1114,30 +1086,32 @@ object Graph {
         .map(n => n -> math.min(n, peers.getOrElse(n, n))).toMap
       val size = sccId.valuesIterator.toSeq.groupBy(identity)
         .map { case (c, xs) => c -> xs.size.toLong }
-      return ck.seal(ns.toSeq.map(n => (n, sccId(n), size(sccId(n))))
+      ck.seal(ns.toSeq.map(n => (n, sccId(n), size(sccId(n))))
         .toDF("node", "scc_id", "scc_size"))
+    } { pinned =>
+      var r = pinned
+      for (_ <- 1 to doublingRounds) {
+        val a = r.as("a"); val b = r.as("b")
+        r = ck.track(r.union(a.join(b, col("a.dst") === col("b.src"))
+              .select(col("a.src").as("src"), col("b.dst").as("dst")))
+          .distinct().localCheckpoint(false))
+      }
+      val mutual = r.as("f")
+        .join(r.as("g"), col("f.src") === col("g.dst") &&
+                         col("f.dst") === col("g.src"))
+        .select(col("f.src").as("node"), col("f.dst").as("peer"))
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      val sccId = nodes.join(mutual, Seq("node"), "left_outer")
+        .groupBy(col("node"))
+        .agg(least(min(col("peer")), first(col("node"))).as("scc_id"))
+        .select(col("node"),
+                coalesce(col("scc_id"), col("node")).as("scc_id"))
+      val sizes = sccId.groupBy(col("scc_id"))
+        .agg(count(lit(1)).as("scc_size"))
+      ck.seal(sccId.join(sizes, Seq("scc_id"))
+        .select(col("node"), col("scc_id"), col("scc_size")))
     }
-    for (_ <- 1 to doublingRounds) {
-      val a = r.as("a"); val b = r.as("b")
-      r = ck.track(r.union(a.join(b, col("a.dst") === col("b.src"))
-            .select(col("a.src").as("src"), col("b.dst").as("dst")))
-        .distinct().localCheckpoint(false))
-    }
-    val mutual = r.as("f")
-      .join(r.as("g"), col("f.src") === col("g.dst") &&
-                       col("f.dst") === col("g.src"))
-      .select(col("f.src").as("node"), col("f.dst").as("peer"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val sccId = nodes.join(mutual, Seq("node"), "left_outer")
-      .groupBy(col("node"))
-      .agg(least(min(col("peer")), first(col("node"))).as("scc_id"))
-      .select(col("node"),
-              coalesce(col("scc_id"), col("node")).as("scc_id"))
-    val sizes = sccId.groupBy(col("scc_id"))
-      .agg(count(lit(1)).as("scc_size"))
-    ck.seal(sccId.join(sizes, Seq("scc_id"))
-      .select(col("node"), col("scc_id"), col("scc_size")))
   }
 
   /** Luby's maximal independent set with DETERMINISTIC md5 priorities
@@ -1163,15 +1137,13 @@ object Graph {
     val spark = symEdges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val sym = ck.track(symEdges0.select(col("src"), col("dst"))
-      .localCheckpoint(false))
     val prio = expr("CAST(conv(substring(md5(CAST(v AS STRING)), 1, " +
                     "15), 16, 10) AS BIGINT)")
-    if (longCols(sym, "src", "dst") && sym.count() <= gateEdges) {
+    LocalGate(symEdges0.select(col("src"), col("dst")), gateEdges, ck,
+              guard = Seq("src", "dst")) { (arcs: Array[(Long, Long)]) =>
       // Driver mirror: same 60-bit md5 priority (hex prefix of the
       // decimal node string — CAST(v AS STRING) of a long IS the decimal
       // rendering), same strict-beat rule, same round budget.
-      val arcs = sym.as[(Long, Long)].collect()
       def prioOf(v: Long): Long = {
         val hex = java.security.MessageDigest.getInstance("MD5")
           .digest(v.toString.getBytes("UTF-8"))
@@ -1201,33 +1173,34 @@ object Graph {
           .collect { case (s, d) if win(d) => s }.toSet
         u = u -- win -- knocked
       }
-      return ck.seal(
+      ck.seal(
         (mis.iterator.map(v => (v, 1L)) ++ u.iterator.map(v => (v, 0L)))
           .toSeq.toDF("node", "in_mis"))
+    } { sym =>
+      // Distributed fold — the q585 inline loop verbatim.
+      var u = ck.track(sym.select(col("src").as("v")).distinct()
+        .withColumn("pr", prio).localCheckpoint(false))
+      var mis = u.filter(lit(false)).select(col("v"))
+      for (_ <- 1 to rounds) {
+        val nbmax = sym.join(u.select(col("v").as("dst"),
+                                      col("pr").as("npr")), Seq("dst"))
+          .join(u.select(col("v").as("src")), Seq("src"))
+          .groupBy(col("src").as("v"))
+          .agg(max(col("npr")).as("mx"))
+        val win = ck.track(u.join(nbmax, Seq("v"), "left")
+          .filter(col("mx").isNull || col("pr") > col("mx"))
+          .select("v").localCheckpoint(false))
+        mis = mis.unionByName(win).distinct()
+        val knocked = sym.join(win.select(col("v").as("dst")), Seq("dst"))
+          .select(col("src").as("v")).distinct()
+        u = ck.track(u.join(win, Seq("v"), "left_anti")
+          .join(knocked, Seq("v"), "left_anti")
+          .localCheckpoint(false))
+      }
+      ck.seal(mis.select(col("v").cast("long").as("node"), lit(1L).as("in_mis"))
+        .unionByName(u.select(col("v").cast("long").as("node"),
+                              lit(0L).as("in_mis"))))
     }
-    // Distributed fold — the q585 inline loop verbatim.
-    var u = ck.track(sym.select(col("src").as("v")).distinct()
-      .withColumn("pr", prio).localCheckpoint(false))
-    var mis = u.filter(lit(false)).select(col("v"))
-    for (_ <- 1 to rounds) {
-      val nbmax = sym.join(u.select(col("v").as("dst"),
-                                    col("pr").as("npr")), Seq("dst"))
-        .join(u.select(col("v").as("src")), Seq("src"))
-        .groupBy(col("src").as("v"))
-        .agg(max(col("npr")).as("mx"))
-      val win = ck.track(u.join(nbmax, Seq("v"), "left")
-        .filter(col("mx").isNull || col("pr") > col("mx"))
-        .select("v").localCheckpoint(false))
-      mis = mis.unionByName(win).distinct()
-      val knocked = sym.join(win.select(col("v").as("dst")), Seq("dst"))
-        .select(col("src").as("v")).distinct()
-      u = ck.track(u.join(win, Seq("v"), "left_anti")
-        .join(knocked, Seq("v"), "left_anti")
-        .localCheckpoint(false))
-    }
-    ck.seal(mis.select(col("v").cast("long").as("node"), lit(1L).as("in_mis"))
-      .unionByName(u.select(col("v").cast("long").as("node"),
-                            lit(0L).as("in_mis"))))
   }
 
   /** Temporal earliest-arrival closure: from every node s, the earliest
@@ -1251,10 +1224,8 @@ object Graph {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val em = ck.track(edges0.select(col("src"), col("dst"), col("m"))
-      .localCheckpoint(false))
-    if (longCols(em, "src", "dst", "m") && em.count() <= gateEdges) {
-      val es = em.as[(Long, Long, Long)].collect()
+    LocalGate(edges0.select("src", "dst", "m"), gateEdges, ck,
+              guard = Seq("src", "dst", "m")) { (es: Array[(Long, Long, Long)]) =>
       val bySrc = es.groupBy(_._1)
       val ns = (es.iterator.map(_._1) ++ es.iterator.map(_._2))
         .toArray.distinct
@@ -1275,22 +1246,23 @@ object Graph {
         }
         arr = next.toMap
       }
-      return ck.seal(arr.toSeq.map { case ((s, v), a) => (s, v, a) }
+      ck.seal(arr.toSeq.map { case ((s, v), a) => (s, v, a) }
         .toDF("s", "v", "arr"))
+    } { em =>
+      // Distributed sweeps — the q543 inline loop verbatim.
+      var arr = ck.track(em.select(col("src").as("s"))
+        .union(em.select(col("dst").as("s"))).distinct()
+        .select(col("s"), col("s").as("v"))
+        .withColumn("arr", lit(-1L)).localCheckpoint(false))
+      for (_ <- 1 to rounds) {
+        val relax = arr.join(em,
+            arr("v") === em("src") && em("m") >= arr("arr"))
+          .select(col("s"), em("dst").as("v"), em("m").as("arr"))
+        arr = ck.track(arr.union(relax).groupBy(col("s"), col("v"))
+          .agg(min(col("arr")).as("arr")).localCheckpoint(false))
+      }
+      ck.seal(arr)
     }
-    // Distributed sweeps — the q543 inline loop verbatim.
-    var arr = ck.track(em.select(col("src").as("s"))
-      .union(em.select(col("dst").as("s"))).distinct()
-      .select(col("s"), col("s").as("v"))
-      .withColumn("arr", lit(-1L)).localCheckpoint(false))
-    for (_ <- 1 to rounds) {
-      val relax = arr.join(em,
-          arr("v") === em("src") && em("m") >= arr("arr"))
-        .select(col("s"), em("dst").as("v"), em("m").as("arr"))
-      arr = ck.track(arr.union(relax).groupBy(col("s"), col("v"))
-        .agg(min(col("arr")).as("arr")).localCheckpoint(false))
-    }
-    ck.seal(arr)
   }
 
   /** Minimax (bottleneck) path closure: for every ordered connected pair
@@ -1307,20 +1279,19 @@ object Graph {
     val spark = rankedEdges.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    var r = ck.track(rankedEdges
+    LocalGate(rankedEdges
       .select(col("src").cast("long").as("src"),
               col("dst").cast("long").as("dst"),
               col("r").cast("long").as("r"))
       .filter(col("src") =!= col("dst"))
-      .groupBy(col("src"), col("dst")).agg(min(col("r")).as("r"))
-      .localCheckpoint(false))
-    if (r.count() <= gateEdges) {
+      .groupBy(col("src"), col("dst")).agg(min(col("r")).as("r")),
+      gateEdges, ck) { (es: Array[(Long, Long, Long)]) =>
       // Driver (min, max)-semiring doubling (already long-cast +
       // min-combined): `rounds` rounds of R ← min(R, R∘R with
       // max-combine), self-pairs excluded, from the previous round's
       // snapshot each time.
-      var reach: Map[(Long, Long), Long] = r.as[(Long, Long, Long)]
-        .collect().iterator.map { case (s, d, rk) => (s, d) -> rk }.toMap
+      var reach: Map[(Long, Long), Long] =
+        es.iterator.map { case (s, d, rk) => (s, d) -> rk }.toMap
       for (_ <- 1 to rounds) {
         val bySrc = reach.toSeq.groupBy(_._1._1)
         val next = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
@@ -1337,20 +1308,22 @@ object Graph {
         }
         reach = next.toMap
       }
-      return ck.seal(reach.toSeq.map { case ((s, d), rk) => (s, d, rk) }
+      ck.seal(reach.toSeq.map { case ((s, d), rk) => (s, d, rk) }
         .toDF("src", "dst", "r"))
+    } { pinned =>
+      var r = pinned
+      for (_ <- 1 to rounds) {
+        val a = r.as("a"); val b = r.as("b")
+        val comp = a.join(b, col("a.dst") === col("b.src"))
+          .select(col("a.src").as("src"), col("b.dst").as("dst"),
+                  greatest(col("a.r"), col("b.r")).as("r"))
+          .filter(col("src") =!= col("dst"))
+        r = ck.track(r.union(comp)
+          .groupBy(col("src"), col("dst")).agg(min(col("r")).as("r"))
+          .localCheckpoint(false))
+      }
+      ck.seal(r)
     }
-    for (_ <- 1 to rounds) {
-      val a = r.as("a"); val b = r.as("b")
-      val comp = a.join(b, col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"),
-                greatest(col("a.r"), col("b.r")).as("r"))
-        .filter(col("src") =!= col("dst"))
-      r = ck.track(r.union(comp)
-        .groupBy(col("src"), col("dst")).agg(min(col("r")).as("r"))
-        .localCheckpoint(false))
-    }
-    ck.seal(r)
   }
 
   /** Minimum spanning forest by the cycle property over a TOTAL edge
@@ -1418,17 +1391,16 @@ object Graph {
     * joins + two anti-joins — O(rounds) shuffles, no driver state.
     */
   def greedyMatching(edges0: DataFrame, rounds: Int,
-                     gateEdges: Long = 100000L): DataFrame = {
+                     gateEdges: Long = SmallGraphGate): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val base = ck.track(edges0
+    LocalGate(edges0
       .select(col(edges0.columns(0)).cast("long").as("x"),
               col(edges0.columns(1)).cast("long").as("y"),
-              col(edges0.columns(2)).cast("long").as("w"))
-      .localCheckpoint(false))
-    if (base.count() <= gateEdges) {
-      var e = base.as[(Long, Long, Long)].collect().toSeq
+              col(edges0.columns(2)).cast("long").as("w")),
+      gateEdges, ck) { (es: Array[(Long, Long, Long)]) =>
+      var e = es.toSeq
       val m = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       for (_ <- 1 to rounds if e.nonEmpty) {
         val best = e.flatMap { case t @ (x, y, _) => Seq(x -> t, y -> t) }
@@ -1444,7 +1416,7 @@ object Graph {
         e = e.filterNot { case (x, y, _) => matched(x) || matched(y) }
       }
       ck.seal(m.toSeq.toDF("src", "dst", "weight"))
-    } else {
+    } { base =>
       var e = base
       var m = base.filter(lit(false)) // empty, same schema
       var live = true
@@ -1491,15 +1463,14 @@ object Graph {
     * per eid; O(diameter) shuffles, state ≤ |E|·|V| rows.
     */
   def girthPerEdge(edges0: DataFrame,
-                   gateEdges: Long = 100000L): DataFrame = {
+                   gateEdges: Long = SmallGraphGate): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val base = ck.track(edges0.select(col("src").cast("long").as("src"),
-                             col("dst").cast("long").as("dst"))
-      .distinct().localCheckpoint(false))
-    if (base.count() <= gateEdges) {
-      val edges = base.as[(Long, Long)].collect().toSeq
+    LocalGate(edges0.select(col("src").cast("long").as("src"),
+                            col("dst").cast("long").as("dst")).distinct(),
+              gateEdges, ck) { (rows: Array[(Long, Long)]) =>
+      val edges = rows.toSeq
       val adj = (edges ++ edges.map(_.swap))
         .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
       def dist(src: Long, tgt: Long, skip: (Long, Long)): Long = {
@@ -1520,7 +1491,7 @@ object Graph {
         val alt = dist(x, y, (math.min(x, y), math.max(x, y)))
         (x, y, alt, if (alt > 0) alt + 1 else 0L)
       }.toDF("src", "dst", "alt_dist", "cycle_len"))
-    } else {
+    } { base =>
       val e = ck.track(base.withColumn("eid", monotonically_increasing_id())
         .localCheckpoint(false))
       val adj = ck.track(base.select(col("src").as("u"), col("dst").as("v"))
@@ -1570,15 +1541,14 @@ object Graph {
     * per label; O(diameter) shuffles, state ≤ |V|² rows.
     */
   def articulationPoints(edges0: DataFrame,
-                         gateEdges: Long = 100000L): DataFrame = {
+                         gateEdges: Long = SmallGraphGate): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val base = ck.track(edges0.select(col("src").cast("long").as("src"),
-                             col("dst").cast("long").as("dst"))
-      .distinct().localCheckpoint(false))
-    if (base.count() <= gateEdges) {
-      val edges = base.as[(Long, Long)].collect().toSeq
+    LocalGate(edges0.select(col("src").cast("long").as("src"),
+                            col("dst").cast("long").as("dst")).distinct(),
+              gateEdges, ck) { (rows: Array[(Long, Long)]) =>
+      val edges = rows.toSeq
       val adjAll = (edges ++ edges.map(_.swap))
         .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
       def reach(src: Long, rm: Long): Set[Long] = {
@@ -1595,7 +1565,7 @@ object Graph {
         val r = reach(nbs.min, v)
         (v, nbs.size.toLong, if (nbs.exists(n => !r(n))) 1L else 0L)
       }.toDF("node", "degree", "is_articulation"))
-    } else {
+    } { base =>
       val adj = ck.track(base.select(col("src").as("u"), col("dst").as("v"))
         .unionByName(base.select(col("dst").as("u"), col("src").as("v")))
         .distinct().localCheckpoint(false))
@@ -1673,15 +1643,12 @@ object Graph {
     // all-pivots caller on a 100k-edge graph would otherwise build |V|²
     // driver rows). Arithmetic is the identical integer BFS: first-arrival
     // level = d, σ summed over same-level parents with arc MULTIPLICITY
-    // preserved (the join sums one term per duplicate arc).
-    if (longCols(sym, "src", "dst") &&
-        seeds.schema("root").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        sym.count() <= gateEdges) {
-      val arcs = sym.as[(Long, Long)].collect()
+    // preserved (the join sums one term per duplicate arc). `sym` comes
+    // from [[symArcs]] and `seeds` from its nodes, so both are long-cast.
+    LocalGate.orElse(sym, gateEdges, ck) { (arcs: Array[(Long, Long)]) =>
       val roots = seeds.as[Long].collect()
       val nNodes = arcs.iterator.map(_._1).toSet.size.toLong
-      if (roots.length.toLong * math.max(nNodes, 1L) <= gateEdges) {
+      Option.when(roots.length.toLong * math.max(nNodes, 1L) <= gateEdges) {
         val adj = scala.collection.mutable.HashMap
           .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
         arcs.foreach { case (s, d) =>
@@ -1710,32 +1677,33 @@ object Graph {
             frontier = arr.toSeq
           }
         }
-        return ck.track(out.toSeq.toDF("root", "node", "d", "sigma")
+        ck.track(out.toSeq.toDF("root", "node", "d", "sigma")
           .localCheckpoint(false))
       }
+    } { sym =>
+      var visited = ck.track(seeds
+        .select(col("root"), col("root").as("node"), lit(0L).as("d"),
+                lit(1L).as("sigma")).localCheckpoint(false))
+      var frontier = visited.select(col("root"), col("node"), col("sigma"))
+      var h = 0L
+      var live = frontier.count() > 0L
+      while (live) {
+        h += 1
+        val arrivals = ck.track(frontier.join(sym, col("node") === col("src"))
+          .groupBy(col("root"), col("dst").as("_n"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .withColumnRenamed("_n", "node")
+          .join(visited.select(col("root"), col("node")),
+                Seq("root", "node"), "left_anti")
+          .withColumn("d", lit(h))
+          .select(col("root"), col("node"), col("d"), col("sigma"))
+          .localCheckpoint(false))
+        visited = ck.track(visited.unionByName(arrivals).localCheckpoint(false))
+        frontier = arrivals.select(col("root"), col("node"), col("sigma"))
+        live = arrivals.count() > 0L
+      }
+      visited
     }
-    var visited = ck.track(seeds
-      .select(col("root"), col("root").as("node"), lit(0L).as("d"),
-              lit(1L).as("sigma")).localCheckpoint(false))
-    var frontier = visited.select(col("root"), col("node"), col("sigma"))
-    var h = 0L
-    var live = frontier.count() > 0L
-    while (live) {
-      h += 1
-      val arrivals = ck.track(frontier.join(sym, col("node") === col("src"))
-        .groupBy(col("root"), col("dst").as("_n"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumnRenamed("_n", "node")
-        .join(visited.select(col("root"), col("node")),
-              Seq("root", "node"), "left_anti")
-        .withColumn("d", lit(h))
-        .select(col("root"), col("node"), col("d"), col("sigma"))
-        .localCheckpoint(false))
-      visited = ck.track(visited.unionByName(arrivals).localCheckpoint(false))
-      frontier = arrivals.select(col("root"), col("node"), col("sigma"))
-      live = arrivals.count() > 0L
-    }
-    visited
   }
 
   /** Inject a LOUD runtime guard on the σ-BFS distance column: the DuckDB
@@ -1904,16 +1872,14 @@ object Graph {
     * an unexpectedly dense graph slows down instead of failing.
     */
   def percolationSweep(edges0: DataFrame, thresholds: Seq[Long],
-                       gateEdges: Long = 100000L): DataFrame = {
+                       gateEdges: Long = SmallGraphGate): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
     val ck = new Seal.Tracker
-    val base = ck.track(edges0.select(col("src").cast("long").as("src"),
-                             col("dst").cast("long").as("dst"),
-                             col("n").cast("long").as("n"))
-      .localCheckpoint(false))
-    if (base.count() <= gateEdges) {
-      val all = base.as[(Long, Long, Long)].collect().toSeq
+    LocalGate(edges0.select(col("src").cast("long").as("src"),
+                            col("dst").cast("long").as("dst"),
+                            col("n").cast("long").as("n")),
+              gateEdges, ck) { (all: Array[(Long, Long, Long)]) =>
       val rows = thresholds.flatMap { th =>
         val es = all.filter(_._3 >= th)
         val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
@@ -1941,7 +1907,7 @@ object Graph {
       }
       ck.seal(rows.toDF("threshold", "n_nodes", "n_edges", "n_components",
                 "giant_size"))
-    } else {
+    } { base =>
       val rows = thresholds.flatMap { th =>
         val es = ck.track(base.filter(col("n") >= th).select("src", "dst")
           .localCheckpoint(false))

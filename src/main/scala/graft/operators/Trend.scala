@@ -96,19 +96,20 @@ object Trend {
     * distributed two-level exact order statistic runs VERBATIM (the
     * moved q813 code): bucket prefix over ~thousands of coarse slope
     * buckets + per-bucket cumulative windows, both parallel-safe.
-    * Identity across the gate is spec-pinned (TheilSenGateSpec).
+    * Identity across the gate is spec-pinned (TheilSenGateSpec). Both
+    * paths read `i` and `y` cast to BIGINT.
     */
   def pairSlopeMedian(idx: DataFrame,
                       gateRows: Long = PairSlopeDriverGateRows): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = idx.sparkSession
-    val n = idx.count()
-    if (n <= gateRows) {
-      val rows = idx.select(col("i").cast("long"), col("y").cast("long"))
-        .collect()
+    import spark.implicits._
+    LocalGate(idx.select(col("i").cast("long").as("i"),
+                         col("y").cast("long").as("y")),
+              gateRows, new Seal.Tracker) { (rows: Array[(Long, Long)]) =>
       val ys = {
         val a = new Array[Long](rows.length)
-        rows.foreach(r => a(r.getLong(0).toInt - 1) = r.getLong(1))
+        rows.foreach { case (i, y) => a(i.toInt - 1) = y }
         a
       }
       val m = rows.length
@@ -143,7 +144,7 @@ object Trend {
             org.apache.spark.sql.Row(slopes.length.toLong, slopes(k - 1)))
         }
       spark.createDataFrame(out, schema)
-    } else {
+    } { idx =>
       // distributed exact order statistic — the pre-extraction q813 code,
       // verbatim: |days|² slopes via the BNL pair join, then global cum =
       // DIMENSION-sized bucket prefix + per-bucket parallel cumulative

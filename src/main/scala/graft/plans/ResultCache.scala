@@ -19,6 +19,22 @@ import org.apache.spark.sql.DataFrame
   */
 object ResultCache {
 
+  /** A fresh per-JVM cache directory under java.io.tmpdir, named
+    * `<prefix><random>` and deleted recursively on JVM exit — entries can
+    * never go stale across runs, so every invocation computes from its
+    * inputs. Call once per cache (from a `lazy val`).
+    */
+  def jvmDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(d.toFile)
+    }))
+    d.toString
+  }
+
   def fingerprint(df: DataFrame): String = {
     val canonical = df.queryExecution.optimizedPlan.canonicalized.toString
     // Content token: the plan's leaf input files with length + mtime.
