@@ -65,7 +65,6 @@ final case class ScdConfig(
     excludeColumnsFromChangeCheck: Seq[String] = Nil,
     incrementalPredicates: Seq[String] = Nil,
     defaultValidTo: String = "2999-12-31 23:59:59",
-    defaultValidFrom: String = "1900-01-01 00:00:00",
     updateAllPreviousRecords: Boolean = true,
     collapseRedundantVersions: Boolean = true,
     onSchemaChange: String = "fail"

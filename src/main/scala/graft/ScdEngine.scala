@@ -197,7 +197,7 @@ object ScdEngine {
             incrementalBucketed(spark, fs, batch, targetPath, cfg, n, contract)
           case None =>
             val target = spark.read.parquet(targetPath)
-            val snapshot = mergeWithPredicates(target, batch, cfg)
+            val snapshot = incremental(target, batch, cfg)
             contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
             atomicSwap(spark, fs, snapshot, targetPath, numBuckets, contract)
         }
@@ -239,12 +239,9 @@ object ScdEngine {
     if (cfg.scdType == 2) Scd2.initialLoad(delta, cfg)
     else Scd01.initialLoad(delta, cfg)
 
-  /** Type-dispatched incremental merge returning the new snapshot. */
-  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
-    if (cfg.scdType == 2) Scd2.incremental(target, delta, cfg)
-    else Scd01.incremental(target, delta, cfg)
-
-  /** Incremental merge honoring `incremental_predicates` (P8): target rows
+  /** Type-dispatched incremental merge returning the new snapshot: the
+    * batch is first reconciled with the target per `on_schema_change`
+    * ([[alignSchemas]]), and with `incremental_predicates` (P8) target rows
     * failing the predicates bypass the merge entirely (smaller semi-join and
     * merge inputs — the reference's MERGE-ON pruning conjuncts,
     * `get_incremental_scd2_sql.sql:247-255`) and pass through unchanged.
@@ -252,20 +249,15 @@ object ScdEngine {
     * predicated away re-enters as brand-new — the pruning trade-off is the
     * caller's to make.
     */
-  def incrementalWithPredicates(target: DataFrame,
-                                batch: DataFrame,
-                                cfg: ScdConfig): DataFrame =
-    mergeWithPredicates(target, batch, cfg)
-
-  private def mergeWithPredicates(target: DataFrame,
-                                  batch: DataFrame,
-                                  cfg: ScdConfig): DataFrame = {
-    val (t, b) = alignSchemas(target, batch, cfg)
-    if (cfg.incrementalPredicates.isEmpty) incremental(t, b, cfg)
+  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
+    val (t, b) = alignSchemas(target, delta, cfg)
+    def mergeInto(slice: DataFrame) =
+      if (cfg.scdType == 2) Scd2.incremental(slice, b, cfg)
+      else Scd01.incremental(slice, b, cfg)
+    if (cfg.incrementalPredicates.isEmpty) mergeInto(t)
     else {
       val p = cfg.incrementalPredicates.map(expr).reduce(_ && _)
-      val merged = incremental(t.filter(p), b, cfg)
-      merged.unionByName(t.filter(!coalesce(p, lit(false))))
+      mergeInto(t.filter(p)).unionByName(t.filter(!coalesce(p, lit(false))))
     }
   }
 
@@ -391,7 +383,7 @@ object ScdEngine {
       // stale manifest missing an on-disk bucket would exclude its history
       // from the snapshot and the swap would then delete it (silent loss).
       val target = readBuckets(listBucketDirs(fs, targetPath)).drop(BucketCol)
-      val snapshot = mergeWithPredicates(target, batch, cfg)
+      val snapshot = incremental(target, batch, cfg)
       contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
       atomicSwap(spark, fs, withBucket(snapshot, cfg, Some(n)), targetPath,
                  Some(n), contract)
@@ -413,7 +405,7 @@ object ScdEngine {
     // overwrite it — silent loss). |touched| probes, delta-bounded.
     val target = readBuckets(existingBuckets(fs, targetPath, touched.toSeq))
       .drop(BucketCol)
-    val snapshot = mergeWithPredicates(target, batch, cfg)
+    val snapshot = incremental(target, batch, cfg)
     contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
     val bucketed = withBucket(snapshot, cfg, Some(n))
 

@@ -243,8 +243,7 @@ object SparkEntry {
       val all = ev(s, dir)
       val target = Scd2.initialLoad(all.filter(col("event_id") % 2 === 0), evCfg)
         .localCheckpoint()
-      ScdEngine.incrementalWithPredicates(
-        target, all.filter(col("event_id") % 2 === 1), cfg)
+      ScdEngine.incremental(target, all.filter(col("event_id") % 2 === 1), cfg)
     }),
     // --- SCD1 / SCD0 (D2/D3, J5) -----------------------------------------
     "q07_scd1_initial" -> ((s, dir) =>

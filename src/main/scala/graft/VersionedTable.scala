@@ -48,9 +48,12 @@ object VersionedTable {
   private def manifestVersions(f: FileSystem, root: String): Option[Seq[Long]] =
     SmallFile.readIfPresent(f, new Path(s"$root/$Manifest")).flatMap { txt =>
       val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      if (lines.nonEmpty && lines.forall(l => l.nonEmpty && l.forall(_.isDigit)))
-        Some(lines.map(_.toLong))
-      else None // half-written/foreign content: fall back to listing
+      // toLongOption, not toLong: an all-digit line past Long range is
+      // foreign content too, not a NumberFormatException
+      val parsed = lines.map(l =>
+        if (l.forall(_.isDigit)) l.toLongOption else None)
+      if (parsed.nonEmpty && parsed.forall(_.isDefined)) Some(parsed.flatten)
+      else None // half-written/foreign/oversized content: fall back to listing
     }
 
   /** Publish the manifest atomically: write a temp file, then rename into
@@ -734,12 +737,20 @@ object VersionedTable {
   def runScd(spark: SparkSession,
              delta: DataFrame,
              root: String,
-             cfg: ScdConfig): Long = {
+             cfg: ScdConfig): Long =
+    runScd(spark, delta, root, cfg, batchToken = None)
+
+  /** [[runScd]] publishing with a streaming batch token (see [[publish]]). */
+  private[graft] def runScd(spark: SparkSession,
+                            delta: DataFrame,
+                            root: String,
+                            cfg: ScdConfig,
+                            batchToken: Option[String]): Long = {
     val next = latestVersion(spark, root) match {
       case None    => ScdEngine.initial(delta, cfg)
       case Some(v) => ScdEngine.incremental(readVersion(spark, root, v), delta, cfg)
     }
-    publish(spark, next, root)
+    publish(spark, next, root, batchToken)
   }
 
   // -------------------------------------------------------------------
@@ -803,7 +814,7 @@ object VersionedTable {
     val dir = new Path(s"$base/$TxnDir")
     if (!f.exists(dir)) None
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.forall(_.isDigit)).map(_.toLong).sorted.lastOption
+      .filter(_.forall(_.isDigit)).flatMap(_.toLongOption).sorted.lastOption
   }
 
   private def txnPins(f: FileSystem, base: String,

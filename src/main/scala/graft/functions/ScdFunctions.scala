@@ -36,11 +36,6 @@ object ScdFunctions {
   def versionWindow(keys: Seq[String], updatedAt: String): WindowSpec =
     Window.partitionBy(keys.map(col): _*).orderBy(col(updatedAt))
 
-  /** `_is_current`: latest version per key (`get_is_current_sql.sql:19-21`). */
-  def isCurrent(keys: Seq[String], updatedAt: String): Column =
-    row_number().over(
-      Window.partitionBy(keys.map(col): _*).orderBy(col(updatedAt).desc)) === 1
-
   /** `_valid_from` (`get_valid_from_sql.sql`): a key's FIRST version starts at
     * `coalesce(deleted_at, created_at, updated_at)` (born-deleted records start
     * at their deletion time; otherwise at creation time when configured); every
@@ -123,9 +118,6 @@ object ScdFunctions {
       .find(_.equalsIgnoreCase(name))
       .getOrElse(throw new IllegalArgumentException(
         s"column '$name' not found in [${columns.mkString(", ")}]"))
-
-  def containsCi(columns: Seq[String], name: String): Boolean =
-    columns.exists(_.equalsIgnoreCase(name))
 
   /** Business columns = all columns minus the audit columns, case-insensitive
     * (`get_incremental_scd2_sql.sql:67-72`).

@@ -36,9 +36,13 @@ object Scd2 {
   val SourceCol = "_source"
   val PriorityCol = "_priority"
   val OpCol = "_scd2_op"
+  val KeepCol = "_keep"
 
   /** Initial (full-refresh) load: delta batch -> complete SCD2 history.
-    * Mirrors `get_initial_load_scd2_sql.sql:52-96`.
+    * Mirrors `get_initial_load_scd2_sql.sql:52-96`: the [[timeline]] of the
+    * batch alone. With no persisted versions there is nothing to delete, and
+    * no `loaded_at` run winner either — the reference's initial load keeps
+    * every first-or-changed version whatever its load time.
     */
   def initialLoad(delta: DataFrame, cfg: ScdConfig): DataFrame = {
     cfg.validate()
@@ -46,37 +50,8 @@ object Scd2 {
     cfg.validateSchema(cols)
     val keys = cfg.uniqueKey.map(resolveCi(cols, _))
     val updatedAt = resolveCi(cols, cfg.updatedAtCol)
-    val check = cfg.checkColumns(cols)
-
-    val source = delta
-      .withColumn(HashCol, surrogateKeyOf(check))
-
-    // D1: one row per (key, updated_at). The reference's `order by 1` picks an
-    // arbitrary winner (`get_initial_load_scd2_sql.sql:60-67`); we order by the
-    // content hash for determinism (SURVEY.md §7.4.2, deliberate divergence).
-    //
-    // Partitioned by the BUSINESS key (not the version-key hash) with a lag
-    // filter: same kept set, but this window shares one exchange with every
-    // downstream window (lag/run-id/audit) instead of adding a second shuffle
-    // on _scd2_key — at scale the whole initial load is a single exchange.
-    // Within a business-key partition the version key reduces to updated_at,
-    // so the lag compares it directly (null-safely, via the same ''-coalesced
-    // string the md5 surrogate would hash) instead of computing a per-row md5.
-    val uStr = coalesce(col(updatedAt).cast("string"), lit(""))
-    val dedupW = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(updatedAt), col(HashCol))
-    val deduped = source
-      .withColumn("_prev_u", lag(uStr, 1).over(dedupW))
-      .filter(col("_prev_u").isNull || col("_prev_u") =!= uStr)
-      .drop("_prev_u")
-
-    // W1 + P3: keep first-or-changed versions only.
-    val w = versionWindow(keys, updatedAt)
-    val changesOnly = deduped
-      .withColumn(PrevHashCol, lag(col(HashCol), 1).over(w))
-      .filter(col(PrevHashCol).isNull || col(HashCol) =!= col(PrevHashCol))
-
-    withAuditColumns(changesOnly, cfg, keys, updatedAt)
+    val source = tagged(delta, "new", cfg.checkColumns(cols))
+    timeline(source, cfg, keys, updatedAt, loadedAt = None)
       .select(cols.map(col) ++ cfg.auditColumns.map(col): _*)
   }
 
@@ -84,6 +59,13 @@ object Scd2 {
     * with `_scd2_op` ('upsert'/'delete'); the version identity stays the raw
     * (unique_key, updated_at) columns (see note on the key hashes above).
     * Mirrors the `using (...)` subquery of `get_incremental_scd2_sql.sql:76-236`.
+    *
+    * The batch rows plus the persisted versions of the keys it touches run
+    * through one [[timeline]] pass: rows it keeps are upserts carrying
+    * recomputed audit columns, and persisted rows it does not keep are the
+    * redundant versions, deletes with NULL audit columns. One lineage with
+    * one consumer, so building the relation runs no Spark job and its plan
+    * holds no materialized leaf.
     *
     * Exposed separately so callers can inspect the planned actions; `incremental`
     * applies it to the target snapshot.
@@ -100,15 +82,9 @@ object Scd2 {
     val check = cfg.checkColumns(destCols)
     val targetCols = target.columns.toSeq
     val validTo = resolveCi(targetCols, cfg.validToCol)
-    val hasLoadedAt = containsCi(destCols, cfg.loadedAtCol)
-    val collapse = cfg.effectiveCollapse
 
     // new_records (:79-89)
-    val newRecords = delta
-      .select(destCols.map(col): _*)
-      .withColumn(SourceCol, lit("new"))
-      .withColumn(PriorityCol, lit(17))
-      .withColumn(HashCol, surrogateKeyOf(check))
+    val newRecords = tagged(delta.select(destCols.map(col): _*), "new", check)
 
     // previous_record (:93-118): pull from the target ONLY prior versions of
     // keys present in the batch — the affected-key pruning that keeps
@@ -125,115 +101,97 @@ object Scd2 {
     val semiCond =
       if (cfg.updateAllPreviousRecords) keysMatch
       else keysMatch && col(s"_n_$updatedAt") <= col(validTo)
-    // When collapsing, previousRecord feeds BOTH the canonical timeline and
-    // the redundant-version anti-join; materialize the (batch-affected-sized)
-    // slice once instead of re-running the semi-join + content hashing.
-    val previousRecord0 = target
-      .join(probe, semiCond, "left_semi")
-      .select(destCols.map(c => col(resolveCi(targetCols, c)).as(c)): _*)
-      .withColumn(SourceCol, lit("previous"))
-      .withColumn(PriorityCol, lit(0))
-      .withColumn(HashCol, surrogateKeyOf(check))
-    val previousRecord =
-      if (collapse) previousRecord0.localCheckpoint(false) else previousRecord0
+    val previousRecord = tagged(
+      target.join(probe, semiCond, "left_semi")
+        .select(destCols.map(c => col(resolveCi(targetCols, c)).as(c)): _*),
+      "previous", check)
 
-    // all_records (:123-145) ∪ dedup per version key (:149-156). The reference
-    // `order by 1` is arbitrary; its stated intent (':149-150' comment + the
-    // _priority tags) is previous-wins, so order by _priority (0 = previous)
-    // with the content hash as a deterministic tie-break.
-    val allRecords = newRecords.unionByName(previousRecord)
-    // Same single-exchange dedup shape as the initial load: business-key
-    // window, previous-wins via the _priority sort key, lag filter on the
-    // ''-coalesced updated_at string (within a business-key partition the
-    // version identity reduces to updated_at).
+    // all_records (:123-145) through scd2_versions + redundant_versions
+    // (:149-229)
+    timeline(newRecords.unionByName(previousRecord), cfg, keys, updatedAt,
+             destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol)))
+      .select(destCols.map(col) ++
+                cfg.auditColumns.map(c => when(col(KeepCol), col(c)).as(c)) :+
+                when(col(KeepCol), lit("upsert")).otherwise(lit("delete"))
+                  .as(OpCol): _*)
+  }
+
+  /** `df` with the source tag ('new' or 'previous'), the reference's dedup
+    * priority (0 = previous wins) and the change-detection content hash the
+    * timeline reads.
+    */
+  private def tagged(df: DataFrame, source: String, check: Seq[String]): DataFrame =
+    df.withColumn(SourceCol, lit(source))
+      .withColumn(PriorityCol, lit(if (source == "previous") 0 else 17))
+      .withColumn(HashCol, surrogateKeyOf(check))
+
+  /** The SCD2 timeline over tagged rows ([[tagged]]): one flag-and-window
+    * pass, every window partitioned by the business key so the whole pass
+    * shares one exchange.
+    *
+    *   1. one row per version (keys, updated_at), previous rows winning;
+    *   2. the lag of the content hash;
+    *   3. `_keep`: the row belongs to the canonical timeline;
+    *   4. kept rows, plus persisted rows that are not kept (the redundant
+    *      versions a merge deletes);
+    *   5. audit columns over the kept rows, partitioned by (keys, `_keep`);
+    *      on the other rows they are meaningless and [[mergeSource]] NULLs
+    *      them.
+    *
+    * `loadedAt` names the load-watermark column that picks each content
+    * run's winner when collapsing; without it the run opener wins.
+    */
+  private def timeline(all: DataFrame,
+                       cfg: ScdConfig,
+                       keys: Seq[String],
+                       updatedAt: String,
+                       loadedAt: Option[String]): DataFrame = {
+    val byKey = Window.partitionBy(keys.map(col): _*)
+    // D1 / dedup per version key (:149-156). The reference `order by 1` is
+    // arbitrary; its stated intent (':149-150' comment + the _priority tags)
+    // is previous-wins, so order by _priority (0 = previous) with the
+    // content hash as a deterministic tie-break (SURVEY.md §7.4.2). Within a
+    // business-key partition the version key reduces to updated_at, so the
+    // lag compares it directly (null-safely, via the same ''-coalesced
+    // string the md5 surrogate would hash).
     val uStr = coalesce(col(updatedAt).cast("string"), lit(""))
-    val dedupW = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(updatedAt), col(PriorityCol), col(HashCol))
-    val deduped = allRecords
-      .withColumn("_prev_u", lag(uStr, 1).over(dedupW))
+    val deduped = all
+      .withColumn("_prev_u", lag(uStr, 1).over(
+        byKey.orderBy(col(updatedAt), col(PriorityCol), col(HashCol))))
       .filter(col("_prev_u").isNull || col("_prev_u") =!= uStr)
       .drop("_prev_u")
 
-    // compare_versions (:160-166): lag hash + conditional_change_event run id.
+    // compare_versions (:160-166)
     val w = versionWindow(keys, updatedAt)
-    val compared = withRunId(
-      deduped.withColumn(PrevHashCol, lag(col(HashCol), 1).over(w)),
-      HashCol, keys, updatedAt, RunIdCol)
+    val compared = deduped.withColumn(PrevHashCol, lag(col(HashCol), 1).over(w))
+    val changed = col(PrevHashCol).isNull || col(HashCol) =!= col(PrevHashCol)
+    val isPrevious = col(SourceCol) === "previous"
 
-    // changes_only (:178-197): canonical timeline. Collapsing keeps one row per
-    // content run, earliest-loaded (then earliest-updated) wins, so a later
-    // load carrying identical content never displaces the persisted version.
-    // Non-collapse keeps run openers plus every already-persisted row.
-    val changesOnly =
-      if (collapse && !hasLoadedAt) {
-        // No load watermark: the run winner is simply the run's earliest
-        // updated_at row. Runs are contiguous in updated_at order, so the
-        // run-opener test is a lag on the SAME (keys, updated_at) window the
-        // hash/run-id passes already sorted — no extra sort, no shuffle.
-        compared
-          .withColumn("_prev_run", lag(col(RunIdCol), 1).over(w))
-          .filter(col("_prev_run").isNull || col("_prev_run") =!= col(RunIdCol))
-          .drop("_prev_run")
-      } else if (collapse) {
+    // changes_only (:178-197). Non-collapse keeps run openers plus every
+    // already-persisted row. Collapsing keeps one row per content run: the
+    // run opener (a run id steps up exactly where the hash changes), or with
+    // a load watermark the earliest-loaded (then earliest-updated) row, so a
+    // later load carrying identical content never displaces the persisted
+    // version.
+    val flagged = (cfg.effectiveCollapse, loadedAt) match {
+      case (false, _) => compared.withColumn(KeepCol, changed || isPrevious)
+      case (true, None) => compared.withColumn(KeepCol, changed)
+      case (true, Some(l)) =>
         // _run_id is nondecreasing along the timeline, so sorting the key
         // partition by (run, loaded_at, updated_at) keeps runs contiguous and
-        // puts each run's earliest-loaded row first — the lag filter keeps
-        // exactly one row per run without a (keys, run)-partitioned shuffle.
-        val order = Seq(col(RunIdCol).asc,
-                        col(resolveCi(destCols, cfg.loadedAtCol)).asc,
-                        col(updatedAt).asc)
-        compared
-          .withColumn("_prev_run",
-                      lag(col(RunIdCol), 1).over(
-                        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
-          .filter(col("_prev_run").isNull || col("_prev_run") =!= col(RunIdCol))
-          .drop("_prev_run")
-      } else {
-        compared.filter(
-          col(PrevHashCol).isNull ||
-            col(HashCol) =!= col(PrevHashCol) ||
-            col(SourceCol) === "previous")
-      }
-
-    // scd2_versions (:201-211): recompute audit columns over the canonical
-    // timeline; everything here is an upsert.
-    //
-    // When collapsing, the canonical timeline feeds BOTH the upsert branch
-    // and the redundant-version anti-join; Spark has no DAG-level subplan
-    // reuse, so without materialization the whole union+window pipeline runs
-    // twice. Materialize it once (lazy local checkpoint) — it is batch-sized
-    // (new rows + affected history), the same move Delta's MERGE makes when
-    // it materializes the source relation.
-    val canonical =
-      if (collapse) changesOnly.localCheckpoint(false) else changesOnly
-    val versions = withAuditColumns(canonical, cfg, keys, updatedAt)
-      .withColumn(OpCol, lit("upsert"))
-      .select((destCols ++ cfg.auditColumns :+ OpCol).map(col): _*)
-
-    if (!collapse) versions
-    else {
-      // redundant_versions (:218-229): existing versions no longer canonical
-      // are deleted. Null-safe anti-join on the version identity — NULL keys
-      // must match themselves here too, or their stale versions would never
-      // be collapsed out.
-      val verIdent = keys :+ updatedAt
-      val canonIdent = canonical
-        .select(verIdent.map(c => col(c).as(s"_c_$c")): _*)
-      val identMatch = verIdent.map(k => col(k) <=> col(s"_c_$k")).reduce(_ && _)
-      val redundant = previousRecord
-        .join(canonIdent, identMatch, "left_anti")
-        .withColumn(cfg.isCurrentCol, lit(null).cast("boolean"))
-        .withColumn(cfg.validFromCol, lit(null).cast("timestamp"))
-        .withColumn(cfg.validToCol, lit(null).cast("timestamp"))
-        .withColumn(cfg.changeTypeCol, lit(null).cast("string"))
-        .withColumn(OpCol, lit("delete"))
-        .select((destCols ++ cfg.auditColumns :+ OpCol).map(col): _*)
-      // collapse path pinned two batch-sized internals (previousRecord,
-      // canonical); seal so repeated engine runs in one session do not
-      // accumulate them (library-wide lifecycle discipline, r14)
-      Seal(versions.unionByName(redundant),
-           ckpts = Seq(previousRecord, canonical))
+        // puts each run's earliest-loaded row first — the lag flags exactly
+        // one row per run without a (keys, run)-partitioned shuffle.
+        val prevRun = lag(col(RunIdCol), 1).over(
+          byKey.orderBy(col(RunIdCol).asc, col(l).asc, col(updatedAt).asc))
+        withRunId(compared, HashCol, keys, updatedAt, RunIdCol)
+          .withColumn(KeepCol, prevRun.isNull || prevRun =!= col(RunIdCol))
     }
+
+    // scd2_versions (:201-211) ∪ redundant_versions (:218-229): partitioning
+    // the audit windows by (keys, _keep) computes them over the kept rows
+    // alone, and the business-key exchange already satisfies it.
+    withAuditColumns(flagged.filter(col(KeepCol) || isPrevious),
+                     cfg, keys :+ KeepCol, updatedAt)
   }
 
   /** Incremental update: apply the merge source to the existing target and
@@ -286,13 +244,13 @@ object Scd2 {
     kept.select(out: _*)
   }
 
-  /** The four audit columns over an already-canonical timeline (W3-W6).
+  /** The four audit columns over a canonical timeline (W3-W6).
     *
-    * The timeline is unique per (keys, updated_at) here (both call sites
-    * dedup first), so `_is_current` = "no later version" = `lead(updated_at)
-    * IS NULL` — the same value `row_number() DESC = 1` produces, but it
-    * shares the single ascending-order window with lag/lead/rank instead of
-    * forcing a second (descending) sort of every key partition.
+    * The timeline is unique per (keys, updated_at) here (it dedups first),
+    * so `_is_current` = "no later version" = `lead(updated_at) IS
+    * NULL` — the same value `row_number() DESC = 1` produces, but it shares
+    * the single ascending-order window with lag/lead/rank instead of forcing
+    * a second (descending) sort of every key partition.
     */
   private def withAuditColumns(df: DataFrame,
                                cfg: ScdConfig,

@@ -101,12 +101,7 @@ object ScdStream {
     if (graft.VersionedTable.latestAppliedBatchToken(spark, root)
           .contains(token)) false
     else {
-      val next = graft.VersionedTable.latestVersion(spark, root) match {
-        case None    => ScdEngine.initial(batch, cfg)
-        case Some(v) => ScdEngine.incremental(
-          graft.VersionedTable.readVersion(spark, root, v), batch, cfg)
-      }
-      graft.VersionedTable.publish(spark, next, root, Some(token))
+      graft.VersionedTable.runScd(spark, batch, root, cfg, Some(token))
       true
     }
 }

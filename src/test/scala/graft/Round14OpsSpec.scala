@@ -197,5 +197,13 @@ class Round14OpsSpec extends SparkTestBase {
     VersionedTable.publish(spark, Seq((4L, "v4")).toDF("id", "x"), root)
     assert(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/_MANIFEST")), "UTF-8") === "1\n2\n3\n4")
+    // an all-digit line past Long range is foreign content too: readers
+    // fall back to the listing instead of throwing NumberFormatException
+    // (the checksum sidecar goes, or the stale checksum alone would force
+    // the fallback before the content is parsed)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/_MANIFEST"),
+      "1\n2\n99999999999999999999".getBytes("UTF-8"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/._MANIFEST.crc"))
+    assert(VersionedTable.latestVersion(spark, root) === Some(4L))
   }
 }

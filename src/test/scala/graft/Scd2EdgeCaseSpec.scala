@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd2
@@ -115,5 +119,94 @@ class Scd2EdgeCaseSpec extends SparkTestBase {
     assert(k99.length === 2)
     assert(k99.count(_.getAs[Boolean]("_is_current")) === 1)
     assertInvariantsGreen(t2, cfg)
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. Listener
+    * events arrive in the order jobs start, so a marker job run after `body`
+    * (and one before, to drain earlier tests' events) fences the count
+    * exactly.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.fence"))).getOrElse(""))
+    }
+    def fence(name: String): Int = {
+      sc.setLocalProperty("graft.fence", name)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      Iterator.continually(started.poll(60, TimeUnit.SECONDS)).takeWhile { g =>
+        assert(g != null, "job-start event not delivered")
+        g != name
+      }.size
+    }
+    sc.addSparkListener(listener)
+    try { fence("open"); val out = body; (out, fence("close")) }
+    finally sc.removeSparkListener(listener)
+  }
+
+  private def hasLogicalRdd(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.isDefined
+
+  test("building the merge source runs no Spark job and plans no materialized leaf") {
+    val session = spark
+    import session.implicits._
+    def rows(r: Seq[(Int, String, String, String)]): DataFrame =
+      r.map { case (k, v, u, l) => (k, v, ts(u), ts(l)) }
+        .toDF("k", "v", "_updated_at", "_loaded_at")
+    val history = rows(Seq(
+      (1, "a", "2025-01-01 00:00:00", "2025-01-01 00:00:00"),
+      (1, "b", "2025-01-03 00:00:00", "2025-01-03 00:00:00"),
+      (2, "a", "2025-01-01 00:00:00", "2025-01-01 00:00:00")))
+    // a back-dated copy of key 1's persisted content (collapses it) and a
+    // new key
+    val batch = rows(Seq(
+      (1, "a", "2024-12-31 00:00:00", "2025-02-01 00:00:00"),
+      (3, "c", "2025-01-02 00:00:00", "2025-02-01 00:00:00")))
+    // the load watermark orders run winners; it is not content
+    val collapse = ScdConfig(uniqueKey = Seq("k"), changeExclude = Seq("_loaded_at"))
+    // all three keep rules: loaded_at run winner, run opener, non-collapse
+    for ((cfg, keepLoadedAt) <- Seq(
+           (collapse, true), (collapse, false),
+           (collapse.copy(collapseRedundantVersions = false), false))) {
+      def shape(df: DataFrame) = if (keepLoadedAt) df else df.drop("_loaded_at")
+      val target = Scd2.initialLoad(shape(history), cfg)
+      val ((source, merged), jobs) = jobsDuring {
+        (Scd2.mergeSource(target, shape(batch), cfg),
+         Scd2.incremental(target, shape(batch), cfg))
+      }
+      val mode = s"collapse=${cfg.collapseRedundantVersions} loaded_at=$keepLoadedAt"
+      assert(jobs === 0, s"$mode: construction ran $jobs jobs")
+      assert(!hasLogicalRdd(source), s"$mode: LogicalRDD in the merge source plan")
+      assert(!hasLogicalRdd(merged), s"$mode: LogicalRDD in the merge plan")
+      assertInvariantsGreen(merged, cfg)
+      // key 1's back-dated copy of content 'a': collapsing keeps one version
+      // of the run (the 01-01 row under loaded_at, the back-dated opener
+      // otherwise); non-collapse keeps both
+      val k1 = merged.filter(col("k") === 1).orderBy("_updated_at")
+        .select(col("_updated_at")).as[java.sql.Timestamp].collect().toSeq
+      val expected =
+        if (!cfg.collapseRedundantVersions)
+          Seq("2024-12-31 00:00:00", "2025-01-01 00:00:00", "2025-01-03 00:00:00")
+        else if (keepLoadedAt) Seq("2025-01-01 00:00:00", "2025-01-03 00:00:00")
+        else Seq("2024-12-31 00:00:00", "2025-01-03 00:00:00")
+      assert(k1 === expected.map(ts), mode)
+    }
+  }
+
+  test("the timeline's windows share the input's business-key exchange") {
+    val session = spark
+    import session.implicits._
+    // the q27 shape: input hash-partitioned on the key; every window of the
+    // load, including the audit windows over (keys, _keep), reuses it
+    val in = Seq((1, "a", ts("2025-01-01 00:00:00")), (1, "b", ts("2025-01-02 00:00:00")),
+                 (2, "a", ts("2025-01-01 00:00:00")))
+      .toDF("k", "v", "_updated_at").repartition(4, col("k"))
+    val plan = Scd2.initialLoad(in, ScdConfig(uniqueKey = Seq("k")))
+      .queryExecution.executedPlan.toString
+    assert("Exchange ".r.findAllIn(plan).size === 1, plan)
   }
 }

@@ -123,4 +123,26 @@ class Scd2PropertySpec extends SparkTestBase {
       assert(dup.isEmpty, s"trial $trial: duplicate versions")
     }
   }
+
+  test("initial load == the upserts of a merge into an empty target") {
+    val rnd = new Random(2024)
+    for (trial <- 1 to 3; collapse <- Seq(true, false)) {
+      val c = cfg.copy(collapseRedundantVersions = collapse)
+      // repeated (key, slot) pairs and repeated contents: the version dedup
+      // and the change test both bite
+      val rows = for {
+        _ <- 1 to 30
+        k = 1 + rnd.nextInt(4)
+        s = rnd.nextInt(6)
+      } yield (k, s"v${rnd.nextInt(3)}", slot(s))
+      val d = df(rows)
+      val full = Scd2.initialLoad(d, c)
+      val source = Scd2.mergeSource(full.limit(0), d, c)
+      val upserts = source.filter(col(Scd2.OpCol) === "upsert").drop(Scd2.OpCol)
+      val tag = s"trial $trial collapse=$collapse"
+      assert(source.filter(col(Scd2.OpCol) =!= "upsert").count() === 0, tag)
+      assert(full.exceptAll(upserts).count() === 0, s"$tag: missing upserts")
+      assert(upserts.exceptAll(full).count() === 0, s"$tag: extra upserts")
+    }
+  }
 }

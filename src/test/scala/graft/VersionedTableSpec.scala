@@ -89,5 +89,22 @@ class VersionedTableSpec extends SparkTestBase {
     assert(VersionedTable.readVersion(spark, root, 1).count() === 2)
     assert(VersionedTable.readVersion(spark, root, 2)
       .filter($"customer_id" === 1).count() === 2)
+
+    // append_new_columns: a batch carrying a new column widens the history
+    // (NULL for earlier versions) instead of failing column resolution
+    val cfgE = cfg.copy(onSchemaChange = "append_new_columns")
+    val widened = Seq((2L, "active", ts("2025-01-03 00:00:00"), "gold"),
+                      (1L, "pending", ts("2025-01-01 18:00:00"), "silver"))
+      .toDF("customer_id", "status", "_updated_at", "tier")
+    VersionedTable.runScd(spark, widened, root, cfgE)
+    assert(VersionedTable.latestVersion(spark, root) === Some(4L))
+    val evolved = VersionedTable.read(spark, root)
+    val fullE = operators.Scd2.initialLoad(
+      batches.flatten.toDF("customer_id", "status", "_updated_at")
+        .withColumn("tier", lit(null).cast("string"))
+        .unionByName(widened), cfgE)
+      .select(evolved.columns.toSeq.map(col): _*)
+    assert(evolved.exceptAll(fullE).count() === 0)
+    assert(fullE.exceptAll(evolved).count() === 0)
   }
 }

@@ -26,6 +26,9 @@ class VersionedTxnSpec extends SparkTestBase {
     // per-table markers were fanned out, so the single-table API agrees
     assert(VersionedTable.read(spark, s"$base/cur").count() === 1L)
     assert(VersionedTable.latestVersion(spark, s"$base/hist") === Some(1L))
+    // an all-digit txn name past Long range is skipped, not a crash
+    Files.createFile(java.nio.file.Paths.get(s"$base/_txn/99999999999999999999"))
+    assert(VersionedTable.readAllLatest(spark, base)("hist").count() === 2L)
   }
 
   test("crash BEFORE the txn file: readers stay on the previous pair") {
