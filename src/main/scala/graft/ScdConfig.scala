@@ -121,11 +121,6 @@ final case class ScdConfig(
           s"Available columns: ${columns.mkString(", ")}")
   }
 
-  /** Resolve the change-detection column set against the actual schema.
-    * Mirrors `scd_plan.sql:189-222`: `include` is intersected case-insensitively
-    * with real columns, then `exclude + updated_at + unique_key + audit columns`
-    * are removed; default = all columns minus that exclusion set.
-    */
   /** Legacy config aliases (`scd_check_columns` /
     * `exclude_columns_from_change_check`) are honored when the primary
     * `change_columns` spellings are unset — the reference's resolution
@@ -136,6 +131,11 @@ final case class ScdConfig(
   def effectiveExclude: Seq[String] =
     if (changeExclude.nonEmpty) changeExclude else excludeColumnsFromChangeCheck
 
+  /** Resolve the change-detection column set against the actual schema.
+    * Mirrors `scd_plan.sql:189-222`: `include` is intersected case-insensitively
+    * with real columns, then `exclude + updated_at + unique_key + audit columns`
+    * are removed; default = all columns minus that exclusion set.
+    */
   def checkColumns(columns: Seq[String]): Seq[String] = {
     def diffCi(a: Seq[String], b: Seq[String]): Seq[String] = {
       val bs = b.map(_.toUpperCase).toSet

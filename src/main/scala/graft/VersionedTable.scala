@@ -9,6 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * snapshot under `<root>/v=<n>/` and commits it by creating an empty
   * `_COMMITTED` marker LAST; readers resolve max committed `n`.
   *
+  * Every single-table write commits through ONE routine, [[commit]], in
+  * one order: the data, then the pre-commit files (batch token,
+  * `_DELETE`, caller markers, and always a `_TS_` stamp), then
+  * `_MANIFEST`, then `_COMMITTED` last. [[publishAll]] lands each table's
+  * data and pre-commit files the same way; its txn file is the commit
+  * point.
+  *
   * Why not rename-swap (ScdEngine.atomicSwap): between its two renames the
   * table path does not exist — a concurrent reader errors. Here a reader
   * always sees the previous committed snapshot until the marker exists
@@ -33,6 +40,8 @@ object VersionedTable {
   // key-list to subtract from the nearest older full snapshot, not a
   // snapshot itself.
   private val DeleteMarker = "_DELETE"
+  // Commit-timestamp stamp file (same naming rules as _BATCH_).
+  private val TsPrefix = "_TS_"
 
   // Root manifest: ONE small file naming candidate versions, so readers
   // never LIST the table root (object-store listings are slow and, on some
@@ -48,13 +57,19 @@ object VersionedTable {
   private def manifestVersions(f: FileSystem, root: String): Option[Seq[Long]] =
     SmallFile.readIfPresent(f, new Path(s"$root/$Manifest")).flatMap { txt =>
       val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      // toLongOption, not toLong: an all-digit line past Long range is
-      // foreign content too, not a NumberFormatException
-      val parsed = lines.map(l =>
-        if (l.forall(_.isDigit)) l.toLongOption else None)
+      val parsed = lines.map(numbered("", _))
       if (parsed.nonEmpty && parsed.forall(_.isDefined)) Some(parsed.flatten)
       else None // half-written/foreign/oversized content: fall back to listing
     }
+
+  /** The number in a `<prefix><n>` name (`v=<n>` dirs, `_TS_<n>` stamps,
+    * `_txn/<n>` files, `_MANIFEST` lines), or None: a stray `v=old` or an
+    * out-of-range number is foreign content, not a NumberFormatException.
+    */
+  private def numbered(prefix: String, name: String): Option[Long] =
+    if (!name.startsWith(prefix)) None
+    else Some(name.stripPrefix(prefix))
+      .filter(_.forall(_.isDigit)).flatMap(_.toLongOption)
 
   /** Publish the manifest atomically: write a temp file, then rename into
     * place. Rewriting `_MANIFEST` with create(overwrite) truncated the old
@@ -82,9 +97,8 @@ object VersionedTable {
     val rootPath = new Path(root)
     if (!f.exists(rootPath)) Seq.empty
     else
-      f.listStatus(rootPath).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(VPrefix))
-        .map(_.getPath.getName.stripPrefix(VPrefix).toLong)
+      f.listStatus(rootPath).toSeq.filter(_.isDirectory)
+        .flatMap(s => numbered(VPrefix, s.getPath.getName))
         .sorted
   }
 
@@ -101,141 +115,157 @@ object VersionedTable {
   def latestVersion(spark: SparkSession, root: String): Option[Long] =
     committedVersions(fs(spark, root), root).lastOption
 
-  /** Write `snapshot` as the next version and commit it. Returns the new
-    * version number. Data lands fully before the marker, so a crash
-    * mid-write leaves an uncommitted directory that readers ignore and
-    * `vacuum` reclaims.
+  /** Write `snapshot` as the next version and commit it through
+    * [[commit]]: data, then the pre-commit files, then `_MANIFEST`, then
+    * `_COMMITTED`. Returns the new version number. A crash mid-write leaves
+    * an uncommitted directory that readers ignore and the next publish (or
+    * `vacuum`) reclaims.
+    *
+    * `batchToken` lands a `_BATCH_<token>` idempotence marker
+    * (underscore-prefixed so parquet readers skip it) before the commit
+    * marker, so "which batch produced the latest committed version"
+    * survives a crash between publish and the stream's checkpoint commit:
+    * [[applyOnce]] then skips the at-least-once replay instead of
+    * double-merging it. Tokens come from [[batchToken]].
     *
     * Single-writer assumption (same as the reference's dbt run): two
     * concurrent publishers could claim the same version number. Serializing
-    * writers (scheduler lock, or conditional-create of the version dir on a
-    * filesystem with atomic mkdir) is the caller's job — reader/writer
-    * isolation needs no coordination.
-    */
-  def publish(spark: SparkSession, snapshot: DataFrame, root: String): Long =
-    publish(spark, snapshot, root, batchToken = None)
-
-  /** [[publish]] carrying a streaming batch token: an idempotence marker
-    * file (`_BATCH_<token>`, underscore-prefixed so parquet readers skip it)
-    * lands in the version dir BEFORE the commit marker, so "which batch
-    * produced the latest committed version" survives a crash between publish
-    * and the stream's checkpoint commit — the at-least-once replay can then
-    * be detected and skipped instead of double-merged.
-    *
-    * The token should embed the streaming QUERY id alongside the batch id
-    * (`<queryId>_<batchId>`): bare batch ids restart from 0 with a fresh
-    * checkpoint, so two runs (or two queries sharing one store) would
-    * collide and a legitimate batch would be silently skipped.
+    * writers (scheduler lock, or [[publishIf]]'s conditional create of the
+    * version dir) is the caller's job — reader/writer isolation needs no
+    * coordination.
     */
   def publish(spark: SparkSession, snapshot: DataFrame, root: String,
-              batchToken: Option[String]): Long =
-    publish(spark, snapshot, root, batchToken, preCommitFiles = Nil)
-
-  /** All marker files (batch token, commit stamp) land BEFORE the commit
-    * marker: the marker is the linearization point, so anything meant to
-    * describe the committed version must already be in place when it
-    * appears — a crash between "committed" and "described" would otherwise
-    * leave a version that readers see but time travel silently skips.
-    *
-    * EVERY commit gets a stamp: when the caller supplies none, the default
-    * is max(previous effective stamp, wall clock) — monotone by
-    * construction. This is what keeps [[readAsOf]] REPEATABLE: with the old
-    * inherit-backwards rule an unstamped commit landed "at" the previous
-    * stamp, so `readAsOf(T)` retroactively changed its answer once the
-    * later commit appeared (data committed later in wall-clock became
-    * visible at an earlier as-of time). Backward inheritance survives only
-    * as a read-side fallback for pre-existing legacy versions — see
-    * [[effectiveStampOf]].
-    */
-  private def publish(spark: SparkSession, snapshot: DataFrame, root: String,
-                      batchToken: Option[String],
-                      preCommitFiles: Seq[String],
-                      partitionCol: Option[String] = None,
-                      sortCol: Option[String] = None): Long = {
+              batchToken: Option[String] = None): Long = {
     require(batchToken.forall(t => t.nonEmpty && !t.exists("/=\\".contains(_))),
             s"batch token must be a plain file-name fragment: $batchToken")
+    commitSnapshot(spark, snapshot, root,
+                   files = batchToken.map(BatchPrefix + _).toSeq)
+  }
+
+  /** Write a snapshot as the next version — optionally Hive-partitioned and
+    * sorted within partitions — and commit it through [[commit]] with the
+    * given pre-commit `files` and stamp. The shared body of [[publish]],
+    * [[publishPartitioned]] and [[publishStamped]].
+    */
+  private def commitSnapshot(spark: SparkSession, snapshot: DataFrame,
+                             root: String,
+                             files: Seq[String] = Nil,
+                             stampMillis: Option[Long] = None,
+                             partitionCol: Option[String] = None,
+                             sortCol: Option[String] = None): Long = {
     val f = fs(spark, root)
     val committed = committedVersions(f, root)
-    val next = committed.lastOption.getOrElse(0L) + 1L
+    commit(f, root, committed, committed.lastOption.getOrElse(0L) + 1L,
+           files, stampMillis) { dir =>
+      f.delete(new Path(dir), true) // reclaim a crashed uncommitted attempt
+      // Partitioned layout: cluster rows onto their partition first so each
+      // value directory gets ~1 file, not tasks × values (the ScdEngine
+      // small-files lesson).
+      val clustered = partitionCol.fold(snapshot)(c =>
+        snapshot.repartition(org.apache.spark.sql.functions.col(c)))
+      // Optional within-partition sort: clusters each parquet file's row
+      // groups by `sortCol` so min/max row-group statistics can answer
+      // pushed equality filters on it (the reader-side pruning lever —
+      // without the sort, every row group's [min,max] spans the whole key
+      // space and stats prune nothing). The sort key is
+      // (partitionCol, sortCol), not sortCol alone: a partitionBy write
+      // REQUIRES task-local ordering on the partition columns and
+      // FileFormatWriter inserts its own partition-column sort when the
+      // incoming ordering doesn't satisfy it — which would silently destroy
+      // the sortCol clustering (Round18OpsSpec caught exactly that); the
+      // compound prefix satisfies the writer's requirement so no extra sort
+      // is added and the secondary order survives into the files.
+      val sorted = sortCol.fold(clustered)(c =>
+        clustered.sortWithinPartitions(
+          (partitionCol.toSeq :+ c)
+            .map(org.apache.spark.sql.functions.col): _*))
+      val writer = sorted.write.mode("overwrite")
+      partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(dir)
+      // An EMPTY snapshot can land ZERO part files (a partitionBy write
+      // creates files only per encountered partition value; an empty
+      // local relation plans zero tasks), after which schema inference
+      // rejects every read of the committed version (surfaced
+      // by signatureTable's build barrier). Land the schema explicitly: one
+      // flat zero-row part file — the partition column rides as a DATA
+      // column there, so partitioned readers still see the full schema.
+      val hasDataFiles = f.listStatus(new Path(dir)).exists(s =>
+        s.isDirectory || s.getPath.getName.startsWith("part-"))
+      if (!hasDataFiles)
+        sorted.limit(0).repartition(1).write.mode("append").parquet(dir)
+    }
+  }
+
+  /** THE commit routine of every single-table write: `writeData` lands the
+    * data in `<root>/v=<next>`, [[preCommit]] lands `files` (batch token,
+    * `_DELETE`, caller markers) and the `_TS_` stamp, `_MANIFEST` names the
+    * new version, and `_COMMITTED` — the linearization point — lands last.
+    * Anything meant to describe the committed version is in place before
+    * the marker appears: a crash between "committed" and "described" would
+    * otherwise leave a version that readers see but time travel silently
+    * skips. A crash before the marker leaves an uncommitted directory that
+    * readers ignore.
+    *
+    * EVERY commit gets a stamp: `stampMillis` when the caller supplies one
+    * — checked non-decreasing here, the one place that rule lives — else
+    * the monotone [[defaultStamp]]. This is what keeps [[readAsOf]]
+    * REPEATABLE: with the old inherit-backwards rule an unstamped commit
+    * landed "at" the previous stamp, so `readAsOf(T)` retroactively changed
+    * its answer once the later commit appeared (data committed later in
+    * wall-clock became visible at an earlier as-of time). Backward
+    * inheritance survives only as a read-side fallback for pre-existing
+    * legacy versions — see [[effectiveStampOf]].
+    */
+  private def commit(f: FileSystem, root: String, committed: Seq[Long],
+                     next: Long, files: Seq[String] = Nil,
+                     stampMillis: Option[Long] = None)
+                    (writeData: String => Unit): Long = {
+    stampMillis.foreach { ts =>
+      val prev = lastStamp(f, root, committed)
+      require(prev.forall(_ <= ts), s"commit stamp $ts regresses below ${prev.get}")
+    }
     val dir = s"$root/$VPrefix$next"
-    f.delete(new Path(dir), true) // reclaim a crashed uncommitted attempt
-    // Partitioned layout: cluster rows onto their partition first so each
-    // value directory gets ~1 file, not tasks × values (the ScdEngine
-    // small-files lesson).
-    val clustered = partitionCol.fold(snapshot)(c =>
-      snapshot.repartition(org.apache.spark.sql.functions.col(c)))
-    // Optional within-partition sort: clusters each parquet file's row
-    // groups by `sortCol` so min/max row-group statistics can answer
-    // pushed equality filters on it (the reader-side pruning lever —
-    // without the sort, every row group's [min,max] spans the whole key
-    // space and stats prune nothing). The sort key is
-    // (partitionCol, sortCol), not sortCol alone: a partitionBy write
-    // REQUIRES task-local ordering on the partition columns and
-    // FileFormatWriter inserts its own partition-column sort when the
-    // incoming ordering doesn't satisfy it — which would silently destroy
-    // the sortCol clustering (Round18OpsSpec caught exactly that); the
-    // compound prefix satisfies the writer's requirement so no extra sort
-    // is added and the secondary order survives into the files.
-    val sorted = sortCol.fold(clustered)(c =>
-      clustered.sortWithinPartitions(
-        (partitionCol.toSeq :+ c)
-          .map(org.apache.spark.sql.functions.col): _*))
-    val writer = sorted.write.mode("overwrite")
-    partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(dir)
-    // An EMPTY snapshot can land ZERO part files (a partitionBy write
-    // creates files only per encountered partition value; an empty
-    // local relation plans zero tasks), after which schema inference
-    // rejects every read of the committed version (ADVICE r14, surfaced
-    // by signatureTable's build barrier). Land the schema explicitly: one
-    // flat zero-row part file — the partition column rides as a DATA
-    // column there, so partitioned readers still see the full schema.
-    val hasDataFiles = f.listStatus(new Path(dir)).exists(s =>
-      s.isDirectory || s.getPath.getName.startsWith("part-"))
-    if (!hasDataFiles)
-      sorted.limit(0).repartition(1).write.mode("append").parquet(dir)
-    batchToken.foreach(t =>
-      f.create(new Path(s"$dir/$BatchPrefix$t"), true).close())
-    val files =
-      if (preCommitFiles.exists(_.startsWith(TsPrefix))) preCommitFiles
-      else preCommitFiles :+ s"$TsPrefix${defaultStamp(f, root, committed)}"
-    files.foreach(n =>
-      f.create(new Path(s"$dir/$n"), true).close())
+    writeData(dir)
+    preCommit(f, root, committed, dir, files, stampMillis)
     writeManifest(f, root, committed :+ next)
     f.create(new Path(s"$dir/$Committed"), true).close()
     next
   }
 
+  /** [[commit]]'s pre-commit step, also run per table by [[publishAll]]:
+    * `files`, then the `_TS_` stamp (`stampMillis`, else the default).
+    */
+  private def preCommit(f: FileSystem, root: String, committed: Seq[Long],
+                        dir: String, files: Seq[String],
+                        stampMillis: Option[Long]): Unit = {
+    val ts = stampMillis.getOrElse(defaultStamp(f, root, committed))
+    (files :+ s"$TsPrefix$ts").foreach(n =>
+      f.create(new Path(s"$dir/$n"), true).close())
+  }
+
   /** [[publish]] with the snapshot laid out as Hive-style
     * `<partitionCol>=<value>` directories inside the version dir (same
-    * commit protocol — data fully lands before the marker). Readers via
+    * commit routine — data fully lands before the marker). Readers via
     * [[read]]/[[readVersion]] get the partition column back through
     * directory discovery; [[readLatestPartitions]] prunes the listing
     * itself to named values. Leading-underscore partition column names are
     * fine: Spark's hidden-file filter exempts names containing '='.
-    */
-  def publishPartitioned(spark: SparkSession, snapshot: DataFrame,
-                         root: String, partitionCol: String): Long =
-    publish(spark, snapshot, root, batchToken = None,
-            preCommitFiles = Nil, partitionCol = Some(partitionCol))
-
-  /** [[publishPartitioned]] with (a) an optional within-partition sort
-    * column — row groups clustered so min/max stats answer pushed filters
-    * on it — and (b) caller marker files (underscore-prefixed, plain
-    * file-name fragments) that land in the version dir BEFORE the commit
-    * marker, so layout metadata (e.g. a bucket-count contract) is
-    * atomically part of the committed version. Read back with
-    * [[latestMarkers]].
+    *
+    * Optionally (a) a within-partition sort column — row groups clustered
+    * so min/max stats answer pushed filters on it — and (b) caller marker
+    * files (underscore-prefixed, plain file-name fragments) that land in
+    * the version dir BEFORE the commit marker, so layout metadata (e.g. a
+    * bucket-count contract) is atomically part of the committed version.
+    * Read back with [[latestMarkers]].
     */
   def publishPartitioned(spark: SparkSession, snapshot: DataFrame,
                          root: String, partitionCol: String,
-                         sortCol: Option[String],
-                         markers: Seq[String]): Long = {
+                         sortCol: Option[String] = None,
+                         markers: Seq[String] = Nil): Long = {
     require(markers.forall(m =>
       m.startsWith("_") && !m.exists("/=\\".contains(_))),
       s"markers must be underscore-prefixed file-name fragments: $markers")
-    publish(spark, snapshot, root, batchToken = None,
-            preCommitFiles = markers, partitionCol = Some(partitionCol),
-            sortCol = sortCol)
+    commitSnapshot(spark, snapshot, root, files = markers,
+                   partitionCol = Some(partitionCol), sortCol = sortCol)
   }
 
   /** Marker file names with the given prefix recorded in the LATEST
@@ -314,12 +344,14 @@ object VersionedTable {
     * retroactively").
     */
   private def defaultStamp(f: FileSystem, root: String,
-                           committed: Seq[Long]): Long = {
-    val prev = committed.lastOption
-      .flatMap(v => effectiveStampOf(f, root, committed, v))
-      .getOrElse(Long.MinValue)
-    math.max(prev, System.currentTimeMillis())
-  }
+                           committed: Seq[Long]): Long =
+    math.max(lastStamp(f, root, committed).getOrElse(Long.MinValue),
+             System.currentTimeMillis())
+
+  /** Effective stamp of the latest of `committed`, if any. */
+  private def lastStamp(f: FileSystem, root: String,
+                        committed: Seq[Long]): Option[Long] =
+    committed.lastOption.flatMap(effectiveStampOf(f, root, committed, _))
 
   /** The batch token recorded with the latest committed version, if that
     * version carried one. Pure string compare — a stray `_BATCH_*` file with
@@ -336,14 +368,48 @@ object VersionedTable {
     }
   }
 
+  /** The replay-safe micro-batch step every versioned streaming sink runs:
+    * skip (false) when `token` already produced the latest committed
+    * version, else apply `step` to the latest committed snapshot (None
+    * before the first commit) and [[publish]] the result carrying the
+    * token (true). Only the LATEST version's token is consulted — exactly
+    * foreachBatch's at-least-once window (batch N redelivered after the
+    * sink committed but before the stream's checkpoint did).
+    */
+  private[graft] def applyOnce(spark: SparkSession, root: String,
+                               token: String)
+                              (step: Option[DataFrame] => DataFrame): Boolean =
+    if (latestAppliedBatchToken(spark, root).contains(token)) false
+    else {
+      publish(spark, step(readLatest(spark, root)), root, Some(token))
+      true
+    }
+
+  /** A streaming micro-batch's replay token, `<queryId>_<batchId>`. The
+    * query id is the `sql.streaming.queryId` local property: Spark sets it
+    * on the micro-batch thread to the query's persistent id (the one in
+    * `<checkpoint>/metadata`). Batch ids restart from 0 under a fresh
+    * checkpoint, so without the query id a new query's batch would be
+    * mistaken for a replay. Outside a streaming query this throws.
+    */
+  private[graft] def batchToken(spark: SparkSession, batchId: Long): String = {
+    val qid = Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+      .getOrElse(throw new IllegalStateException(
+        "no streaming query id on this thread: batch tokens exist only " +
+          "inside a streaming query's micro-batch"))
+    s"${qid}_$batchId"
+  }
+
+  private def readLatest(spark: SparkSession, root: String): Option[DataFrame] =
+    latestVersion(spark, root).map(readVersion(spark, root, _))
+
   /** Read the latest committed snapshot (merge-on-read: deletion-vector
     * versions are resolved against their base snapshot, see
     * [[publishDelete]]).
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    readVersion(spark, root,
-                latestVersion(spark, root).getOrElse(
-                  throw new IllegalStateException(s"no committed version at $root")))
+    readLatest(spark, root).getOrElse(
+      throw new IllegalStateException(s"no committed version at $root"))
 
   private def isDelete(f: FileSystem, root: String, v: Long): Boolean =
     f.exists(new Path(s"$root/$VPrefix$v/$DeleteMarker"))
@@ -405,27 +471,14 @@ object VersionedTable {
     * (`get_incremental_scd2_sql.sql` deleted_at handling); physical
     * row removal (retention, right-to-be-forgotten) is out of its scope
     * and rewrites the warehouse table — this is the amortized alternative.
+    *
+    * `stampMillis` is an explicit commit stamp for [[readAsOf]]; without
+    * one the DV gets the default monotone stamp (see [[commit]]).
     */
-  def publishDelete(spark: SparkSession, keys: DataFrame,
-                    root: String): Long =
-    publishDelete(spark, keys, root, stampMillis = None)
-
-  /** [[publishDelete]] with an explicit commit stamp for [[readAsOf]]
-    * (without one the DV gets the default monotone stamp — see
-    * [[publish]]). Non-decreasing rule enforced as in
-    * [[publishStamped]]; the stamp lands before the commit marker.
-    */
-  def publishDelete(spark: SparkSession, keys: DataFrame,
-                    root: String, stampMillis: Option[Long]): Long = {
+  def publishDelete(spark: SparkSession, keys: DataFrame, root: String,
+                    stampMillis: Option[Long] = None): Long = {
     val f = fs(spark, root)
     val committed = committedVersions(f, root)
-    stampMillis.foreach { ts =>
-      committed.lastOption.foreach { v =>
-        val prev = effectiveStampOf(f, root, committed, v)
-        require(prev.forall(_ <= ts),
-                s"commit stamp $ts regresses below ${prev.get}")
-      }
-    }
     val prev = committed.lastOption.getOrElse(
       throw new IllegalStateException(s"no snapshot to delete from at $root"))
     if (isDelete(f, root, prev)) {
@@ -433,16 +486,9 @@ object VersionedTable {
       require(existing.sorted == keys.columns.toSeq.sorted,
               s"DV key schema ${keys.columns.toSeq} != established $existing")
     }
-    val next = prev + 1L
-    val dir = s"$root/$VPrefix$next"
-    f.delete(new Path(dir), true)
-    keys.distinct().write.mode("overwrite").parquet(dir)
-    f.create(new Path(s"$dir/$DeleteMarker"), true).close()
-    val ts = stampMillis.getOrElse(defaultStamp(f, root, committed))
-    f.create(new Path(s"$dir/$TsPrefix$ts"), true).close()
-    writeManifest(f, root, committed :+ next)
-    f.create(new Path(s"$dir/$Committed"), true).close()
-    next
+    // overwrite reclaims a crashed uncommitted attempt's directory
+    commit(f, root, committed, prev + 1L, Seq(DeleteMarker), stampMillis)(
+      keys.distinct().write.mode("overwrite").parquet(_))
   }
 
   /** [[publishDelete]] driven by a predicate: the keys of currently-visible
@@ -531,9 +577,6 @@ object VersionedTable {
   // Timestamp time travel + checked publish
   // -------------------------------------------------------------------
 
-  // Commit-timestamp stamp file (same naming rules as _BATCH_).
-  private val TsPrefix = "_TS_"
-
   /** [[publish]] carrying an explicit commit timestamp (epoch millis) for
     * [[readAsOf]]. The stamp is caller-supplied, not wall-clock: event
     * pipelines stamp with their batch watermark so time travel aligns
@@ -545,25 +588,15 @@ object VersionedTable {
     * stamp EVERY publish explicitly — see [[defaultStamp]]'s contract.
     */
   def publishStamped(spark: SparkSession, snapshot: DataFrame, root: String,
-                     commitMillis: Long): Long = {
-    val f = fs(spark, root)
-    val prior = committedVersions(f, root)
-    prior.lastOption.foreach { v =>
-      val prev = effectiveStampOf(f, root, prior, v)
-      require(prev.forall(_ <= commitMillis),
-              s"commit stamp $commitMillis regresses below ${prev.get}")
-    }
+                     commitMillis: Long): Long =
     // The stamp rides as a pre-commit file: stamp and commit are atomic
     // with respect to each other (a crash leaves an UNCOMMITTED dir that
     // readers ignore, never a committed version time travel skips).
-    publish(spark, snapshot, root, batchToken = None,
-            preCommitFiles = Seq(s"$TsPrefix$commitMillis"))
-  }
+    commitSnapshot(spark, snapshot, root, stampMillis = Some(commitMillis))
 
   private def stampOf(f: FileSystem, root: String, v: Long): Option[Long] =
     f.listStatus(new Path(s"$root/$VPrefix$v")).toSeq
-      .map(_.getPath.getName).find(_.startsWith(TsPrefix))
-      .map(_.stripPrefix(TsPrefix).toLong)
+      .flatMap(s => numbered(TsPrefix, s.getPath.getName)).headOption
 
   /** Effective commit stamp of `v`: its own stamp, else inherited from the
     * nearest OLDER stamped version. Every commit path now stamps (explicit
@@ -649,13 +682,8 @@ object VersionedTable {
     if (f.exists(dir) || !f.mkdirs(dir)) return None
     // append into the freshly-claimed (empty) dir: overwrite would delete
     // and re-create it, reopening the claim window a racer could steal
-    snapshot.write.mode("append").parquet(s"$root/$VPrefix$next")
-    f.create(new Path(
-      s"$root/$VPrefix$next/$TsPrefix${defaultStamp(f, root, committed)}"),
-      true).close()
-    writeManifest(f, root, committed :+ next)
-    f.create(new Path(s"$root/$VPrefix$next/$Committed"), true).close()
-    Some(next)
+    Some(commit(f, root, committed, next)(
+      snapshot.write.mode("append").parquet(_)))
   }
 
   /** The OCC loop: read the latest snapshot (None before first commit),
@@ -709,12 +737,12 @@ object VersionedTable {
       val b = baseOf(f, root, v)
       committed.filter(n => n >= b && n <= v)
     }
-    f.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(VPrefix))
-      .foreach { s =>
-        val v = s.getPath.getName.stripPrefix(VPrefix).toLong
-        if (!keepSet.contains(v)) f.delete(s.getPath, true)
-      }
+    // a directory whose name does not parse (a stray `v=old`) is not a
+    // version this table wrote: left alone
+    f.listStatus(rootPath).toSeq.filter(_.isDirectory).foreach { s =>
+      if (numbered(VPrefix, s.getPath.getName).exists(!keepSet.contains(_)))
+        f.delete(s.getPath, true)
+    }
     // Orphaned manifest temp files: writeManifest publishes via
     // temp-write + rename, so a crash between create and rename (or a
     // doubly-failed rename) can strand `._MANIFEST_tmp_<uuid>` at the
@@ -738,20 +766,8 @@ object VersionedTable {
              delta: DataFrame,
              root: String,
              cfg: ScdConfig): Long =
-    runScd(spark, delta, root, cfg, batchToken = None)
-
-  /** [[runScd]] publishing with a streaming batch token (see [[publish]]). */
-  private[graft] def runScd(spark: SparkSession,
-                            delta: DataFrame,
-                            root: String,
-                            cfg: ScdConfig,
-                            batchToken: Option[String]): Long = {
-    val next = latestVersion(spark, root) match {
-      case None    => ScdEngine.initial(delta, cfg)
-      case Some(v) => ScdEngine.incremental(readVersion(spark, root, v), delta, cfg)
-    }
-    publish(spark, next, root, batchToken)
-  }
+    publish(spark, readLatest(spark, root).fold(ScdEngine.initial(delta, cfg))(
+      ScdEngine.incremental(_, delta, cfg)), root)
 
   // -------------------------------------------------------------------
   // Multi-table transactions
@@ -762,7 +778,8 @@ object VersionedTable {
   /** Atomically publish SEVERAL tables as one transaction: every table in
     * `snapshots` becomes visible to [[readAllLatest]] together, or not at
     * all. The mechanism is a write-ahead commit file: all data directories
-    * land first (invisible — no markers), then ONE `<base>/_txn/<id>` file
+    * land first, each with its `_TS_` stamp through [[commit]]'s pre-commit
+    * step (invisible — no markers), then ONE `<base>/_txn/<id>` file
     * (atomic create) pins each table's new version; that file IS the
     * commit point. Per-table `_COMMITTED` markers are then derived so
     * single-table readers ([[read]]) converge too — a crash between the
@@ -791,14 +808,10 @@ object VersionedTable {
     // through marker repair, so numbers are never reused.
     val pinned = snapshots.map { case (name, df) =>
       val root = s"$base/$name"
-      val rootPath = new Path(root)
-      val existing =
-        if (!f.exists(rootPath)) Seq.empty[Long]
-        else f.listStatus(rootPath).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(VPrefix))
-          .map(_.getPath.getName.stripPrefix(VPrefix).toLong)
-      val next = (existing.sorted.lastOption.getOrElse(0L)) + 1L
-      df.write.mode("overwrite").parquet(s"$root/$VPrefix$next")
+      val next = listedVersions(f, root).lastOption.getOrElse(0L) + 1L
+      val dir = s"$root/$VPrefix$next"
+      df.write.mode("overwrite").parquet(dir)
+      preCommit(f, root, committedVersions(f, root), dir, Nil, None)
       name -> next
     }
     val txnId = latestTxnId(f, base).getOrElse(0L) + 1L
@@ -813,8 +826,8 @@ object VersionedTable {
   private def latestTxnId(f: FileSystem, base: String): Option[Long] = {
     val dir = new Path(s"$base/$TxnDir")
     if (!f.exists(dir)) None
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.forall(_.isDigit)).flatMap(_.toLongOption).sorted.lastOption
+    else f.listStatus(dir).toSeq.flatMap(s => numbered("", s.getPath.getName))
+      .sorted.lastOption
   }
 
   private def txnPins(f: FileSystem, base: String,

@@ -329,18 +329,6 @@ object Scd2 {
         payload: _*)
   }
 
-  /** Replay a payload-carrying changelog ([[snapshotDelta]] with
-    * `includePayload = true`) onto the old snapshot, reproducing the new one
-    * exactly (spec-asserted): deletes drop their version, updates swap in
-    * the new audit columns, inserts append the carried row. This is the CDC
-    * consumer's operator — a changelog feed plus the previous snapshot
-    * reconstructs the table without re-reading the producer's storage.
-    *
-    * Join shape mirrors the merge: one full-outer-free pass — an anti join
-    * for deletes and a left join for updates, both on the native null-safe
-    * version key; the changelog side is batch-sized, so both joins
-    * broadcast at scale.
-    */
   /** Point-in-time view: the dimension exactly as it stood at `t` — rows
     * whose `[_valid_from, _valid_to)` window contains `t`, re-flagged
     * current (every survivor IS current as of `t`). The SCD2 answer to
@@ -464,6 +452,18 @@ object Scd2 {
                   "left_anti")
   }
 
+  /** Replay a payload-carrying changelog ([[snapshotDelta]] with
+    * `includePayload = true`) onto the old snapshot, reproducing the new one
+    * exactly (spec-asserted): deletes drop their version, updates swap in
+    * the new audit columns, inserts append the carried row. This is the CDC
+    * consumer's operator — a changelog feed plus the previous snapshot
+    * reconstructs the table without re-reading the producer's storage.
+    *
+    * Join shape mirrors the merge: one full-outer-free pass — an anti join
+    * for deletes and a left join for updates, both on the native null-safe
+    * version key; the changelog side is batch-sized, so both joins
+    * broadcast at scale.
+    */
   def applyDelta(oldSnap: DataFrame,
                  delta: DataFrame,
                  cfg: ScdConfig): DataFrame = {
@@ -493,15 +493,6 @@ object Scd2 {
       .unionByName(ins)
   }
 
-  /** Dimension-health report: the distribution of per-key version counts,
-    * with how many keys at each depth currently sit deleted ('D' current
-    * version). Long history tails are the churny keys that dominate
-    * incremental merge cost (a key's window partition is sequential), so
-    * this is the operational skew report for an SCD table. Two
-    * combine-enabled aggregates — key-sized then depth-sized; SQL GROUP BY
-    * NULL≡NULL grouping keeps NULL-bearing business keys as one key, same
-    * as the merge's null-safe matching.
-    */
   /** Duration-weighted attribute analytics over the version history: per
     * key, the time-weighted average of a (milli-scaled integer) value across
     * its validity intervals — "what was this entity's typical value", where
@@ -540,6 +531,15 @@ object Scd2 {
                                col("dur_sec_total").cast("double"), 6)))
   }
 
+  /** Dimension-health report: the distribution of per-key version counts,
+    * with how many keys at each depth currently sit deleted ('D' current
+    * version). Long history tails are the churny keys that dominate
+    * incremental merge cost (a key's window partition is sequential), so
+    * this is the operational skew report for an SCD table. Two
+    * combine-enabled aggregates — key-sized then depth-sized; SQL GROUP BY
+    * NULL≡NULL grouping keeps NULL-bearing business keys as one key, same
+    * as the merge's null-safe matching.
+    */
   def historyProfile(snapshot: DataFrame, cfg: ScdConfig): DataFrame = {
     val cols = snapshot.columns.toSeq
     val keys = cfg.uniqueKey.map(resolveCi(cols, _)).map(col)

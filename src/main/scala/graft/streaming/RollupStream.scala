@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.VersionedTable
+import graft.operators.IncrementalAgg
+
 /** Watermarked tumbling-window rollup: the streaming counterpart of the
   * batch per-(event_type, day) rollup (X27), via the built-in windowed
   * aggregation — watermark-scoped state, append-mode emission when the
@@ -44,7 +47,8 @@ object RollupStream {
     * eventually-correct pattern windowed append mode can't give.
     *
     * `keyExprs` are computed per batch (e.g. `date_trunc('DAY', ts)`), so
-    * the caller controls the rollup grain.
+    * the caller controls the rollup grain. Each micro-batch runs through
+    * the shared replay-safe step [[graft.VersionedTable.applyOnce]].
     */
   def incrementalSink(events: DataFrame,
                       storeRoot: String,
@@ -57,52 +61,16 @@ object RollupStream {
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // foreachBatch is at-least-once: a crash between publish and the
-        // checkpoint commit replays the last micro-batch on restart. The
-        // additive merge (count/sum) is NOT idempotent, so a replayed batch
-        // that was already merged must be skipped — the latest committed
-        // version records which batch produced it. The marker embeds the
-        // streaming QUERY id (stable across restarts of the same
-        // checkpoint, fresh per new checkpoint), not the bare batch id:
-        // restarting with a new checkpoint resets batch ids to 0, and a
-        // bare-id match would silently skip that legitimate first batch.
-        val token = s"${queryId(spark, checkpoint)}_$batchId"
-        val alreadyApplied = graft.VersionedTable
-          .latestAppliedBatchToken(spark, storeRoot).contains(token)
-        if (!alreadyApplied) {
-          val delta = graft.operators.IncrementalAgg.rollup(
-            keyExprs(batch), keys, valueMicro)
-          val merged = graft.VersionedTable.latestVersion(spark, storeRoot) match {
-            case None => delta
-            case Some(_) =>
-              graft.operators.IncrementalAgg.merge(
-                graft.VersionedTable.read(spark, storeRoot), delta, keys)
-          }
-          graft.VersionedTable.publish(spark, merged, storeRoot, Some(token))
+        // foreachBatch is at-least-once and the additive merge (count/sum)
+        // is NOT idempotent, so the batch runs through the shared
+        // replay-safe step: a replay of the batch that produced the latest
+        // committed version is skipped.
+        VersionedTable.applyOnce(spark, storeRoot,
+                                 VersionedTable.batchToken(spark, batchId)) { prev =>
+          val delta = IncrementalAgg.rollup(keyExprs(batch), keys, valueMicro)
+          prev.fold(delta)(IncrementalAgg.merge(_, delta, keys))
         }
         ()
       }
       .start()
-
-  /** The streaming query id persisted in `<checkpoint>/metadata` (written at
-    * query start, before the first micro-batch): `{"id":"<uuid>"}`. Stable
-    * across restarts of the same checkpoint — exactly the scope a replayed
-    * batch id must be matched under. Read once per micro-batch (one tiny
-    * file, driver-side).
-    */
-  private[streaming] def queryId(spark: org.apache.spark.sql.SparkSession,
-                                 checkpoint: String): String = {
-    val path = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(path)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text) match {
-      case Some(m) => m.group(1)
-      case None =>
-        throw new IllegalStateException(
-          s"no query id in checkpoint metadata at $path: $text")
-    }
-  }
 }

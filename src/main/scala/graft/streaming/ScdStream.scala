@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.{ScdConfig, ScdEngine}
+import graft.{ScdConfig, ScdEngine, VersionedTable}
 
 /** Structured Streaming front-end for SCD maintenance.
   *
@@ -50,15 +50,13 @@ object ScdStream {
       }
 
   /** [[scdSink]] against a [[graft.VersionedTable]] root, with exact
-    * at-least-once replay PROTECTION: each micro-batch publishes with the
-    * `<queryId>_<batchId>` idempotence token
-    * (`VersionedTable.publish(batchToken)`), and a re-delivered batch —
-    * foreachBatch's documented failure mode when the sink commits but the
-    * stream dies before its checkpoint commit — is detected by token
-    * equality and SKIPPED: no merge runs, no new table version lands.
-    * The query id (stable across restarts of one checkpoint; Spark pins it
-    * as a driver-thread local property during foreachBatch) disambiguates
-    * batch ids, which restart from 0 under a fresh checkpoint.
+    * at-least-once replay PROTECTION: each micro-batch runs through the
+    * shared replay-safe step [[graft.VersionedTable.applyOnce]] with its
+    * `<queryId>_<batchId>` token ([[graft.VersionedTable.batchToken]]), so
+    * a re-delivered batch — foreachBatch's documented failure mode when the
+    * sink commits but the stream dies before its checkpoint commit — is
+    * detected by token equality and SKIPPED: no merge runs, no new table
+    * version lands.
     */
   def scdSinkVersioned(stream: DataFrame,
                        root: String,
@@ -73,35 +71,22 @@ object ScdStream {
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
           applyVersionedBatch(spark, batch.toDF(), root, cfg,
-                              batchToken(spark, batchId))
+                              VersionedTable.batchToken(spark, batchId))
         }
         ()
       }
 
-  /** The replay-detection token: streaming query id + batch id. */
-  private[streaming] def batchToken(spark: org.apache.spark.sql.SparkSession,
-                                    batchId: Long): String = {
-    val qid = Option(
-      spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
-      .getOrElse("noquery")
-    s"${qid}_$batchId"
-  }
-
   /** One idempotent micro-batch merge: skip (false) when `token` already
     * produced the latest committed version, else merge + publish carrying
-    * the token (true). Only the LATEST version's token is consulted —
-    * exactly the at-least-once window (batch N redelivered after the sink
-    * committed but before the checkpoint did).
+    * the token (true) — [[graft.VersionedTable.applyOnce]] with the SCD
+    * step (initial load before the first commit, incremental after).
     */
   private[graft] def applyVersionedBatch(spark: org.apache.spark.sql.SparkSession,
                                          batch: DataFrame,
                                          root: String,
                                          cfg: ScdConfig,
                                          token: String): Boolean =
-    if (graft.VersionedTable.latestAppliedBatchToken(spark, root)
-          .contains(token)) false
-    else {
-      graft.VersionedTable.runScd(spark, batch, root, cfg, Some(token))
-      true
-    }
+    VersionedTable.applyOnce(spark, root, token)(
+      _.fold(ScdEngine.initial(batch, cfg))(
+        ScdEngine.incremental(_, batch, cfg)))
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.VersionedTable
+
 /** Streaming heavy-hitter maintenance with BOUNDED state: per-bucket
   * Misra–Gries summaries merged once per micro-batch into a
   * [[graft.VersionedTable]] store.
@@ -28,9 +30,9 @@ import org.apache.spark.sql.functions._
   *
   * All state is integer counters; the shrink delta d is the (m+1)-th
   * largest summed counter (a multiset statistic — deterministic under any
-  * tie order). foreachBatch is at-least-once, so the applied-batch token
-  * guard (same scheme as [[RollupStream.incrementalSink]]) makes replays
-  * no-ops.
+  * tie order). foreachBatch is at-least-once, so every micro-batch runs
+  * through the shared replay-safe step [[graft.VersionedTable.applyOnce]],
+  * which makes replays no-ops.
   *
   * Store layout: kind='c' rows (bucket, k, est) — the counters; kind='m'
   * rows (bucket, err, n) — per-bucket error bound and processed mass.
@@ -50,10 +52,8 @@ object TopKStream {
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val token = s"${RollupStream.queryId(spark, checkpoint)}_$batchId"
-        val alreadyApplied = graft.VersionedTable
-          .latestAppliedBatchToken(spark, storeRoot).contains(token)
-        if (!alreadyApplied) {
+        VersionedTable.applyOnce(spark, storeRoot,
+                                 VersionedTable.batchToken(spark, batchId)) { prev =>
           import org.apache.spark.sql.expressions.Window
           val keyed = batch.select(
             pmod(col(keyCol).cast("long"), lit(buckets.toLong)).as("bucket"),
@@ -62,21 +62,19 @@ object TopKStream {
             .agg(count(lit(1)).as("est"))
           val deltaN = keyed.groupBy(col("bucket"))
             .agg(count(lit(1)).as("dn"))
-          val (prevC, prevM) =
-            graft.VersionedTable.latestVersion(spark, storeRoot) match {
-              case None =>
-                val c = deltaC.filter(lit(false))
-                (c.select(col("bucket"), col("k"), col("est")),
-                 deltaN.filter(lit(false))
-                   .select(col("bucket"), lit(0L).as("err"),
-                           lit(0L).as("n")))
-              case Some(_) =>
-                val st = graft.VersionedTable.read(spark, storeRoot)
-                (st.filter(col("kind") === "c")
-                   .select(col("bucket"), col("k"), col("est")),
-                 st.filter(col("kind") === "m")
-                   .select(col("bucket"), col("err"), col("n")))
-            }
+          val (prevC, prevM) = prev match {
+            case None =>
+              val c = deltaC.filter(lit(false))
+              (c.select(col("bucket"), col("k"), col("est")),
+               deltaN.filter(lit(false))
+                 .select(col("bucket"), lit(0L).as("err"),
+                         lit(0L).as("n")))
+            case Some(st) =>
+              (st.filter(col("kind") === "c")
+                 .select(col("bucket"), col("k"), col("est")),
+               st.filter(col("kind") === "m")
+                 .select(col("bucket"), col("err"), col("n")))
+          }
           val summed = prevC.unionAll(deltaC)
             .groupBy(col("bucket"), col("k"))
             .agg(sum(col("est")).as("est"))
@@ -103,8 +101,7 @@ object TopKStream {
                        coalesce(col("_d"), lit(0L))).as("err"),
                     (coalesce(col("n"), lit(0L)) +
                        coalesce(col("dn"), lit(0L))).as("n"))
-          graft.VersionedTable.publish(
-            spark, counters.unionAll(meta), storeRoot, Some(token))
+          counters.unionAll(meta)
         }
         ()
       }
@@ -116,7 +113,7 @@ object TopKStream {
     */
   def readSummary(spark: org.apache.spark.sql.SparkSession,
                   storeRoot: String): DataFrame = {
-    val st = graft.VersionedTable.read(spark, storeRoot)
+    val st = VersionedTable.read(spark, storeRoot)
     st.filter(col("kind") === "c")
       .select(col("bucket"), col("k"), col("est"))
       .join(st.filter(col("kind") === "m")

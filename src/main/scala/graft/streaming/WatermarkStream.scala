@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.VersionedTable
+
 /** Explicit watermark-drop accounting for an at-least-once merge sink.
   *
   * Rows older than (previous committed high-watermark − delay) are DROPPED
@@ -23,8 +25,8 @@ import org.apache.spark.sql.functions._
   * Scale: per micro-batch the engine touches O(batch + store keys). The
   * store is key-dimensional (event types); the high-watermark probe is a
   * scalar aggregate over it. Replayed batch ids (at-least-once
-  * foreachBatch) are skipped via the same query-scoped batch token as
-  * [[RollupStream.incrementalSink]].
+  * foreachBatch) are skipped by the shared replay-safe step
+  * [[graft.VersionedTable.applyOnce]].
   */
 object WatermarkStream {
 
@@ -41,12 +43,8 @@ object WatermarkStream {
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val token = s"${RollupStream.queryId(spark, checkpoint)}_$batchId"
-        val already = graft.VersionedTable
-          .latestAppliedBatchToken(spark, storeRoot).contains(token)
-        if (!already) {
-          val prev = graft.VersionedTable.latestVersion(spark, storeRoot)
-            .map(_ => graft.VersionedTable.read(spark, storeRoot))
+        VersionedTable.applyOnce(spark, storeRoot,
+                                 VersionedTable.batchToken(spark, batchId)) { prev =>
           val prevMax: Option[Long] = prev.flatMap { p =>
             val r = p.agg(max(col("max_us"))).first()
             if (r.isNullAt(0)) None else Some(r.getLong(0))
@@ -64,7 +62,7 @@ object WatermarkStream {
                      floor(col("value") * lit(1000000.0)).cast("long"))
               .otherwise(0L)).as("value_micro_kept"),
             max(when(!col("_late"), col("_us"))).as("max_us"))
-          val merged = prev match {
+          prev match {
             case None => delta
             case Some(p) =>
               p.select(col("event_type"), col("n_kept"), col("n_dropped"),
@@ -76,7 +74,6 @@ object WatermarkStream {
                      sum(col("value_micro_kept")).as("value_micro_kept"),
                      max(col("max_us")).as("max_us"))
           }
-          graft.VersionedTable.publish(spark, merged, storeRoot, Some(token))
         }
         ()
       }

@@ -9,10 +9,12 @@ import graft.operators.{Dedup, Profile, Rolling, Scd2, Sessionize, TextAnalysis}
 import graft.sources.Tables
 
 /** Measures how the flagship pipelines scale when the input grows k×
-  * (union with key-shifted copies, preserving per-key version-chain shape).
+  * (key-shifted copies, preserving per-key version-chain shape).
   * A shuffle/window/hash pipeline should scale ~linearly in rows; a
   * super-linear slope exposes a cliff (spill, quadratic blowup, driver
-  * collect) before it shows up at 100 TB.
+  * collect) before it shows up at 100 TB. k=100 (~10 M events / ~500 k
+  * docs from sf0.1) needs a large heap:
+  * `SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.Stress <sfDir> 100"`.
   *
   * Usage: runMain graft.tools.Stress [sfDir] [k]
   */
@@ -35,12 +37,17 @@ object Stress {
       s
     }
 
-    /** k copies with shifted keys/ids — same per-key chain shape, k× keys. */
+    /** k copies with shifted keys/ids — same per-key chain shape, k× keys.
+      * Copies are built from a RANGE join against the checkpointed base (one
+      * wide copy of the data, k expressed as a generator) instead of a
+      * k-way union: a 100-branch union plan compiles slowly and re-reads the
+      * base 100 times.
+      */
     def copies(df: DataFrame, keyCol: String, idCol: String, shift: Long): DataFrame =
-      (0 until k).map { i =>
-        df.withColumn(keyCol, col(keyCol) + lit(i * shift))
-          .withColumn(idCol, col(idCol) + lit(i * shift))
-      }.reduce(_ unionByName _)
+      df.crossJoin(spark.range(k).select(col("id").as("_copy")))
+        .withColumn(keyCol, col(keyCol) + col("_copy") * lit(shift))
+        .withColumn(idCol, col(idCol) + col("_copy") * lit(shift))
+        .drop("_copy")
 
     val evCfg = ScdConfig(uniqueKey = Seq("user_id"), updatedAtCol = "ts",
                           changeExclude = Seq("event_id"))

@@ -74,6 +74,9 @@ class RollupStreamSpec extends SparkTestBase {
                  (ts("2025-03-01 22:00:00"), "click", 0.5))
     try {
       source.addData(b1: _*); query.processAllAvailable()
+      // the replay token is the query's persistent id and the batch id
+      assert(graft.VersionedTable.latestAppliedBatchToken(session, root) ===
+               Some(s"${query.id}_0"))
       source.addData(b2: _*); query.processAllAvailable()
     } finally query.stop()
 

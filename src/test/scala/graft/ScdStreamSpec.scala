@@ -134,6 +134,9 @@ class ScdStreamSpec extends SparkTestBase {
     assert(v1.nonEmpty)
     assert(VersionedTable.latestAppliedBatchToken(spark, root2)
              .exists(_.endsWith("_0")))
+    // the token's query id is the query's persistent id
+    assert(VersionedTable.latestAppliedBatchToken(spark, root2) ===
+             Some(s"${q1.id}_0"))
   }
 }
 

@@ -71,7 +71,9 @@ class TableGovernanceSpec extends SparkTestBase {
       .as[String].head() === "b")
 
     // deleting the manifest falls back to the listing (legacy tables),
-    // which then sees the planted version
+    // which then sees the planted version — and skips a planted directory
+    // whose name is not a version number
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/v=old"))
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/_MANIFEST"), false)
     assert(VersionedTable.latestVersion(spark, root) === Some(3L))
 
@@ -113,5 +115,17 @@ class TableGovernanceSpec extends SparkTestBase {
       .as[String].head() === "b")
     assert(VersionedTable.read(spark, root).select("x")
       .as[String].head() === "b")
+
+    // a multi-table transaction stamps its versions too: without a stamp
+    // the publishAll version would inherit 100 and answer readAsOf(150)
+    val base = java.nio.file.Files.createTempDirectory("tg4b").toString
+    VersionedTable.publishStamped(spark, Seq((1L, "a")).toDF("id", "x"),
+                                  s"$base/a", 100L)
+    VersionedTable.publishAll(spark,
+      Seq("a" -> Seq((1L, "t")).toDF("id", "x")), base)
+    assert(VersionedTable.read(spark, s"$base/a").select("x")
+      .as[String].head() === "t")
+    assert(VersionedTable.readAsOf(spark, s"$base/a", 150L).select("x")
+      .as[String].head() === "a")
   }
 }

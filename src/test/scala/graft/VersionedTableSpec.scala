@@ -32,8 +32,12 @@ class VersionedTableSpec extends SparkTestBase {
     assert(VersionedTable.read(spark, root).select("x").as[String].head() === "c")
 
     val v3 = VersionedTable.publish(spark, Seq((1, "d")).toDF("id", "x"), root)
+    // a stray directory whose name is not a version number: vacuum
+    // leaves it alone
+    new java.io.File(s"$root/v=old").mkdirs()
     VersionedTable.vacuum(spark, root, keep = 1)
     assert(VersionedTable.latestVersion(spark, root) === Some(v3))
+    assert(new java.io.File(s"$root/v=old").isDirectory)
     intercept[IllegalArgumentException] {
       VersionedTable.readVersion(spark, root, 2)
     }
