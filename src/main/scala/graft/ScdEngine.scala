@@ -30,8 +30,8 @@ import graft.operators.{Scd01, Scd2}
   *
   *   1. computes the distinct buckets touched by the delta batch (a tiny
   *      aggregate over the batch),
-  *   2. reads ONLY those partitions of the target (static partition pruning at
-  *      the parquet scan — untouched buckets are never read),
+  *   2. reads ONLY those bucket directories that exist, found by one
+  *      existence probe each (untouched buckets are never listed or read),
   *   3. runs the merge over the pruned slice,
   *   4. rewrites ONLY the touched bucket directories.
   *
@@ -42,49 +42,20 @@ import graft.operators.{Scd01, Scd2}
   * engine controls. At 100 TB / 1000 executors, an unbucketed incremental run
   * would rewrite the whole table every batch; the bucketed path touches
   * `O(|delta keys| / n)` of it.
+  *
+  * Both swaps — the whole-table one of [[atomicSwap]] and the per-bucket
+  * one of the pruned path — stage the snapshot through [[writeTmp]], the
+  * one place that writes `<target>.tmp` and enforces the contract on it.
   */
 object ScdEngine {
 
   /** Partition-directory column for the bucketed layout. */
   val BucketCol = "_scd2_bucket"
 
-  /** Root-level bucket manifest (`_SCD_BUCKETS`): the bucket ids present on
-    * disk, one per line — so the pruned incremental path never LISTS the
-    * table's partition directories to know what exists (Stress13c: at 100 M
-    * rows / 800 buckets, partition discovery over ~25k files was the whole
-    * local-batch slope; a real catalog absorbs exactly this, and the
-    * library's manifest is its stand-in). No '=' in the name, underscore
-    * prefix: parquet scans skip it. Written atomically (tmp + rename, the
-    * VersionedTable manifest discipline); a missing or foreign-content
-    * manifest degrades to ONE top-level listStatus (directory names only,
-    * not the recursive file listing Spark's discovery pays) and is then
-    * rewritten.
-    */
-  private val BucketManifest = "_SCD_BUCKETS"
-
-  private def readBucketManifest(fs: FileSystem,
-                                 targetPath: String): Option[Seq[Int]] =
-    SmallFile.readIfPresent(fs, new Path(s"$targetPath/$BucketManifest"))
-      .flatMap { txt =>
-        val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-        // toIntOption, not toInt (ADVICE r12): an all-digit line exceeding
-        // Int range must degrade to the listing fallback like any other
-        // foreign content, not crash the merge with NumberFormatException.
-        val parsed = lines.map(_.toIntOption)
-        if (parsed.forall(_.isDefined)) // empty manifest = zero buckets, valid
-          Some(parsed.map(_.get))
-        else None // half-written/foreign/oversized content: fall back to listing
-      }
-
-  // A missing manifest is SAFE: readers fall back to one listing.
-  private def writeBucketManifest(fs: FileSystem, targetPath: String,
-                                  buckets: Seq[Int]): Unit =
-    SmallFile.publish(fs, targetPath, BucketManifest,
-                      buckets.distinct.sorted.mkString("\n"))
-
-  /** One top-level listStatus for `<BucketCol>=<b>` directory NAMES — the
-    * manifest fallback and the post-swap seed. Directory names only: never
-    * the recursive per-file discovery.
+  /** One top-level listStatus for `<BucketCol>=<b>` directory NAMES (never
+    * the recursive per-file discovery): the schema donor when every
+    * touched bucket is new, and the untouched set of a first-contract
+    * validation.
     */
   private def listBucketDirs(fs: FileSystem, targetPath: String): Seq[Int] = {
     val root = new Path(targetPath)
@@ -95,33 +66,8 @@ object ScdEngine {
       .sorted
   }
 
-  /** The on-disk bucket set: manifest when present, else one listing (which
-    * then seeds the manifest so the next run never lists).
-    *
-    * TRUST MODEL (ADVICE r12): the manifest is a PRUNING HINT, never load-
-    * bearing for correctness — a crash between the per-bucket rename loop
-    * and the manifest rewrite leaves it stale in either direction (a
-    * listed-but-deleted bucket, or an on-disk bucket it doesn't know).
-    * Every consumer therefore cross-checks what it touches: the hot merge
-    * path exists-probes exactly the touched directories
-    * ([[existingBuckets]] — |delta buckets| probes, the pruned path's own
-    * scale), and the rare full-coverage paths (schema-widening rewrite,
-    * first-contract validation) re-derive ground truth with ONE
-    * [[listBucketDirs]] listing. A phantom manifest entry is thus never
-    * read (probe fails → treated as absent) and an unlisted-but-on-disk
-    * bucket is never overwritten blind (the probe finds it) — it re-enters
-    * the manifest via the post-merge survivors write when next touched.
-    */
-  private def bucketsOnDisk(fs: FileSystem, targetPath: String): Seq[Int] =
-    readBucketManifest(fs, targetPath).getOrElse {
-      val listed = listBucketDirs(fs, targetPath)
-      writeBucketManifest(fs, targetPath, listed)
-      listed
-    }
-
-  /** The subset of `bs` whose bucket directory actually exists — the
-    * per-touched-bucket cross-check of the manifest trust model. Cost is
-    * one existence probe per requested bucket (delta-bounded on the merge
+  /** The subset of `bs` whose bucket directory actually exists: one
+    * existence probe per requested bucket (delta-bounded on the merge
     * path), never a table-wide listing.
     */
   private def existingBuckets(fs: FileSystem, targetPath: String,
@@ -166,7 +112,7 @@ object ScdEngine {
   /** [[run]] without the post-run snapshot read-back: commits the
     * maintenance step and returns. On a bucketed table the read-back is
     * the ONE remaining full partition discovery of an incremental run
-    * (every internal read is manifest-routed to the touched buckets) and
+    * (every internal read addresses the touched bucket directories) and
     * it belongs to the first CONSUMER of the full dimension, not to the
     * merge — a 100 TB pipeline commits the merge and reads slices. Use
     * this from ingest loops; use [[run]] when the next step genuinely
@@ -186,22 +132,18 @@ object ScdEngine {
     // introspection + the multiple passes below reuse one computation.
     val batch = delta.cache()
     try {
-      if (!exists || fullRefresh) {
-        val snapshot = initial(batch, cfg)
-        contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
-        atomicSwap(spark, fs, withBucket(snapshot, cfg, numBuckets), targetPath,
+      if (!exists || fullRefresh)
+        atomicSwap(spark, fs, initial(batch, cfg), targetPath, cfg,
                    numBuckets, contract)
-      } else {
-        numBuckets match {
-          case Some(n) =>
-            incrementalBucketed(spark, fs, batch, targetPath, cfg, n, contract)
-          case None =>
-            val target = spark.read.parquet(targetPath)
-            val snapshot = incremental(target, batch, cfg)
-            contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
-            atomicSwap(spark, fs, snapshot, targetPath, numBuckets, contract)
-        }
-      }
+      else if (!numBuckets.exists(n =>
+                 incrementalBucketed(spark, fs, batch, targetPath, cfg, n, contract)))
+        // Full rewrite: an unbucketed table, or a bucketed run the pruned
+        // path declined. The read's bucket column is dropped; writeTmp
+        // derives it afresh when the layout is bucketed.
+        atomicSwap(spark, fs,
+                   incremental(spark.read.parquet(targetPath).drop(BucketCol),
+                               batch, cfg),
+                   targetPath, cfg, numBuckets, contract)
     } finally batch.unpersist() // S7: post-run temp drop
   }
 
@@ -315,16 +257,12 @@ object ScdEngine {
   def bucketOf(keys: Seq[String], n: Int) =
     pmod(hash(keys.map(col): _*), lit(n))
 
-  private def withBucket(df: DataFrame, cfg: ScdConfig, numBuckets: Option[Int]): DataFrame =
-    numBuckets match {
-      case Some(n) =>
-        val keys = cfg.uniqueKey.map(resolveCi(df.columns.toSeq, _))
-        df.withColumn(BucketCol, bucketOf(keys, n))
-      case None => df
-    }
-
-  /** Incremental over a bucketed target: prune target scan AND rewrite to the
-    * buckets the batch touches.
+  /** Incremental over a bucketed target: prune the target scan AND the
+    * rewrite to the buckets the batch touches. Returns false, having
+    * written nothing, when the run needs the full rewrite instead: the
+    * target has no bucket directory at all (an unbucketed table being
+    * bucketed — merging only the touched buckets would leave the old root
+    * files beside them), or the batch widens the schema.
     */
   private def incrementalBucketed(spark: SparkSession,
                                   fs: FileSystem,
@@ -332,37 +270,30 @@ object ScdEngine {
                                   targetPath: String,
                                   cfg: ScdConfig,
                                   n: Int,
-                                  contract: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+                                  contract: Option[org.apache.spark.sql.types.StructType]): Boolean = {
     val keys = cfg.uniqueKey.map(resolveCi(batch.columns.toSeq, _))
-    // Manifest-routed bucket set (round-11 verdict task 5): every read
-    // below addresses bucket DIRECTORIES by name, so nothing on the pruned
-    // path ever runs Spark's recursive partition discovery over the whole
-    // table — the metadata cost that was the entire 100 M-row local-batch
-    // slope in Stress13c.
-    val onDisk = bucketsOnDisk(fs, targetPath)
-    def bucketDirs(bs: Seq[Int]): Seq[String] =
-      bs.map(b => s"$targetPath/$BucketCol=$b")
-    // Schema donor for the empty-selection read: the first manifest entry
-    // whose directory VERIFIABLY exists (a stale phantom entry would make
-    // the probe read throw), else ground truth via one listing.
-    lazy val schemaDonor: Seq[Int] = onDisk
-      .find(b => fs.exists(new Path(s"$targetPath/$BucketCol=$b")))
-      .map(Seq(_))
-      .getOrElse(listBucketDirs(fs, targetPath).take(1))
-    // Bucket-dir read with the partition column restored via basePath; an
-    // empty selection degrades to a zero-row, correctly-typed relation
-    // (schema off ONE existing bucket dir — single-directory listing).
-    // Callers pass EXISTENCE-VERIFIED bucket ids (existingBuckets or a
-    // fresh listing) — never raw manifest content.
+    // Tiny driver-side aggregate: which buckets does the batch touch?
+    val touched = batch
+      .select(bucketOf(keys, n).as(BucketCol))
+      .distinct()
+      .collect()
+      .map(_.getInt(0))
+      .sorted
+      .toSeq
+    // Only the touched directories that EXIST are ever listed or read (a
+    // touched bucket with no directory yet contributes no history — its
+    // keys are brand-new): |touched| existence probes, delta-bounded, so
+    // nothing on this path runs Spark's recursive partition discovery over
+    // the whole table.
+    val existing = existingBuckets(fs, targetPath, touched)
+    // Schema donor for the column probe and the empty-selection read: an
+    // existing touched bucket, else ONE top-level listing (only when every
+    // touched bucket is new). None = no bucket directory at all.
+    val donor = existing.headOption.orElse(listBucketDirs(fs, targetPath).headOption)
+    // Bucket-dir read with the partition column restored via basePath.
     def readBuckets(bs: Seq[Int]): DataFrame =
-      if (bs.nonEmpty)
-        spark.read.option("basePath", targetPath)
-          .parquet(bucketDirs(bs): _*)
-      else if (schemaDonor.nonEmpty)
-        spark.read.option("basePath", targetPath)
-          .parquet(bucketDirs(schemaDonor): _*).limit(0)
-      else // no bucket dirs at all (foreign layout): legacy full read
-        spark.read.parquet(targetPath)
+      spark.read.option("basePath", targetPath)
+        .parquet(bs.map(b => s"$targetPath/$BucketCol=$b"): _*)
     // Schema-WIDENING evolution cannot ride the pruned path: rewriting only
     // touched buckets would leave untouched bucket files with the old
     // footer schema, and a later plain parquet read resolves the table
@@ -373,83 +304,38 @@ object ScdEngine {
     // in alignSchemas — neither widens disk, both stay pruned.) The
     // column-set probe reads ONE bucket directory, not the whole table
     // (disk schema is uniform across buckets by construction).
-    val widens = cfg.onSchemaChange == "append_new_columns" && {
-      val tCols = readBuckets(schemaDonor).columns
-        .map(_.toUpperCase).toSet
+    val widens = cfg.onSchemaChange == "append_new_columns" && donor.exists { b =>
+      val tCols = readBuckets(Seq(b)).columns.map(_.toUpperCase).toSet
       batch.columns.exists(c => !tCols.contains(c.toUpperCase))
     }
-    if (widens) {
-      // Full-coverage rewrite: GROUND-TRUTH listing, not the manifest — a
-      // stale manifest missing an on-disk bucket would exclude its history
-      // from the snapshot and the swap would then delete it (silent loss).
-      val target = readBuckets(listBucketDirs(fs, targetPath)).drop(BucketCol)
-      val snapshot = incremental(target, batch, cfg)
-      contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
-      atomicSwap(spark, fs, withBucket(snapshot, cfg, Some(n)), targetPath,
-                 Some(n), contract)
-      return
-    }
-    // Tiny driver-side aggregate: which buckets does the batch touch?
-    val touched = batch
-      .select(bucketOf(keys, n).as(BucketCol))
-      .distinct()
-      .collect()
-      .map(_.getInt(0))
-      .sorted
-    // Listing-pruned scan: only the touched directories that EXIST are
-    // ever listed or read (a touched bucket with no directory yet simply
-    // contributes no history — its keys are brand-new). Existence comes
-    // from per-directory PROBES, not the manifest (ADVICE r12): a stale
-    // manifest could list a deleted bucket (read would throw) or omit an
-    // on-disk one (its history would read empty and the swap would
-    // overwrite it — silent loss). |touched| probes, delta-bounded.
-    val target = readBuckets(existingBuckets(fs, targetPath, touched.toSeq))
-      .drop(BucketCol)
-    val snapshot = incremental(target, batch, cfg)
-    contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
-    val bucketed = withBucket(snapshot, cfg, Some(n))
-
-    // Write the touched buckets to a tmp dir, then swap each bucket directory.
-    val tmp = targetPath + ".tmp"
-    fs.delete(new Path(tmp), true)
-    // repartition on the bucket col: ~1 file per touched bucket directory
-    // instead of tasks × buckets (see atomicSwap)
-    bucketed.repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(tmp)
-    // NOT NULL off the written bytes (narrow column scan of the tmp output);
-    // a violation deletes tmp and throws BEFORE any bucket rename, so the
-    // live table keeps every bucket intact — no partial swap. Untouched
-    // buckets are only re-validated the FIRST time this contract is seen on
-    // this target (marker absent): the pruned path never reads them again,
-    // so a contract added/tightened on an existing table pays one
-    // full-coverage null-count, after which the marker certifies them.
-    try contract.foreach { c =>
-      Contracts.enforceNotNull(spark.read.parquet(tmp), c)
-      if (!fs.exists(contractMarkerPath(targetPath, c)))
-        // untouched buckets by DIRECTORY, off a GROUND-TRUTH listing (rare
-        // full-coverage path: first time this contract is seen) — the
-        // manifest could omit an on-disk bucket, and "validated" must
-        // cover every real directory, not every remembered one
-        Contracts.enforceNotNull(
-          readBuckets(listBucketDirs(fs, targetPath)
-            .filterNot(touched.contains)), c)
-    } catch { case e: Throwable => fs.delete(new Path(tmp), true); throw e }
-    val present = scala.collection.mutable.ArrayBuffer.empty[Int]
+    if (donor.isEmpty || widens) return false
+    // Untouched buckets are validated only the FIRST time this contract is
+    // seen on this target (marker absent): the pruned path never reads them
+    // again, so a contract added/tightened on an existing table pays one
+    // full-coverage null-count (by DIRECTORY, off a listing), after which
+    // the marker certifies them. It runs before any write, so a violation
+    // leaves the table and its neighbours untouched.
+    contract.filterNot(c => fs.exists(contractMarkerPath(targetPath, c)))
+      .foreach { c =>
+        val untouched = listBucketDirs(fs, targetPath).filterNot(touched.contains)
+        if (untouched.nonEmpty) Contracts.enforceNotNull(readBuckets(untouched), c)
+      }
+    val target =
+      (if (existing.nonEmpty) readBuckets(existing) else readBuckets(donor.toSeq).limit(0))
+        .drop(BucketCol)
+    val tmp = writeTmp(spark, fs, incremental(target, batch, cfg), targetPath,
+                       cfg, Some(n), contract)
     for (b <- touched) {
       val dst = new Path(s"$targetPath/$BucketCol=$b")
-      val src = new Path(s"$tmp/$BucketCol=$b")
+      val src = new Path(tmp, s"$BucketCol=$b")
       fs.delete(dst, true)
       // the merged bucket in tmp is now the ONLY copy of its history
-      if (fs.exists(src)) { rename(fs, src, dst); present += b }
+      if (fs.exists(src)) rename(fs, src, dst)
     }
-    fs.delete(new Path(tmp), true)
-    // Manifest forward: survivors = (previous − touched) ∪ the touched
-    // buckets the merge actually wrote (a touched bucket can vanish only
-    // when hard deletes empty it).
-    writeBucketManifest(fs, targetPath,
-      (onDisk.filterNot(touched.contains) ++ present).sorted)
+    fs.delete(tmp, true)
     contract.foreach(c =>
       fs.create(contractMarkerPath(targetPath, c), true).close())
+    true
   }
 
   /** `fs.rename` that fails loudly: a false return throws before the
@@ -459,47 +345,64 @@ object ScdEngine {
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename $src -> $dst failed; $src is kept")
 
+  /** Stage `snapshot` as `<target>.tmp`, checked against `contract`: the
+    * structural clauses off the plan schema before anything is written,
+    * then the write (bucket column added and rows clustered onto it when
+    * bucketed), then declared NOT NULL off the WRITTEN bytes (a narrow
+    * parquet column scan — the snapshot pipeline is not re-executed). A
+    * violation deletes the tmp directory and rethrows, so the caller's
+    * swap never starts and the live table survives untouched.
+    */
+  private def writeTmp(spark: SparkSession,
+                       fs: FileSystem,
+                       snapshot: DataFrame,
+                       targetPath: String,
+                       cfg: ScdConfig,
+                       numBuckets: Option[Int],
+                       contract: Option[org.apache.spark.sql.types.StructType]): Path = {
+    contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
+    val tmp = new Path(targetPath + ".tmp")
+    fs.delete(tmp, true)
+    // Cluster rows onto their bucket BEFORE the partitioned write: without
+    // it every write task appends to every bucket directory — tasks ×
+    // buckets files (32 × 1000 = 32k at Stress10's probe, a ~100 s flat
+    // small-files tax regardless of data size, and the metadata storm that
+    // kills object-store listings at 100 TB). Repartitioned on the bucket
+    // column, each bucket directory gets ~1 file.
+    val writer = numBuckets match {
+      case Some(n) =>
+        val keys = cfg.uniqueKey.map(resolveCi(snapshot.columns.toSeq, _))
+        snapshot.withColumn(BucketCol, bucketOf(keys, n))
+          .repartition(col(BucketCol)).write.partitionBy(BucketCol)
+      case None => snapshot.write
+    }
+    writer.mode("overwrite").parquet(tmp.toString)
+    try contract.foreach(c =>
+      Contracts.enforceNotNull(spark.read.parquet(tmp.toString), c))
+    catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    tmp
+  }
+
   /** Write-new-dir-and-swap (SURVEY.md §4.3.2): breaks the read-write cycle on
     * `targetPath` (the snapshot's lineage reads the same path it replaces).
-    * With a `contract`, declared NOT NULL is settled against the WRITTEN tmp
-    * output (a narrow parquet column scan — the snapshot pipeline is not
-    * re-executed); a violation deletes tmp and throws before any rename, so
-    * the old table survives untouched. A passing full-snapshot validation
-    * certifies every row, so the contract marker lands post-swap.
+    * The snapshot is staged and checked by [[writeTmp]]; only then is the
+    * old table moved aside. A passing full-snapshot validation certifies
+    * every row, so the contract marker lands post-swap.
     */
   private def atomicSwap(spark: SparkSession,
                          fs: FileSystem,
                          snapshot: DataFrame,
                          targetPath: String,
+                         cfg: ScdConfig,
                          numBuckets: Option[Int],
-                         contract: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    val tmp = new Path(targetPath + ".tmp")
+                         contract: Option[org.apache.spark.sql.types.StructType]): Unit = {
+    val tmp = writeTmp(spark, fs, snapshot, targetPath, cfg, numBuckets, contract)
     val old = new Path(targetPath + ".old")
     val dst = new Path(targetPath)
-    fs.delete(tmp, true)
-    // Cluster rows onto their bucket BEFORE the partitioned write: without
-    // it every write task appends to every touched bucket directory —
-    // tasks × buckets files (32 × 1000 = 32k at Stress10's probe, a ~100 s
-    // flat small-files tax regardless of data size, and the metadata storm
-    // that kills object-store listings at 100 TB). Repartitioned on the
-    // bucket column, each bucket directory gets exactly the files of the
-    // partitions holding it (~1 per bucket).
-    val clustered = numBuckets.fold(snapshot)(_ =>
-      snapshot.repartition(org.apache.spark.sql.functions.col(BucketCol)))
-    val writer = clustered.write.mode("overwrite")
-    numBuckets.fold(writer)(_ => writer.partitionBy(BucketCol)).parquet(tmp.toString)
-    try contract.foreach(c =>
-      Contracts.enforceNotNull(spark.read.parquet(tmp.toString), c))
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
     fs.delete(old, true)
     if (fs.exists(dst)) rename(fs, dst, old)
     rename(fs, tmp, dst) // on failure `.old` holds the previous table
     fs.delete(old, true)
-    // Seed the bucket manifest from ONE top-level listing of the freshly
-    // written table — every later pruned incremental run then reads bucket
-    // sets from the manifest, never from directory discovery.
-    if (numBuckets.isDefined)
-      writeBucketManifest(fs, targetPath, listBucketDirs(fs, targetPath))
     contract.foreach(c =>
       fs.create(contractMarkerPath(targetPath, c), true).close())
   }

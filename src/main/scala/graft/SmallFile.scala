@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Whole-file UTF-8 reads and atomic publishes for the tables' small
-  * control files (`_SCD_BUCKETS`, `_MANIFEST`, transaction pin files).
+  * control files (`_MANIFEST`, transaction pin files).
   * Parsing stays with each caller: the formats and their fallback rules
   * differ.
   */

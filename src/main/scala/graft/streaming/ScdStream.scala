@@ -11,7 +11,7 @@ import graft.{ScdConfig, ScdEngine, VersionedTable}
   * `dbt run` reconciles newly-arrived rows into the dimension
   * (`/root/reference/README.md:162-178`); it has no streaming operators
   * (SURVEY.md §2.10). The streaming-native equivalent is therefore exact:
-  * every micro-batch is one `ScdEngine.run`. Out-of-order and late events
+  * every micro-batch is one `ScdEngine.merge`. Out-of-order and late events
   * need no watermark handling — re-slotting history on late arrival is what
   * the SCD2 merge itself does (`update_all_previous_records` +
   * `collapse_redundant_versions`), so correctness is independent of trigger
@@ -44,9 +44,8 @@ object ScdStream {
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         if (!batch.isEmpty)
-          ScdEngine.run(batch.sparkSession, batch.toDF(), targetPath, cfg,
-                        numBuckets = numBuckets)
-        ()
+          ScdEngine.merge(batch.sparkSession, batch.toDF(), targetPath, cfg,
+                          numBuckets = numBuckets)
       }
 
   /** [[scdSink]] against a [[graft.VersionedTable]] root, with exact

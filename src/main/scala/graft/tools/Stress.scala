@@ -4,7 +4,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ScdConfig
+import graft.{ScdConfig, ScdEngine}
 import graft.operators.{Dedup, Profile, Rolling, Scd2, Sessionize, TextAnalysis}
 import graft.sources.Tables
 
@@ -16,7 +16,11 @@ import graft.sources.Tables
   * docs from sf0.1) needs a large heap:
   * `SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.Stress <sfDir> 100"`.
   *
+  * The `bucketed-merge` scenario times the key-bucketed `ScdEngine` path
+  * instead; see [[bucketedMerge]].
+  *
   * Usage: runMain graft.tools.Stress [sfDir] [k]
+  *        runMain graft.tools.Stress bucketed-merge
   */
 object Stress {
   def main(args: Array[String]): Unit = {
@@ -28,7 +32,65 @@ object Stress {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (sfDir == "bucketed-merge") bucketedMerge(spark)
+    else slopes(spark, sfDir, k)
+    spark.stop()
+  }
 
+  /** Key-bucketed SCD maintenance at 10 M keys / 80 buckets and 100 M keys /
+    * 800 buckets, with fixed 10k-row batches confined to buckets 0..7. Per
+    * size it times the initial load (writes the whole history), one
+    * `ScdEngine.merge` (the maintenance step alone: its cost should follow
+    * the touched buckets, not the dimension size) and one `ScdEngine.run`
+    * (the same step plus the full read-back, which pays the one
+    * whole-table partition discovery).
+    */
+  private def bucketedMerge(spark: SparkSession): Unit = {
+    def time(label: String)(f: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      f
+      println(f"[stress] $label%-46s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+    }
+    val base = java.nio.file.Files.createTempDirectory("stress-bucketed-merge")
+    val cfg = ScdConfig(uniqueKey = Seq("id"), updatedAtCol = "updated_at")
+
+    def history(h: Long): DataFrame =
+      spark.range(h).select(col("id"),
+        concat(lit("name"), pmod(col("id"), lit(97L))).as("name"),
+        (col("id") % 1000L).as("v"),
+        lit("2025-01-01 00:00:00").cast("timestamp").as("updated_at"))
+
+    def localBatch(h: Long, n: Int, stamp: String): DataFrame = {
+      val b = spark.range(h)
+        .filter(ScdEngine.bucketOf(Seq("id"), n) < lit(8))
+        .limit(10000)
+        .select(col("id"),
+          concat(lit("renamed"), col("id")).as("name"),
+          (col("id") % 1000L + 1L).as("v"),
+          lit(stamp).cast("timestamp").as("updated_at"))
+        .localCheckpoint(false)
+      b.count()
+      b
+    }
+
+    for ((h, n) <- Seq((10000000L, 80), (100000000L, 800))) {
+      val path = s"$base/h$h"
+      time(s"initial            h=$h buckets=$n") {
+        ScdEngine.merge(spark, history(h), path, cfg, numBuckets = Some(n))
+      }
+      val lb1 = localBatch(h, n, "2025-02-01 00:00:00")
+      time(s"merge local-batch  h=$h buckets=$n batch=10k") {
+        ScdEngine.merge(spark, lb1, path, cfg, numBuckets = Some(n))
+      }
+      val lb2 = localBatch(h, n, "2025-03-01 00:00:00")
+      time(s"run   local-batch  h=$h buckets=$n batch=10k (incl read-back)") {
+        ScdEngine.run(spark, lb2, path, cfg, numBuckets = Some(n))
+      }
+    }
+  }
+
+  /** The scaling slopes: each pipeline at 1× and k× the input. */
+  private def slopes(spark: SparkSession, sfDir: String, k: Int): Unit = {
     def time(label: String)(df: => DataFrame): Double = {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
@@ -308,6 +370,5 @@ object Stress {
     val s1 = time(s"scd2 initial ${k}x uniform")(Scd2.initialLoad(evK, evCfg))
     val s2 = time(s"scd2 initial ${k}x 20%-hot-key")(Scd2.initialLoad(evHot, evCfg))
     println(f"[stress] hot-key slowdown ${s2 / s1}%.2f (1.0 = skew-free)")
-    spark.stop()
   }
 }

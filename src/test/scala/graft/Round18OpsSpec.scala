@@ -217,7 +217,8 @@ class Round18OpsSpec extends SparkTestBase {
   }
 
   // ---- stale _SCD_BUCKETS manifest (ADVICE r12: pruning hint, never
-  // load-bearing) ----
+  // load-bearing). The engine no longer writes or reads one; the file here
+  // stands for one left behind by an older table and must change nothing ----
 
   test("stale bucket manifest: phantoms never read, unlisted buckets never lost") {
     import spark.implicits._
@@ -229,8 +230,9 @@ class Round18OpsSpec extends SparkTestBase {
     ScdEngine.run(spark, batch(0L until 50L, 1, "2025-01-01 00:00:00"),
                   path, cfg, numBuckets = Some(8))
     val mf = java.nio.file.Paths.get(path, "_SCD_BUCKETS")
-    val real = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty).map(_.toInt)
+    val real = new java.io.File(path).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("_scd2_bucket="))
+      .map(_.getName.stripPrefix("_scd2_bucket=").toInt).sorted
     assert(real.size >= 3, "fixture needs several buckets")
     // Tamper the manifest as a crash between rename-loop and rewrite
     // would: one REAL bucket forgotten, one PHANTOM bucket invented.

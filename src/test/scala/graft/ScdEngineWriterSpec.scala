@@ -77,6 +77,24 @@ class ScdEngineWriterSpec extends SparkTestBase {
     assert(out.filter($"k" =!= 2).count() === 2) // untouched keys intact
   }
 
+  test("bucketed merge into an unbucketed table rewrites it whole") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-writer4").toString
+    val path = s"$dir/dim"
+    val keys = (1 to 20).map(k => (k, "a", ts("2025-01-01 00:00:00")))
+      .toDF("k", "v", "_updated_at")
+    ScdEngine.merge(spark, keys, path, cfg)
+    ScdEngine.merge(spark, batch("b", "2025-01-02 00:00:00"), path, cfg,
+                    numBuckets = Some(4))
+
+    val out = spark.read.parquet(path)
+    assert(out.count() === 21) // 20 keys + key 1's new version
+    assert(out.filter($"k" === 1 && $"_is_current").select("v").as[String]
+      .collect().toSeq === Seq("b"))
+    val rootParts = new java.io.File(path).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    assert(rootParts.isEmpty, s"root part files left: ${rootParts.toSeq}")
+  }
+
   // Runs `body` on a fresh local directory `d`, also addressed through
   // the `norename://` scheme (see [[NoRenameFs]]) as `root`; whatever
   // `body` sets `NoRenameFs.refuse` to is reset afterwards.
