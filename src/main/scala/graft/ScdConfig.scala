@@ -81,9 +81,15 @@ final case class ScdConfig(
   def effectiveCollapse: Boolean =
     collapseRedundantVersions && updateAllPreviousRecords
 
-  /** Columns a matched MERGE row updates (`scd_plan.sql:182-187`). */
+  /** Columns a matched MERGE row updates (`scd_plan.sql:182-187`).
+    * Deliberate divergence: with update_all_previous_records the timeline
+    * sees the key's whole history, so `_valid_from` is recomputed too. The
+    * reference keeps the stored one, and a row back-dated before a key's
+    * first version then leaves that version's created_at/deleted_at start
+    * in place, overlapping the new first version (incremental ≠ full refresh).
+    */
   def mergeUpdateCols: Seq[String] =
-    if (updateAllPreviousRecords) Seq(isCurrentCol, validToCol, changeTypeCol)
+    if (updateAllPreviousRecords) Seq(isCurrentCol, validFromCol, validToCol, changeTypeCol)
     else Seq(isCurrentCol, validToCol)
 
   /** Fail-fast validation, mirroring the compile errors of

@@ -83,8 +83,8 @@ object SparkEntry {
     "q04_scd2_incremental" -> ((s, dir) => {
       val all = ev(s, dir)
       // Materialize the target once, as production would read it from storage
-      // (the merge pipeline references the target twice: affected-key
-      // semi-join + the merge join itself).
+      // (the merge pipeline references the target twice: the affected-key
+      // semi-join and its anti-join complement, the rows passed through).
       val target = Scd2.initialLoad(all.filter(col("event_id") % 2 === 0), evCfg)
         .localCheckpoint()
       Scd2.incremental(target, all.filter(col("event_id") % 2 === 1), evCfg)

@@ -14,10 +14,10 @@ import graft.functions.ScdFunctions._
   *   - incremental   -> `get_incremental_scd2_sql.sql:75-268` (the 9-CTE MERGE)
   *
   * All computation is one lazy DataFrame DAG per call — Catalyst plans the
-  * joins/windows; the only shuffles are the business-key window exchanges and
-  * the merge join. The batch side is small relative to the dimension, so the
-  * affected-key semi-join (J1) keeps incremental cost proportional to batch
-  * size, not table size.
+  * joins/windows. The batch side is small relative to the dimension, so its
+  * distinct keys broadcast into the affected-key semi-join (J1) and its
+  * anti-join complement, and only the affected slice of the target reaches
+  * the business-key window exchange: incremental cost tracks batch size.
   */
 object Scd2 {
 
@@ -27,8 +27,8 @@ object Scd2 {
   // Spark has per-column null-safe equality (`<=>`) natively, so the version
   // identity stays as raw (unique_key, updated_at) tuples — same NULL≡NULL
   // semantics (the J1 bug fix, `get_incremental_scd2_sql.sql:104-110`),
-  // no per-row hashing of both merge sides, native-typed join keys instead
-  // of 32-char strings in every shuffle, and none of concat-ws's separator
+  // no per-row key hashing, native-typed window keys instead of 32-char
+  // strings in every shuffle, and none of concat-ws's separator
   // collisions. Only the content hash remains a real md5.
   val HashCol = "_scd2_hash" // change-detection content hash
   val PrevHashCol = "_prev_hash"
@@ -60,17 +60,50 @@ object Scd2 {
     * (unique_key, updated_at) columns (see note on the key hashes above).
     * Mirrors the `using (...)` subquery of `get_incremental_scd2_sql.sql:76-236`.
     *
-    * The batch rows plus the persisted versions of the keys it touches run
-    * through one [[timeline]] pass: rows it keeps are upserts carrying
-    * recomputed audit columns, and persisted rows it does not keep are the
-    * redundant versions, deletes with NULL audit columns. One lineage with
-    * one consumer, so building the relation runs no Spark job and its plan
-    * holds no materialized leaf.
+    * Rows the [[affected]] timeline keeps are upserts carrying recomputed
+    * audit columns; persisted rows it does not keep are the redundant
+    * versions, deletes with NULL audit columns. One lineage with one
+    * consumer, so building the relation runs no Spark job and its plan holds
+    * no materialized leaf.
     *
-    * Exposed separately so callers can inspect the planned actions; `incremental`
-    * applies it to the target snapshot.
+    * Exposed separately so callers can inspect the planned actions;
+    * `incremental` returns the snapshot they produce.
     */
   def mergeSource(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
+    val (destCols, _, merged) = affected(target, delta, cfg)
+    merged.select(destCols.map(col) ++
+                    cfg.auditColumns.map(c => when(col(KeepCol), col(c)).as(c)) :+
+                    when(col(KeepCol), lit("upsert")).otherwise(lit("delete")).as(OpCol): _*)
+  }
+
+  /** Incremental update: the target snapshot the reference MERGE
+    * (`get_incremental_scd2_sql.sql:238-268`, SURVEY.md §4.3) leaves. The
+    * [[affected]] timeline already pairs each batch version with its stored
+    * one (previous wins the dedup), so no join replays the MERGE: the target
+    * rows the affected-key probe does not select pass through as stored, and
+    * the rows the timeline keeps replace the rest. A kept persisted row takes
+    * the recomputed `merge_update_cols` and keeps its other stored audit
+    * columns (the matched update); persisted rows not kept are the deletes.
+    */
+  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
+    val (_, untouched, merged) = affected(target, delta, cfg)
+    val stored = cfg.auditColumns.filterNot(cfg.mergeUpdateCols.contains)
+    val isPrevious = col(SourceCol) === "previous"
+    val out = target.columns.map { c =>
+      stored.find(_.equalsIgnoreCase(c))
+        .fold(col(c))(a => when(isPrevious, col(s"_t_$a")).otherwise(col(a))).as(c)
+    }
+    untouched.unionByName(merged.filter(col(KeepCol)).select(out: _*))
+  }
+
+  /** The batch's business columns, the target rows it cannot touch, and the
+    * [[timeline]] of the batch ∪ the persisted versions of the keys it
+    * touches. Persisted rows also carry their stored audit columns as
+    * `_t_<col>` (NULL on batch rows).
+    */
+  private def affected(target: DataFrame,
+                       delta: DataFrame,
+                       cfg: ScdConfig): (Seq[String], DataFrame, DataFrame) = {
     cfg.validate()
     val deltaCols = delta.columns.toSeq
     cfg.validateSchema(deltaCols)
@@ -103,17 +136,16 @@ object Scd2 {
       else keysMatch && col(s"_n_$updatedAt") <= col(validTo)
     val previousRecord = tagged(
       target.join(probe, semiCond, "left_semi")
-        .select(destCols.map(c => col(resolveCi(targetCols, c)).as(c)): _*),
+        .select(destCols.map(c => col(resolveCi(targetCols, c)).as(c)) ++
+                  cfg.auditColumns.map(a => col(resolveCi(targetCols, a)).as(s"_t_$a")): _*),
       "previous", check)
 
     // all_records (:123-145) through scd2_versions + redundant_versions
     // (:149-229)
-    timeline(newRecords.unionByName(previousRecord), cfg, keys, updatedAt,
-             destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol)))
-      .select(destCols.map(col) ++
-                cfg.auditColumns.map(c => when(col(KeepCol), col(c)).as(c)) :+
-                when(col(KeepCol), lit("upsert")).otherwise(lit("delete"))
-                  .as(OpCol): _*)
+    (destCols,
+     target.join(probe, semiCond, "left_anti"),
+     timeline(newRecords.unionByName(previousRecord, allowMissingColumns = true),
+              cfg, keys, updatedAt, destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol))))
   }
 
   /** `df` with the source tag ('new' or 'previous'), the reference's dedup
@@ -135,8 +167,8 @@ object Scd2 {
     *   4. kept rows, plus persisted rows that are not kept (the redundant
     *      versions a merge deletes);
     *   5. audit columns over the kept rows, partitioned by (keys, `_keep`);
-    *      on the other rows they are meaningless and [[mergeSource]] NULLs
-    *      them.
+    *      on the other rows they are meaningless: [[mergeSource]] NULLs
+    *      them and [[incremental]] drops the rows.
     *
     * `loadedAt` names the load-watermark column that picks each content
     * run's winner when collapsing; without it the run opener wins.
@@ -194,56 +226,6 @@ object Scd2 {
                      cfg, keys :+ KeepCol, updatedAt)
   }
 
-  /** Incremental update: apply the merge source to the existing target and
-    * return the resulting snapshot. Join-based rewrite of the reference MERGE
-    * (`get_incremental_scd2_sql.sql:238-268`, SURVEY.md §4.3): full-outer join
-    * null-safely on the version identity (unique_key, updated_at), then per row
-    *   - matched ∧ op='delete'  -> drop (version collapsed out of the timeline)
-    *   - matched ∧ op='upsert'  -> target row with ONLY `merge_update_cols`
-    *                               replaced ([_is_current, _valid_to]
-    *                               (+ _change_type when update_all_previous_records))
-    *   - not matched ∧ 'upsert' -> insert the computed row
-    *   - target-only            -> keep unchanged
-    */
-  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
-    val source = mergeSource(target, delta, cfg)
-    applyMerge(target, source, cfg)
-  }
-
-  /** Apply a computed merge source to the target snapshot (see `incremental`). */
-  def applyMerge(target: DataFrame, source: DataFrame, cfg: ScdConfig): DataFrame = {
-    val targetCols = target.columns.toSeq
-    val keys = cfg.uniqueKey.map(resolveCi(targetCols, _))
-    val updatedAt = resolveCi(targetCols, cfg.updatedAtCol)
-    val updateCols = cfg.mergeUpdateCols.map(_.toUpperCase).toSet
-
-    // MERGE ON the version identity, null-safely — the Spark-native shape of
-    // the reference's md5-key join (`get_incremental_scd2_sql.sql:240-246`):
-    // typed join keys, nothing hashed on either side.
-    val t = target.withColumn("_t_exists", lit(true))
-    val s = source.columns.foldLeft(source)((df, c) => df.withColumnRenamed(c, s"_s_$c"))
-      .withColumn("_s_exists", lit(true))
-
-    val mergeOn = (keys :+ updatedAt)
-      .map(k => col(k) <=> col(s"_s_$k")).reduce(_ && _)
-    val joined = t.join(s, mergeOn, "full_outer")
-    val matched = col("_t_exists").isNotNull && col("_s_exists").isNotNull
-    val sourceOnly = col("_t_exists").isNull
-    val isDelete = col(s"_s_$OpCol") === "delete"
-
-    val kept = joined.filter(!(matched && isDelete) && !(sourceOnly && isDelete))
-    val out = targetCols.map { c =>
-      val fromSource = col(s"_s_$c")
-      val expr =
-        if (updateCols.contains(c.toUpperCase))
-          when(sourceOnly || matched, fromSource).otherwise(col(c))
-        else
-          when(sourceOnly, fromSource).otherwise(col(c))
-      expr.as(c)
-    }
-    kept.select(out: _*)
-  }
-
   /** The four audit columns over a canonical timeline (W3-W6).
     *
     * The timeline is unique per (keys, updated_at) here (it dedups first),
@@ -279,13 +261,12 @@ object Scd2 {
     * exported changelog a warehouse `MERGE ... OUTPUT` would produce, built
     * here from the two states.
     *
-    * Same join shape as the merge itself: one full-outer sort-merge join on
-    * the native (unique_key, updated_at) tuple with per-column `<=>` (NULL
-    * key values match NULL, as everywhere in the engine). Presence is
-    * tracked with marker literals, NOT key-null checks, precisely because
-    * NULL keys are legal. At 100 TB both snapshots shuffle once; with the
-    * bucketed layout ([[graft.ScdEngine]]) the join is co-partitioned and
-    * the exchange is elided.
+    * One full-outer sort-merge join on the native (unique_key, updated_at)
+    * tuple with per-column `<=>` (NULL key values match NULL, as everywhere
+    * in the engine). Presence is tracked with marker literals, NOT key-null
+    * checks, precisely because NULL keys are legal. At 100 TB both snapshots
+    * shuffle once; with the bucketed layout ([[graft.ScdEngine]]) the join
+    * is co-partitioned and the exchange is elided.
     *
     * Output: the version key (coalesced across sides), `change_kind`, and
     * the old/new audit-column pairs.
@@ -459,10 +440,9 @@ object Scd2 {
     * consumer's operator — a changelog feed plus the previous snapshot
     * reconstructs the table without re-reading the producer's storage.
     *
-    * Join shape mirrors the merge: one full-outer-free pass — an anti join
-    * for deletes and a left join for updates, both on the native null-safe
-    * version key; the changelog side is batch-sized, so both joins
-    * broadcast at scale.
+    * One full-outer-free pass: an anti join for deletes and a left join for
+    * updates, both on the native null-safe version key; the changelog side
+    * is batch-sized, so both joins broadcast at scale.
     */
   def applyDelta(oldSnap: DataFrame,
                  delta: DataFrame,

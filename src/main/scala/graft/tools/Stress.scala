@@ -4,7 +4,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{ScdConfig, ScdEngine}
+import graft.{ScdConfig, ScdEngine, SparkEntry}
 import graft.operators.{Dedup, Profile, Rolling, Scd2, Sessionize, TextAnalysis}
 import graft.sources.Tables
 
@@ -17,15 +17,18 @@ import graft.sources.Tables
   * `SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.Stress <sfDir> 100"`.
   *
   * The `bucketed-merge` scenario times the key-bucketed `ScdEngine` path
-  * instead; see [[bucketedMerge]].
+  * instead; see [[bucketedMerge]]. The `explain` mode prints
+  * `explain("formatted")` for the named SparkEntry queries (all when none
+  * are named).
   *
   * Usage: runMain graft.tools.Stress [sfDir] [k]
   *        runMain graft.tools.Stress bucketed-merge
+  *        runMain graft.tools.Stress explain <sfDir> [query ...]
   */
 object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val k = args.lift(1).map(_.toInt).getOrElse(10)
+    lazy val k = args.lift(1).map(_.toInt).getOrElse(10)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.session.timeZone", "UTC")
@@ -33,8 +36,18 @@ object Stress {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (sfDir == "bucketed-merge") bucketedMerge(spark)
+    else if (sfDir == "explain") explain(spark, args.drop(1).toSeq)
     else slopes(spark, sfDir, k)
     spark.stop()
+  }
+
+  private def explain(spark: SparkSession, args: Seq[String]): Unit = {
+    require(args.nonEmpty, "usage: Stress explain <sfDir> [query ...]")
+    val names = if (args.size > 1) args.tail else SparkEntry.queries.keys.toSeq.sorted
+    for (n <- names; fn <- SparkEntry.queries.get(n)) {
+      println(s"\n===== $n =====")
+      fn(spark, args.head).explain("formatted")
+    }
   }
 
   /** Key-bucketed SCD maintenance at 10 M keys / 80 buckets and 100 M keys /

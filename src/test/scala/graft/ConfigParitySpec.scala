@@ -63,6 +63,23 @@ class ConfigParitySpec extends SparkTestBase {
     assert(out.filter($"_is_current").count() === 1)
     val bounds = out.select("_valid_from", "_valid_to").collect()
     assert(bounds(0).getTimestamp(1) === bounds(1).getTimestamp(0)) // healed chain
+
+    // with a configured created_at, the stored first version's start is
+    // kept too (outside the pruned merge-update set), while the default
+    // config recomputes it from the key's whole history
+    val created = base.copy(createdAtCol = Some("_created_at"))
+    val withCreated = operators.Scd2.initialLoad(
+      Seq((1, "b", ts("2024-12-01 00:00:00"), ts("2025-01-03 00:00:00")),
+          (1, "c", ts("2024-12-01 00:00:00"), ts("2025-01-05 00:00:00")))
+        .toDF("k", "v", "_created_at", "_updated_at"),
+      created).localCheckpoint()
+    val early = Seq((1, "a", ts("2024-12-01 00:00:00"), ts("2025-01-01 00:00:00")))
+      .toDF("k", "v", "_created_at", "_updated_at")
+    def startOfB(c: ScdConfig) = operators.Scd2.incremental(withCreated, early, c)
+      .filter($"v" === "b").select("_valid_from").as[java.sql.Timestamp].collect().toSeq
+    assert(startOfB(created.copy(updateAllPreviousRecords = false)) ===
+      Seq(ts("2024-12-01 00:00:00")))
+    assert(startOfB(created) === Seq(ts("2025-01-03 00:00:00")))
   }
 
   test("scd1 merges NULL-bearing keys null-safely (documented divergence)") {

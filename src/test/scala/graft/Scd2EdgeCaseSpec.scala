@@ -209,4 +209,47 @@ class Scd2EdgeCaseSpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert("Exchange ".r.findAllIn(plan).size === 1, plan)
   }
+
+  test("a row back-dated before a key's first version moves that version's start") {
+    val session = spark
+    import session.implicits._
+    // key 1 is stored at 01-05, created 2024-12-01; the batch back-dates a
+    // version to 01-02. The stored row stops being the first version, so
+    // its _valid_from must become its own updated_at, as a full refresh
+    // computes it.
+    def rows(r: Seq[(Int, String, String)]): DataFrame =
+      r.map { case (k, v, u) => (k, v, ts("2024-12-01 00:00:00"), ts(u)) }
+        .toDF("k", "v", "_created_at", "_updated_at")
+        .withColumn("deleted_at", lit(null).cast("timestamp"))
+    val history = rows(Seq((1, "b", "2025-01-05 00:00:00"), (2, "a", "2025-01-01 00:00:00")))
+    val batch = rows(Seq((1, "a", "2025-01-02 00:00:00")))
+    val created = ScdConfig(uniqueKey = Seq("k"), createdAtCol = Some("_created_at"))
+    for (cfg <- Seq(created, created.copy(deletedAtCol = Some("deleted_at")))) {
+      val merged = Scd2.incremental(Scd2.initialLoad(history, cfg), batch, cfg).cache()
+      val full = Scd2.initialLoad(history.unionByName(batch), cfg)
+      assert(merged.exceptAll(full).count() === 0, s"$cfg: extra rows")
+      assert(full.exceptAll(merged).count() === 0, s"$cfg: missing rows")
+      assertInvariantsGreen(merged, cfg)
+      merged.unpersist()
+    }
+  }
+
+  test("the incremental merge plans no full-outer join and no version-key exchange") {
+    val session = spark
+    import session.implicits._
+    // the timeline already pairs batch and stored versions; nothing may
+    // re-match them on the null-safe (keys, updated_at) identity, whose
+    // coalesce/isnull join keys can reuse no business-key exchange
+    val cfg = ScdConfig(uniqueKey = Seq("k"))
+    val target = Scd2.initialLoad(
+      Seq((1, "a", ts("2025-01-01 00:00:00")), (2, "a", ts("2025-01-01 00:00:00")))
+        .toDF("k", "v", "_updated_at"), cfg)
+    val batch = Seq((1, "b", ts("2025-01-02 00:00:00"))).toDF("k", "v", "_updated_at")
+    for (c <- Seq(cfg, cfg.copy(updateAllPreviousRecords = false))) {
+      val plan = Scd2.incremental(target, batch, c).queryExecution.executedPlan.toString
+      assert(!plan.contains("FullOuter"), plan)
+      assert("hashpartitioning\\([^\n]*(coalesce|isnull)\\(_updated_at".r
+               .findFirstIn(plan).isEmpty, plan)
+    }
+  }
 }

@@ -1,19 +1,25 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate: for each query in
 outDir, run its oracle SQL in DuckDB over the same sf dir's parquet tables
-and compare (rows, schema-insensitive column-name-sorted values)."""
+and compare (rows, schema-insensitive column-name-sorted values).
+
+Usage: check_oracle.py <sfDir> <outDir> [query ...]
+With no query names every oracle_sql.json entry is checked; with names,
+exactly those (a named query without Spark output or oracle still FAILs)."""
 import sys, json, glob
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=()):
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     failures = 0
-    for name in sorted(oracles):
+    for name in sorted(names or oracles):
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle"); failures += 1; continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output"); failures += 1; continue
@@ -51,4 +57,4 @@ def main(sf_dir, out_dir):
     sys.exit(1 if failures else 0)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main(sys.argv[1], sys.argv[2], sys.argv[3:])
