@@ -3,8 +3,11 @@ package graft
 import java.net.URI
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.ScdFunctions._
 import graft.operators.{Scd01, Scd2}
@@ -28,12 +31,18 @@ import graft.operators.{Scd01, Scd2}
   * wholly inside one bucket, and every operator in the engine partitions its
   * work by business key, so an incremental run:
   *
-  *   1. computes the distinct buckets touched by the delta batch (a tiny
-  *      aggregate over the batch),
+  *   1. finds the buckets the delta batch touches in one job (each
+  *      partition of the cached batch returns its set of bucket ids),
   *   2. reads ONLY those bucket directories that exist, found by one
   *      existence probe each (untouched buckets are never listed or read),
-  *   3. runs the merge over the pruned slice,
-  *   4. rewrites ONLY the touched bucket directories.
+  *      with the data schema taken from one part file's footer, so no
+  *      schema-inference job runs,
+  *   3. merges batch ∪ slice over ONE exchange on the bucket column
+  *      ([[Scd2.incrementalClustered]]; SCD2),
+  *   4. rewrites ONLY the touched bucket directories; the write reuses the
+  *      merge's clustering, so the whole merge is three jobs: the touched
+  *      buckets, the exchange, the write (plus Spark's parallel listing
+  *      job when more than 32 touched buckets exist).
   *
   * Incremental cost is therefore ∝ batch size (+ affected-key history), not
   * dimension size — the property Snowflake's micro-partition pruning gives the
@@ -191,11 +200,26 @@ object ScdEngine {
     * predicated away re-enters as brand-new — the pruning trade-off is the
     * caller's to make.
     */
-  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
+  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
+    incremental(target, delta, cfg, numBuckets = None)
+
+  /** [[incremental]]; with `numBuckets` (SCD2 only) `target` is a bucketed
+    * slice that keeps its [[BucketCol]], the batch gets its own, and the
+    * merge clusters on it ([[Scd2.incrementalClustered]]).
+    */
+  private def incremental(target: DataFrame,
+                          delta: DataFrame,
+                          cfg: ScdConfig,
+                          numBuckets: Option[Int]): DataFrame = {
     val (t, b) = alignSchemas(target, delta, cfg)
-    def mergeInto(slice: DataFrame) =
-      if (cfg.scdType == 2) Scd2.incremental(slice, b, cfg)
-      else Scd01.incremental(slice, b, cfg)
+    def mergeInto(slice: DataFrame) = (cfg.scdType, numBuckets) match {
+      case (2, Some(n)) =>
+        val keys = cfg.uniqueKey.map(resolveCi(b.columns.toSeq, _))
+        Scd2.incrementalClustered(slice, b.withColumn(BucketCol, bucketOf(keys, n)),
+                                  cfg, BucketCol)
+      case (2, None) => Scd2.incremental(slice, b, cfg)
+      case _ => Scd01.incremental(slice, b, cfg)
+    }
     if (cfg.incrementalPredicates.isEmpty) mergeInto(t)
     else {
       val p = cfg.incrementalPredicates.map(expr).reduce(_ && _)
@@ -216,15 +240,16 @@ object ScdEngine {
     *    typed NULLs for target-only columns (a column REMOVED from the
     *    source keeps its recorded history; new versions carry NULL).
     *
-    * Audit columns live only on the target by construction and never count
-    * as drift. Pure projection work — no extra shuffle or scan at any scale.
+    * Audit columns and the [[BucketCol]] of a bucketed slice live only on
+    * the target by construction and never count as drift. Pure projection
+    * work — no extra shuffle or scan at any scale.
     */
   def alignSchemas(target: DataFrame,
                    batch: DataFrame,
                    cfg: ScdConfig): (DataFrame, DataFrame) = {
     val tSet = target.columns.map(_.toUpperCase).toSet
     val bSet = batch.columns.map(_.toUpperCase).toSet
-    val audit = cfg.auditColumns.map(_.toUpperCase).toSet
+    val audit = (cfg.auditColumns :+ BucketCol).map(_.toUpperCase).toSet
     val newCols = batch.columns.toSeq
       .filterNot(c => tSet.contains(c.toUpperCase))
     val removedCols = target.columns.toSeq
@@ -272,14 +297,12 @@ object ScdEngine {
                                   n: Int,
                                   contract: Option[org.apache.spark.sql.types.StructType]): Boolean = {
     val keys = cfg.uniqueKey.map(resolveCi(batch.columns.toSeq, _))
-    // Tiny driver-side aggregate: which buckets does the batch touch?
-    val touched = batch
-      .select(bucketOf(keys, n).as(BucketCol))
-      .distinct()
-      .collect()
-      .map(_.getInt(0))
-      .sorted
-      .toSeq
+    // Which buckets does the batch touch? One job over the cached batch
+    // (it also fills the cache): each partition returns its set of bucket
+    // ids and the driver unions them, with no exchange.
+    val touched = batch.select(bucketOf(keys, n)).rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+      .collect().flatten.distinct.sorted.toSeq
     // Only the touched directories that EXIST are ever listed or read (a
     // touched bucket with no directory yet contributes no history — its
     // keys are brand-new): |touched| existence probes, delta-bounded, so
@@ -290,10 +313,15 @@ object ScdEngine {
     // existing touched bucket, else ONE top-level listing (only when every
     // touched bucket is new). None = no bucket directory at all.
     val donor = existing.headOption.orElse(listBucketDirs(fs, targetPath).headOption)
+    // Every read below takes the data schema from the donor's footer, so
+    // none of them runs a schema-inference job.
+    val schema = donor.flatMap(b => footerSchema(spark, fs, s"$targetPath/$BucketCol=$b"))
     // Bucket-dir read with the partition column restored via basePath.
-    def readBuckets(bs: Seq[Int]): DataFrame =
-      spark.read.option("basePath", targetPath)
+    def readBuckets(bs: Seq[Int]): DataFrame = {
+      val reader = spark.read.option("basePath", targetPath)
+      schema.fold(reader)(reader.schema)
         .parquet(bs.map(b => s"$targetPath/$BucketCol=$b"): _*)
+    }
     // Schema-WIDENING evolution cannot ride the pruned path: rewriting only
     // touched buckets would leave untouched bucket files with the old
     // footer schema, and a later plain parquet read resolves the table
@@ -302,8 +330,8 @@ object ScdEngine {
     // initiated, so pay a one-off full rewrite that keeps every bucket's
     // disk schema uniform. (`ignore` drops the new columns, `fail` throws
     // in alignSchemas — neither widens disk, both stay pruned.) The
-    // column-set probe reads ONE bucket directory, not the whole table
-    // (disk schema is uniform across buckets by construction).
+    // column-set probe reads ONE bucket directory's schema, not the whole
+    // table (disk schema is uniform across buckets by construction).
     val widens = cfg.onSchemaChange == "append_new_columns" && donor.exists { b =>
       val tCols = readBuckets(Seq(b)).columns.map(_.toUpperCase).toSet
       batch.columns.exists(c => !tCols.contains(c.toUpperCase))
@@ -321,10 +349,13 @@ object ScdEngine {
         if (untouched.nonEmpty) Contracts.enforceNotNull(readBuckets(untouched), c)
       }
     val target =
-      (if (existing.nonEmpty) readBuckets(existing) else readBuckets(donor.toSeq).limit(0))
-        .drop(BucketCol)
-    val tmp = writeTmp(spark, fs, incremental(target, batch, cfg), targetPath,
-                       cfg, Some(n), contract)
+      if (existing.nonEmpty) readBuckets(existing) else readBuckets(donor.toSeq).limit(0)
+    // An SCD2 merge keeps the bucket column and clusters on it once; the
+    // write's repartition on the same column then plans no second exchange.
+    val snapshot =
+      if (cfg.scdType == 2) incremental(target, batch, cfg, Some(n))
+      else incremental(target.drop(BucketCol), batch, cfg)
+    val tmp = writeTmp(spark, fs, snapshot, targetPath, cfg, Some(n), contract)
     for (b <- touched) {
       val dst = new Path(s"$targetPath/$BucketCol=$b")
       val src = new Path(tmp, s"$BucketCol=$b")
@@ -360,7 +391,8 @@ object ScdEngine {
                        cfg: ScdConfig,
                        numBuckets: Option[Int],
                        contract: Option[org.apache.spark.sql.types.StructType]): Path = {
-    contract.foreach(Contracts.enforceStructural(snapshot.schema, _))
+    val data = snapshot.drop(BucketCol)
+    contract.foreach(Contracts.enforceStructural(data.schema, _))
     val tmp = new Path(targetPath + ".tmp")
     fs.delete(tmp, true)
     // Cluster rows onto their bucket BEFORE the partitioned write: without
@@ -368,17 +400,23 @@ object ScdEngine {
     // buckets files (32 × 1000 = 32k at Stress10's probe, a ~100 s flat
     // small-files tax regardless of data size, and the metadata storm that
     // kills object-store listings at 100 TB). Repartitioned on the bucket
-    // column, each bucket directory gets ~1 file.
+    // column, each bucket directory gets ~1 file. A snapshot that already
+    // carries the column (a clustered merge) is hash-partitioned on it, and
+    // the planner drops this repartition as redundant.
     val writer = numBuckets match {
       case Some(n) =>
         val keys = cfg.uniqueKey.map(resolveCi(snapshot.columns.toSeq, _))
-        snapshot.withColumn(BucketCol, bucketOf(keys, n))
-          .repartition(col(BucketCol)).write.partitionBy(BucketCol)
+        val bucketed =
+          if (snapshot.columns.contains(BucketCol)) snapshot
+          else snapshot.withColumn(BucketCol, bucketOf(keys, n))
+        bucketed.repartition(col(BucketCol)).write.partitionBy(BucketCol)
       case None => snapshot.write
     }
     writer.mode("overwrite").parquet(tmp.toString)
+    // the check reads the written columns with the snapshot's schema: no
+    // schema-inference job
     try contract.foreach(c =>
-      Contracts.enforceNotNull(spark.read.parquet(tmp.toString), c))
+      Contracts.enforceNotNull(spark.read.schema(data.schema).parquet(tmp.toString), c))
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
     tmp
   }
@@ -420,6 +458,23 @@ object ScdEngine {
       .map("%02x".format(_)).mkString.take(12)
     new Path(s"$targetPath/_CONTRACT_OK_$hex")
   }
+
+  /** The data schema Spark wrote into the footer of one part file of `dir`
+    * (key `org.apache.spark.sql.parquet.row.metadata`): the schema a parquet
+    * read would infer, read on the driver without a Spark job. None when no
+    * part file carries it.
+    */
+  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: String): Option[StructType] =
+    fs.listStatus(new Path(dir)).iterator.map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+      .flatMap { p =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+                     .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   private def fileSystem(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)

@@ -14,10 +14,16 @@ import graft.functions.ScdFunctions._
   *   - incremental   -> `get_incremental_scd2_sql.sql:75-268` (the 9-CTE MERGE)
   *
   * All computation is one lazy DataFrame DAG per call — Catalyst plans the
-  * joins/windows. The batch side is small relative to the dimension, so its
-  * distinct keys broadcast into the affected-key semi-join (J1) and its
-  * anti-join complement, and only the affected slice of the target reaches
-  * the business-key window exchange: incremental cost tracks batch size.
+  * joins/windows. Which persisted versions a batch affects (J1/J2) is
+  * decided by the target's layout:
+  *   - an unclustered target: the batch's distinct keys broadcast into the
+  *     affected-key semi-join and its anti-join complement, so only the
+  *     affected slice reaches the business-key window exchange and
+  *     incremental cost tracks batch size;
+  *   - a bucketed slice ([[incrementalClustered]], the pruned path of
+  *     [[graft.ScdEngine]]): batch ∪ slice cross ONE exchange on the bucket
+  *     column, a per-key window flag selects the affected versions, and
+  *     the timeline's windows and the bucketed write reuse that exchange.
   */
 object Scd2 {
 
@@ -37,6 +43,8 @@ object Scd2 {
   val PriorityCol = "_priority"
   val OpCol = "_scd2_op"
   val KeepCol = "_keep"
+  // timeline rows a clustered merge selected (the rest pass through)
+  private val SelCol = "_sel"
 
   /** Initial (full-refresh) load: delta batch -> complete SCD2 history.
     * Mirrors `get_initial_load_scd2_sql.sql:52-96`: the [[timeline]] of the
@@ -70,7 +78,7 @@ object Scd2 {
     * `incremental` returns the snapshot they produce.
     */
   def mergeSource(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
-    val (destCols, _, merged) = affected(target, delta, cfg)
+    val (destCols, _, merged, _) = affected(target, delta, cfg, bucket = None)
     merged.select(destCols.map(col) ++
                     cfg.auditColumns.map(c => when(col(KeepCol), col(c)).as(c)) :+
                     when(col(KeepCol), lit("upsert")).otherwise(lit("delete")).as(OpCol): _*)
@@ -85,27 +93,65 @@ object Scd2 {
     * the recomputed `merge_update_cols` and keeps its other stored audit
     * columns (the matched update); persisted rows not kept are the deletes.
     */
-  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
-    val (_, untouched, merged) = affected(target, delta, cfg)
-    val stored = cfg.auditColumns.filterNot(cfg.mergeUpdateCols.contains)
+  def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
+    merged(target, delta, cfg, bucket = None)
+
+  /** [[incremental]] over a target slice clustered by `bucket`, a column
+    * that both `target` and `delta` carry and that is a function of the
+    * business key (the bucketed layout of [[graft.ScdEngine]]). The merge
+    * runs over ONE exchange on `bucket`, and the snapshot keeps the column
+    * and that clustering, so a write partitioned on it needs no second one.
+    */
+  private[graft] def incrementalClustered(target: DataFrame,
+                                          delta: DataFrame,
+                                          cfg: ScdConfig,
+                                          bucket: String): DataFrame =
+    merged(target, delta, cfg, Some(bucket))
+
+  /** The snapshot of both layouts: the target rows the timeline does not
+    * select pass through as stored, the kept timeline rows replace the rest.
+    */
+  private def merged(target: DataFrame,
+                     delta: DataFrame,
+                     cfg: ScdConfig,
+                     bucket: Option[String]): DataFrame = {
+    val (_, untouched, timelined, selected) = affected(target, delta, cfg, bucket)
     val isPrevious = col(SourceCol) === "previous"
     val out = target.columns.map { c =>
-      stored.find(_.equalsIgnoreCase(c))
-        .fold(col(c))(a => when(isPrevious, col(s"_t_$a")).otherwise(col(a))).as(c)
+      cfg.auditColumns.find(_.equalsIgnoreCase(c)).fold(col(c)) { a =>
+        val stored =
+          if (cfg.mergeUpdateCols.contains(a)) isPrevious && !selected else isPrevious
+        when(stored, col(s"_t_$a")).otherwise(col(a))
+      }.as(c)
     }
-    untouched.unionByName(merged.filter(col(KeepCol)).select(out: _*))
+    val kept = timelined.filter(col(KeepCol) || !selected).select(out: _*)
+    untouched.fold(kept)(_.unionByName(kept))
   }
 
-  /** The batch's business columns, the target rows it cannot touch, and the
-    * [[timeline]] of the batch ∪ the persisted versions of the keys it
-    * touches. Persisted rows also carry their stored audit columns as
-    * `_t_<col>` (NULL on batch rows).
+  /** The batch's business columns, the target rows that bypass the
+    * timeline, the [[timeline]] of the batch ∪ the persisted versions it may
+    * affect, and the column flagging the timeline rows it selected. The
+    * layout decides the selection (J1/J2 below):
+    *
+    *   - unclustered (`bucket` None): the batch's distinct keys broadcast
+    *     into a semi-join that pulls the affected versions and an anti-join
+    *     that passes the rest by, so only the affected slice of the target
+    *     reaches the business-key exchange and cost tracks the batch;
+    *   - clustered on `bucket`: the target is already the touched slice.
+    *     Batch ∪ slice cross one exchange on `bucket`, a per-key window flag
+    *     selects the affected versions, and every timeline window is
+    *     partitioned by (`bucket`, keys, flag), so it reuses that exchange.
+    *     Unselected rows ride through the timeline unchanged.
+    *
+    * Persisted rows carry their stored audit columns as `_t_<col>` (NULL on
+    * batch rows).
     */
   private def affected(target: DataFrame,
                        delta: DataFrame,
-                       cfg: ScdConfig): (Seq[String], DataFrame, DataFrame) = {
+                       cfg: ScdConfig,
+                       bucket: Option[String]): (Seq[String], Option[DataFrame], DataFrame, Column) = {
     cfg.validate()
-    val deltaCols = delta.columns.toSeq
+    val deltaCols = delta.columns.toSeq.filterNot(bucket.contains)
     cfg.validateSchema(deltaCols)
     // dest_columns minus audit columns = the business columns; the delta batch
     // normally has no audit columns, the target always does.
@@ -115,51 +161,82 @@ object Scd2 {
     val check = cfg.checkColumns(destCols)
     val targetCols = target.columns.toSeq
     val validTo = resolveCi(targetCols, cfg.validToCol)
-
-    // new_records (:79-89)
-    val newRecords = tagged(delta.select(destCols.map(col): _*), "new", check)
+    val loadedAt = destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol))
+    val stored = destCols.map(c => col(resolveCi(targetCols, c)).as(c)) ++
+      cfg.auditColumns.map(a => col(resolveCi(targetCols, a)).as(s"_t_$a"))
 
     // previous_record (:93-118): pull from the target ONLY prior versions of
     // keys present in the batch — the affected-key pruning that keeps
     // incremental cost ∝ batch size. Matched null-safely (`<=>`), the Spark
     // shape of the reference's business-key-hash match (J1: per-column `=`
     // drops NULL-bearing keys). When update_all_previous_records is off,
-    // restrict further to windows a new row could land in (J2).
-    val probeCols =
-      if (cfg.updateAllPreviousRecords) keys else keys :+ updatedAt
-    val probe = newRecords
-      .select(probeCols.map(c => col(c).as(s"_n_$c")): _*)
-      .distinct()
-    val keysMatch = keys.map(k => col(k) <=> col(s"_n_$k")).reduce(_ && _)
-    val semiCond =
-      if (cfg.updateAllPreviousRecords) keysMatch
-      else keysMatch && col(s"_n_$updatedAt") <= col(validTo)
-    val previousRecord = tagged(
-      target.join(probe, semiCond, "left_semi")
-        .select(destCols.map(c => col(resolveCi(targetCols, c)).as(c)) ++
-                  cfg.auditColumns.map(a => col(resolveCi(targetCols, a)).as(s"_t_$a")): _*),
-      "previous", check)
-
-    // all_records (:123-145) through scd2_versions + redundant_versions
-    // (:149-229)
-    (destCols,
-     target.join(probe, semiCond, "left_anti"),
-     timeline(newRecords.unionByName(previousRecord, allowMissingColumns = true),
-              cfg, keys, updatedAt, destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol))))
+    // restrict further to windows a new row could land in (J2), plus the
+    // stored version a batch row with a NULL updated_at twins: the
+    // reference's MERGE ON matched that version key null-safely.
+    bucket match {
+      case None =>
+        // new_records (:79-89)
+        val newRecords = tagged(delta.select(destCols.map(col): _*), "new", check)
+        val probeCols =
+          if (cfg.updateAllPreviousRecords) keys else keys :+ updatedAt
+        val probe = newRecords
+          .select(probeCols.map(c => col(c).as(s"_n_$c")): _*)
+          .distinct()
+        val keysMatch = keys.map(k => col(k) <=> col(s"_n_$k")).reduce(_ && _)
+        val nu = col(s"_n_$updatedAt")
+        val semiCond =
+          if (cfg.updateAllPreviousRecords) keysMatch
+          else keysMatch && (nu <= col(validTo) ||
+                               nu.isNull && col(resolveCi(targetCols, updatedAt)).isNull)
+        val previousRecord = tagged(
+          target.join(probe, semiCond, "left_semi").select(stored: _*), "previous", check)
+        // all_records (:123-145) through scd2_versions + redundant_versions
+        // (:149-229)
+        (destCols,
+         Some(target.join(probe, semiCond, "left_anti")),
+         timeline(newRecords.unionByName(previousRecord, allowMissingColumns = true),
+                  cfg, keys, updatedAt, loadedAt),
+         lit(true))
+      case Some(b) =>
+        // the content hash and dedup priority are added after the exchange,
+        // so it carries only the rows and their source tag; rows passing
+        // through unselected need no hash
+        val all = delta.select(destCols.map(col) :+ col(b) :+ lit("new").as(SourceCol): _*)
+          .unionByName(target.select(stored :+ col(b) :+ lit("previous").as(SourceCol): _*),
+                       allowMissingColumns = true)
+          .repartition(col(b))
+        val byKey = Window.partitionBy((b +: keys).map(col): _*)
+        val isNew = col(SourceCol) === "new"
+        val u = col(updatedAt)
+        val hit =
+          if (cfg.updateAllPreviousRecords) max(isNew).over(byKey)
+          else min(when(isNew, u)).over(byKey) <= col(s"_t_${cfg.validToCol}") ||
+                 u.isNull && max(isNew && u.isNull).over(byKey)
+        val sel = col(SelCol)
+        (destCols,
+         None,
+         timeline(withTags(all.withColumn(SelCol, isNew || coalesce(hit, lit(false))), check, sel),
+                  cfg, b +: keys :+ SelCol, updatedAt, loadedAt, sel),
+         sel)
+    }
   }
 
-  /** `df` with the source tag ('new' or 'previous'), the reference's dedup
-    * priority (0 = previous wins) and the change-detection content hash the
-    * timeline reads.
-    */
+  /** `df` with the source tag ('new' or 'previous') and [[withTags]]. */
   private def tagged(df: DataFrame, source: String, check: Seq[String]): DataFrame =
-    df.withColumn(SourceCol, lit(source))
-      .withColumn(PriorityCol, lit(if (source == "previous") 0 else 17))
-      .withColumn(HashCol, surrogateKeyOf(check))
+    withTags(df.withColumn(SourceCol, lit(source)), check)
+
+  /** Source-tagged rows with the reference's dedup priority (0 = previous
+    * wins) and the change-detection content hash the timeline reads (NULL
+    * on rows that are not `selected`).
+    */
+  private def withTags(df: DataFrame, check: Seq[String],
+                       selected: Column = lit(true)): DataFrame =
+    df.withColumn(PriorityCol, when(col(SourceCol) === "previous", 0).otherwise(17))
+      .withColumn(HashCol, when(selected, surrogateKeyOf(check)))
 
   /** The SCD2 timeline over tagged rows ([[tagged]]): one flag-and-window
-    * pass, every window partitioned by the business key so the whole pass
-    * shares one exchange.
+    * pass, every window partitioned by `keys` (the business key, or with it
+    * a bucket and a selection flag) so the whole pass shares one exchange.
     *
     *   1. one row per version (keys, updated_at), previous rows winning;
     *   2. the lag of the content hash;
@@ -168,16 +245,20 @@ object Scd2 {
     *      versions a merge deletes);
     *   5. audit columns over the kept rows, partitioned by (keys, `_keep`);
     *      on the other rows they are meaningless: [[mergeSource]] NULLs
-    *      them and [[incremental]] drops the rows.
+    *      them and [[merged]] drops the rows.
     *
     * `loadedAt` names the load-watermark column that picks each content
-    * run's winner when collapsing; without it the run opener wins.
+    * run's winner when collapsing; without it the run opener wins. Rows
+    * that are not `selected` (persisted rows a clustered merge passes
+    * through) are never deduplicated away; the caller keeps their stored
+    * audit columns.
     */
   private def timeline(all: DataFrame,
                        cfg: ScdConfig,
                        keys: Seq[String],
                        updatedAt: String,
-                       loadedAt: Option[String]): DataFrame = {
+                       loadedAt: Option[String],
+                       selected: Column = lit(true)): DataFrame = {
     val byKey = Window.partitionBy(keys.map(col): _*)
     // D1 / dedup per version key (:149-156). The reference `order by 1` is
     // arbitrary; its stated intent (':149-150' comment + the _priority tags)
@@ -190,7 +271,7 @@ object Scd2 {
     val deduped = all
       .withColumn("_prev_u", lag(uStr, 1).over(
         byKey.orderBy(col(updatedAt), col(PriorityCol), col(HashCol))))
-      .filter(col("_prev_u").isNull || col("_prev_u") =!= uStr)
+      .filter(!selected || col("_prev_u").isNull || col("_prev_u") =!= uStr)
       .drop("_prev_u")
 
     // compare_versions (:160-166)

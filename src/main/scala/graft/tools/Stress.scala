@@ -16,8 +16,9 @@ import graft.sources.Tables
   * docs from sf0.1) needs a large heap:
   * `SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.Stress <sfDir> 100"`.
   *
-  * The `bucketed-merge` scenario times the key-bucketed `ScdEngine` path
-  * instead; see [[bucketedMerge]]. The `explain` mode prints
+  * The `bucketed-merge` scenario times the key-bucketed `ScdEngine` merge
+  * against dimension and batch size instead; see [[bucketedMerge]]. The
+  * `explain` mode prints
   * `explain("formatted")` for the named SparkEntry queries (all when none
   * are named).
   *
@@ -29,8 +30,10 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     lazy val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    // bucketed-merge runs on the benchmark's 4 cores; the rest on 32
+    val cores = if (sfDir == "bucketed-merge") 4 else 32
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -50,56 +53,89 @@ object Stress {
     }
   }
 
-  /** Key-bucketed SCD maintenance at 10 M keys / 80 buckets and 100 M keys /
-    * 800 buckets, with fixed 10k-row batches confined to buckets 0..7. Per
-    * size it times the initial load (writes the whole history), one
-    * `ScdEngine.merge` (the maintenance step alone: its cost should follow
-    * the touched buckets, not the dimension size) and one `ScdEngine.run`
-    * (the same step plus the full read-back, which pays the one
-    * whole-table partition discovery).
+  /** Key-bucketed SCD maintenance against dimension size: 20k, 200k and 2M
+    * keys in 128 buckets (the benchmark's `ingest_micro` table at 1×, 10×
+    * and 100×). Per size it times the initial load, then three merges of
+    * 16-row and three of 1k-row batches (updates of random existing keys,
+    * built as local relations before timing), each one `ScdEngine.merge`,
+    * after one untimed warm-up merge (and, once, a few on a throwaway
+    * table). Per batch size it prints the median seconds of a merge and the
+    * Spark jobs each merge ran. The 2M-key load needs about 2 GB of heap.
     */
   private def bucketedMerge(spark: SparkSession): Unit = {
-    def time(label: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      println(f"[stress] $label%-46s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
     val base = java.nio.file.Files.createTempDirectory("stress-bucketed-merge")
     val cfg = ScdConfig(uniqueKey = Seq("id"), updatedAtCol = "updated_at")
+    val buckets = 128
+    def stamp(day: Int) = lit("2025-01-01 00:00:00").cast("timestamp") + expr(s"interval $day days")
 
     def history(h: Long): DataFrame =
       spark.range(h).select(col("id"),
         concat(lit("name"), pmod(col("id"), lit(97L))).as("name"),
         (col("id") % 1000L).as("v"),
-        lit("2025-01-01 00:00:00").cast("timestamp").as("updated_at"))
+        stamp(0).as("updated_at"))
 
-    def localBatch(h: Long, n: Int, stamp: String): DataFrame = {
-      val b = spark.range(h)
-        .filter(ScdEngine.bucketOf(Seq("id"), n) < lit(8))
-        .limit(10000)
-        .select(col("id"),
-          concat(lit("renamed"), col("id")).as("name"),
-          (col("id") % 1000L + 1L).as("v"),
-          lit(stamp).cast("timestamp").as("updated_at"))
-        .localCheckpoint(false)
-      b.count()
-      b
+    def batch(h: Long, rows: Int, day: Int): DataFrame = {
+      val b = spark.range(rows).select((rand(day) * h).cast("long").as("id"),
+        concat(lit("renamed"), lit(day)).as("name"),
+        lit(day.toLong).as("v"),
+        stamp(day).as("updated_at"))
+      spark.createDataFrame(java.util.Arrays.asList(b.collect(): _*), b.schema)
     }
 
-    for ((h, n) <- Seq((10000000L, 80), (100000000L, 800))) {
+    def merge(path: String, df: DataFrame): (Double, Int) = {
+      val t0 = System.nanoTime()
+      val (_, jobs) =
+        jobsDuring(spark)(ScdEngine.merge(spark, df, path, cfg, numBuckets = Some(buckets)))
+      ((System.nanoTime() - t0) / 1e9, jobs)
+    }
+
+    // JIT and codegen warm-up on a throwaway table, so the first size is
+    // not billed for it
+    var day = 0
+    merge(s"$base/warm", history(20000L))
+    for (rows <- Seq(16, 16, 16, 1000, 1000)) { day += 1; merge(s"$base/warm", batch(20000L, rows, day)) }
+    for (h <- Seq(20000L, 200000L, 2000000L)) {
       val path = s"$base/h$h"
-      time(s"initial            h=$h buckets=$n") {
-        ScdEngine.merge(spark, history(h), path, cfg, numBuckets = Some(n))
-      }
-      val lb1 = localBatch(h, n, "2025-02-01 00:00:00")
-      time(s"merge local-batch  h=$h buckets=$n batch=10k") {
-        ScdEngine.merge(spark, lb1, path, cfg, numBuckets = Some(n))
-      }
-      val lb2 = localBatch(h, n, "2025-03-01 00:00:00")
-      time(s"run   local-batch  h=$h buckets=$n batch=10k (incl read-back)") {
-        ScdEngine.run(spark, lb2, path, cfg, numBuckets = Some(n))
+      val (loadS, _) = merge(path, history(h))
+      println(f"[stress] initial load keys=$h%-8d buckets=$buckets ${loadS}%8.2f s")
+      day += 1
+      merge(path, batch(h, 16, day))
+      for (rows <- Seq(16, 1000)) {
+        val runs = (1 to 3).map { _ => day += 1; merge(path, batch(h, rows, day)) }
+        val median = runs.map(_._1).sorted.apply(1)
+        println(f"[stress] merge keys=$h%-8d batch=$rows%-5d ${median}%8.2f s (median of 3)" +
+                s"  jobs ${runs.map(_._2).mkString(",")}")
       }
     }
+    org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. Job-start
+    * events arrive in the order jobs start, so a marker job run after
+    * `body` (and one before, to drain earlier events) fences the count
+    * exactly.
+    */
+  private[graft] def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.fence"))).getOrElse(""))
+    }
+    def fence(name: String): Int = {
+      sc.setLocalProperty("graft.fence", name)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { g =>
+          if (g == null) throw new IllegalStateException("job-start event not delivered")
+          g != name
+        }.size
+    }
+    sc.addSparkListener(listener)
+    try { fence("open"); val out = body; (out, fence("close")) }
+    finally sc.removeSparkListener(listener)
   }
 
   /** The scaling slopes: each pipeline at 1× and k× the input. */

@@ -1,0 +1,135 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.operators.Scd2
+
+/** The bucketed merge of `ScdEngine` clusters batch ∪ touched slice on the
+  * bucket column and selects the affected versions with a window flag; the
+  * unbucketed merge selects them with broadcast probe joins. Both must
+  * leave the same table, and the bucketed one must stay one exchange.
+  */
+class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+
+  import spark.implicits._
+
+  private def slot(i: Int) = ts(f"2025-01-${i + 1}%02d 00:00:00")
+
+  private def tempPath(name: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/dim"
+
+  /** Random versions of keys 0..5 over ten slots: repeated (key, slot)
+    * pairs with differing content, an occasional logical delete, and with
+    * `nullKey` key 0 spelled NULL.
+    */
+  private def rows(rnd: Random, nullKey: Boolean): Seq[(Option[Int], String, java.sql.Timestamp, java.sql.Timestamp)] =
+    for (_ <- 1 to 40) yield {
+      val k = rnd.nextInt(6)
+      val s = rnd.nextInt(10)
+      (if (nullKey && k == 0) None else Some(k), s"v${rnd.nextInt(3)}", slot(s),
+       if (rnd.nextInt(8) == 0) slot(s) else null)
+    }
+
+  private def df(rs: Seq[(Option[Int], String, java.sql.Timestamp, java.sql.Timestamp)],
+                 load: Option[Int]): DataFrame = {
+    val d = rs.toDF("k", "v", "_updated_at", "deleted_at")
+    load.fold(d)(i => d.withColumn("_loaded_at", lit(slot(20 + i))))
+  }
+
+  /** A merge configuration, its input shape and arrival order. */
+  private case class Case(cfg: ScdConfig, nullKey: Boolean = false,
+                          inOrder: Boolean = false, loadedAt: Boolean = false)
+
+  test("bucketed merge == unbucketed merge over random batch splits") {
+    val base = ScdConfig(uniqueKey = Seq("k"))
+    val cases = Seq(
+      "default" -> Case(base),
+      "collapse off" -> Case(base.copy(collapseRedundantVersions = false)),
+      "collapse, loaded_at run winner" ->
+        Case(base.copy(changeExclude = Seq("_loaded_at")), loadedAt = true),
+      "deleted_at" -> Case(base.copy(deletedAtCol = Some("deleted_at"))),
+      "NULL business key" -> Case(base, nullKey = true),
+      // update_all off re-expires only the windows a new row lands in, so
+      // it is only sound for in-order arrival (ScdConfig doc)
+      "update_all off" -> Case(base.copy(updateAllPreviousRecords = false), inOrder = true),
+      "update_all off, collapse off, NULL key" ->
+        Case(base.copy(updateAllPreviousRecords = false, collapseRedundantVersions = false),
+             nullKey = true, inOrder = true),
+      // the later batches touch keys 0..2 only; keys 3..5 fail the
+      // predicate and pass through
+      "incremental_predicates" -> Case(base.copy(incrementalPredicates = Seq("k <= 2"))))
+    val rnd = new Random(97)
+    for ((name, c) <- cases; trial <- 1 to 2) {
+      val all = rows(rnd, c.nullKey)
+      val ordered = if (c.inOrder) all.sortBy(_._3.getTime) else rnd.shuffle(all)
+      val (first, rest) = ordered.splitAt(ordered.size / 3)
+      val later =
+        if (c.cfg.incrementalPredicates.isEmpty) rest
+        else rest.filter(_._1.exists(_ <= 2))
+      val batches = first +: later.grouped(math.max(1, later.size / 3)).toSeq
+      val tag = s"$name, trial $trial"
+      val (bucketed, flat) = (tempPath("bucketed"), tempPath("flat"))
+      for ((b, i) <- batches.zipWithIndex; (path, n) <- Seq(bucketed -> Some(8), flat -> None))
+        ScdEngine.merge(spark, df(b, Some(i).filter(_ => c.loadedAt)), path, c.cfg,
+                        numBuckets = n)
+      val got = spark.read.parquet(bucketed).drop(ScdEngine.BucketCol)
+      val want = spark.read.parquet(flat)
+      val cols = want.columns.map(col).toSeq
+      assert(got.select(cols: _*).exceptAll(want).count() === 0, s"$tag: extra rows")
+      assert(want.exceptAll(got.select(cols: _*)).count() === 0, s"$tag: missing rows")
+      assertInvariantsGreen(got, c.cfg)
+    }
+  }
+
+  /** The executed plans of the queries `body` ran, fenced like its jobs. */
+  private def plansDuring[T](body: => T): (T, Int, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (out, jobs) =
+      try jobsDuring(body) finally spark.listenerManager.unregister(listener)
+    (out, jobs, plans.asScala.toSeq)
+  }
+
+  test("a warm bucketed merge runs at most 3 jobs and writes over one exchange") {
+    val cfg = ScdConfig(uniqueKey = Seq("k"), deletedAtCol = Some("deleted_at"))
+    def batch(rs: Seq[(Int, String, Int)]): DataFrame =
+      rs.map { case (k, v, s) => (k, v, slot(s), null: java.sql.Timestamp) }
+        .toDF("k", "v", "_updated_at", "deleted_at")
+    val history = (1 to 200).map(k => (k, "a", 0)) ++ (1 to 200 by 7).map(k => (k, "b", 2))
+    val b1 = Seq((3, "c", 3), (50, "c", 1), (201, "a", 3))
+    val b2 = Seq((8, "d", 4), (99, "a", 1), (150, "d", 5), (202, "a", 4))
+    val path = tempPath("pin")
+    ScdEngine.merge(spark, batch(history), path, cfg, numBuckets = Some(16))
+    ScdEngine.merge(spark, batch(b1), path, cfg, numBuckets = Some(16)) // warm
+    val (_, jobs, plans) = plansDuring {
+      ScdEngine.merge(spark, batch(b2), path, cfg, numBuckets = Some(16))
+    }
+    assert(jobs <= 3, s"the merge ran $jobs jobs")
+    val writes = plans.filter(find(_)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+    assert(writes.size === 1, plans.mkString("\n"))
+    val write = writes.head
+    assert(collect(write) { case e: ShuffleExchangeLike => e }.size === 1, write)
+    assert(collect(write) { case e: BroadcastExchangeLike => e }.isEmpty, write)
+
+    val got = spark.read.parquet(path).drop(ScdEngine.BucketCol)
+    val full = Scd2.initialLoad(batch(history ++ b1 ++ b2), cfg).select(got.columns.map(col).toSeq: _*)
+    assert(got.exceptAll(full).count() === 0)
+    assert(full.exceptAll(got).count() === 0)
+  }
+}

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -121,33 +118,6 @@ class Scd2EdgeCaseSpec extends SparkTestBase {
     assertInvariantsGreen(t2, cfg)
   }
 
-  /** `body`'s result and the Spark jobs started while it ran. Listener
-    * events arrive in the order jobs start, so a marker job run after `body`
-    * (and one before, to drain earlier tests' events) fences the count
-    * exactly.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("graft.fence"))).getOrElse(""))
-    }
-    def fence(name: String): Int = {
-      sc.setLocalProperty("graft.fence", name)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.fence", null)
-      Iterator.continually(started.poll(60, TimeUnit.SECONDS)).takeWhile { g =>
-        assert(g != null, "job-start event not delivered")
-        g != name
-      }.size
-    }
-    sc.addSparkListener(listener)
-    try { fence("open"); val out = body; (out, fence("close")) }
-    finally sc.removeSparkListener(listener)
-  }
-
   private def hasLogicalRdd(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.isDefined
 
@@ -250,6 +220,32 @@ class Scd2EdgeCaseSpec extends SparkTestBase {
       assert(!plan.contains("FullOuter"), plan)
       assert("hashpartitioning\\([^\n]*(coalesce|isnull)\\(_updated_at".r
                .findFirstIn(plan).isEmpty, plan)
+    }
+  }
+
+  test("a batch row with a NULL updated_at meets its stored NULL twin (update_all off)") {
+    val session = spark
+    import session.implicits._
+    // J2 (new updated_at <= stored _valid_to) is NULL for a NULL updated_at,
+    // so it alone never selects the stored (1, NULL) version and the batch
+    // row landed beside it: two NULL versions of one key. The reference's
+    // MERGE ON matched that version key null-safely; the stored row wins
+    // the dedup and the batch row adds nothing.
+    val cfg = ScdConfig(uniqueKey = Seq("k"), updateAllPreviousRecords = false)
+    val history = Seq((1, "b", null), (1, "a", ts("2025-01-01 00:00:00")),
+                      (2, "a", ts("2025-01-01 00:00:00")))
+      .toDF("k", "v", "_updated_at")
+    val batch = Seq((1, "c", null: java.sql.Timestamp)).toDF("k", "v", "_updated_at")
+    val path = java.nio.file.Files.createTempDirectory("graft-null-twin").toString + "/dim"
+    ScdEngine.merge(spark, history, path, cfg, numBuckets = Some(8))
+    val results = Seq(
+      "Scd2.incremental" -> Scd2.incremental(Scd2.initialLoad(history, cfg), batch, cfg),
+      "bucketed ScdEngine" ->
+        ScdEngine.run(spark, batch, path, cfg, numBuckets = Some(8)).drop(ScdEngine.BucketCol))
+    for ((name, merged) <- results) {
+      val k1 = merged.filter(col("k") === 1).orderBy(col("_updated_at"))
+        .select(col("v"), col("_updated_at")).as[(String, java.sql.Timestamp)].collect().toSeq
+      assert(k1 === Seq(("b", null), ("a", ts("2025-01-01 00:00:00"))), name)
     }
   }
 }

@@ -78,4 +78,7 @@ trait SparkTestBase extends AnyFunSuite {
 
   def rowsFor(df: DataFrame, key: Int): Array[org.apache.spark.sql.Row] =
     df.filter(col("customer_id") === key).orderBy(col("_valid_from")).collect()
+
+  /** `body`'s result and the Spark jobs started while it ran, fenced. */
+  def jobsDuring[T](body: => T): (T, Int) = graft.tools.Stress.jobsDuring(spark)(body)
 }
