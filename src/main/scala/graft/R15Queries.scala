@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.DimKey
@@ -736,7 +735,6 @@ object R15Queries {
       // credit — c = (2·conc + ties) / (2·usable) in exact ppm. The pair
       // relation is cohort²-shaped and the cohort is user-dimension-
       // sized; the oracle runs the same theta join.
-      import org.apache.spark.sql.expressions.Window
       val ev = SparkEntry.ev(s, dir)
       val life = ev.groupBy(col("user_id"))
         .agg(min(col("ts")).cast("date").as("first_day"),

@@ -195,7 +195,6 @@ object R16Queries {
                  ((year(col("l_shipdate")) - 1992) * 12 +
                    month(col("l_shipdate"))).cast("long").as("mi"))
         .agg(sum(expr("CAST(l_quantity AS BIGINT)")).as("x"))
-      val tot = Window.partitionBy(col("k"))
       val seq0 = dem
         .withColumn("mu", expr("sum(x) OVER (PARTITION BY k) DIV" +
                                " count(1) OVER (PARTITION BY k)"))

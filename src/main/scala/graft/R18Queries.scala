@@ -24,7 +24,6 @@ object R18Queries {
       // Deciles by rank·10 DIV n over the per-half customer rollups
       // (dimension-sized windows); customers absent from a half land in
       // decile 0 (the X743 sentinel discipline, both engines identical).
-      import org.apache.spark.sql.expressions.Window
       val o = rd(s, dir, "orders")
         .select(col("o_custkey").as("c"),
                 expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("v"),

@@ -399,8 +399,6 @@ object R7Queries {
       // null-safe equality (<=>) counts null keys the equi-join drops.
       // Each count is exact and must agree bit-for-bit with the oracle's
       // textbook SQL.
-      val s2 = s
-      import s2.implicits._
       val o = Tables.read(s, dir, "orders")
       val probe = Tables.read(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
@@ -865,7 +863,6 @@ object R7Queries {
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val wAll = Window.partitionBy(col("o_custkey"))
       o.withColumn("_budget",
           expr("CAST(sum(cents) OVER (PARTITION BY o_custkey) * 8 DIV 10" +
                " AS BIGINT)"))

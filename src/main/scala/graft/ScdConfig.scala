@@ -29,7 +29,9 @@ package graft
   * @param incrementalPredicates SQL predicate strings bounding which existing
   *                         target rows a merge may touch (reference
   *                         `incremental_predicates`, `scd_plan.sql:276`,
-  *                         `get_incremental_scd2_sql.sql:247-255`). Rows
+  *                         `get_incremental_scd2_sql.sql:247-255`). Every
+  *                         merge ANDs them (NULL as false) into its own
+  *                         selection of stored rows, as into MERGE ON; rows
   *                         failing them pass through unchanged — as in the
   *                         reference, the caller must ensure they cover every
   *                         row the batch could affect.

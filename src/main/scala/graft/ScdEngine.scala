@@ -33,10 +33,9 @@ import graft.operators.{Scd01, Scd2}
   *
   *   1. finds the buckets the delta batch touches in one job (each
   *      partition of the cached batch returns its set of bucket ids),
-  *   2. reads ONLY those bucket directories that exist, found by one
-  *      existence probe each (untouched buckets are never listed or read),
-  *      with the data schema taken from one part file's footer, so no
-  *      schema-inference job runs,
+  *   2. learns which bucket directories exist from one top-level listing
+  *      of their NAMES, and reads ONLY the touched ones among them (the
+  *      contents of untouched buckets are never listed or read),
   *   3. merges batch ∪ slice over ONE exchange on the bucket column
   *      ([[Scd2.incrementalClustered]]; SCD2),
   *   4. rewrites ONLY the touched bucket directories; the write reuses the
@@ -52,36 +51,45 @@ import graft.operators.{Scd01, Scd2}
   * would rewrite the whole table every batch; the bucketed path touches
   * `O(|delta keys| / n)` of it.
   *
-  * Both swaps — the whole-table one of [[atomicSwap]] and the per-bucket
-  * one of the pruned path — stage the snapshot through [[writeTmp]], the
-  * one place that writes `<target>.tmp` and enforces the contract on it.
+  * Every read of the table goes through [[read]], with the data schema
+  * taken from one part file's footer, read once per merge: no read runs a
+  * schema-inference job. Both swaps — the whole-table one of [[atomicSwap]]
+  * and the per-bucket one of the pruned path — stage the snapshot through
+  * [[writeTmp]], the one place that writes `<target>.tmp` and enforces the
+  * contract on it.
   */
 object ScdEngine {
 
   /** Partition-directory column for the bucketed layout. */
   val BucketCol = "_scd2_bucket"
 
-  /** One top-level listStatus for `<BucketCol>=<b>` directory NAMES (never
-    * the recursive per-file discovery): the schema donor when every
-    * touched bucket is new, and the untouched set of a first-contract
-    * validation.
+  /** The bucket ids of an existing table, from one top-level listStatus of
+    * its `<BucketCol>=<b>` directory NAMES (never the recursive per-file
+    * discovery); empty for an unbucketed table.
     */
-  private def listBucketDirs(fs: FileSystem, targetPath: String): Seq[Int] = {
-    val root = new Path(targetPath)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
+  private def listBucketDirs(fs: FileSystem, targetPath: String): Seq[Int] =
+    fs.listStatus(new Path(targetPath)).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(BucketCol + "="))
       .map(_.getPath.getName.stripPrefix(BucketCol + "=").toInt)
       .sorted
+
+  /** The one reader of the table at `path`: the directories of `buckets`
+    * (partition column restored via basePath) or the whole table, with the
+    * footer's data schema ([[footerSchema]]; inferred only when no footer
+    * carries one), so no read runs a schema-inference job.
+    */
+  private def read(spark: SparkSession, path: String, schema: Option[StructType],
+                   buckets: Option[Seq[Int]] = None): DataFrame = {
+    val reader = spark.read.option("basePath", path)
+    schema.fold(reader)(reader.schema)
+      .parquet(buckets.fold(Seq(path))(_.map(b => s"$path/$BucketCol=$b")): _*)
   }
 
-  /** The subset of `bs` whose bucket directory actually exists: one
-    * existence probe per requested bucket (delta-bounded on the merge
-    * path), never a table-wide listing.
-    */
-  private def existingBuckets(fs: FileSystem, targetPath: String,
-                              bs: Seq[Int]): Seq[Int] =
-    bs.filter(b => fs.exists(new Path(s"$targetPath/$BucketCol=$b")))
+  /** The whole existing table at `targetPath`, through [[read]]. */
+  private def readTable(spark: SparkSession, targetPath: String): DataFrame = {
+    val fs = fileSystem(spark, targetPath)
+    read(spark, targetPath, footerSchema(spark, fs, targetPath, listBucketDirs(fs, targetPath)))
+  }
 
   /** Run one SCD maintenance step against a Parquet table at `targetPath`:
     * initial load when the target does not exist (or `fullRefresh`), otherwise
@@ -113,9 +121,9 @@ object ScdEngine {
           cfg: ScdConfig,
           fullRefresh: Boolean = false,
           numBuckets: Option[Int] = None,
-          contract: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+          contract: Option[StructType] = None): DataFrame = {
     merge(spark, delta, targetPath, cfg, fullRefresh, numBuckets, contract)
-    spark.read.parquet(targetPath)
+    readTable(spark, targetPath)
   }
 
   /** [[run]] without the post-run snapshot read-back: commits the
@@ -133,26 +141,28 @@ object ScdEngine {
             cfg: ScdConfig,
             fullRefresh: Boolean = false,
             numBuckets: Option[Int] = None,
-            contract: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+            contract: Option[StructType] = None): Unit = {
     cfg.validate()
     val fs = fileSystem(spark, targetPath)
-    val exists = fs.exists(new Path(targetPath))
     // S2: materialize the batch once (temp CTAS equivalent) so schema
     // introspection + the multiple passes below reuse one computation.
     val batch = delta.cache()
     try {
-      if (!exists || fullRefresh)
+      if (!fs.exists(new Path(targetPath)) || fullRefresh)
         atomicSwap(spark, fs, initial(batch, cfg), targetPath, cfg,
                    numBuckets, contract)
-      else if (!numBuckets.exists(n =>
-                 incrementalBucketed(spark, fs, batch, targetPath, cfg, n, contract)))
-        // Full rewrite: an unbucketed table, or a bucketed run the pruned
-        // path declined. The read's bucket column is dropped; writeTmp
-        // derives it afresh when the layout is bucketed.
-        atomicSwap(spark, fs,
-                   incremental(spark.read.parquet(targetPath).drop(BucketCol),
-                               batch, cfg),
-                   targetPath, cfg, numBuckets, contract)
+      else {
+        val dirs = listBucketDirs(fs, targetPath)
+        val schema = footerSchema(spark, fs, targetPath, dirs)
+        if (!numBuckets.exists(n => incrementalBucketed(spark, fs, batch, targetPath,
+                                                        dirs, schema, cfg, n, contract)))
+          // Full rewrite: an unbucketed table, or a bucketed run the pruned
+          // path declined. The read's bucket column is dropped; writeTmp
+          // derives it afresh when the layout is bucketed.
+          atomicSwap(spark, fs,
+                     incremental(read(spark, targetPath, schema).drop(BucketCol), batch, cfg),
+                     targetPath, cfg, numBuckets, contract)
+      }
     } finally batch.unpersist() // S7: post-run temp drop
   }
 
@@ -172,14 +182,10 @@ object ScdEngine {
                  cfg: ScdConfig,
                  numBuckets: Option[Int] = None): DataFrame = {
     require(cfg.scdType == 2, "CDC changelog export is SCD2-only")
-    val fs = fileSystem(spark, targetPath)
-    val existed = fs.exists(new Path(targetPath))
-    val prev =
-      if (existed) spark.read.parquet(targetPath).localCheckpoint()
-      else null
+    val prev = Option.when(fileSystem(spark, targetPath).exists(new Path(targetPath)))(
+      readTable(spark, targetPath).localCheckpoint())
     val next = run(spark, delta, targetPath, cfg, numBuckets = numBuckets)
-    val base = if (existed) prev else next.limit(0)
-    Scd2.snapshotDelta(base, next, cfg, includePayload = true)
+    Scd2.snapshotDelta(prev.getOrElse(next.limit(0)), next, cfg, includePayload = true)
       .withColumn("_batch_id", lit(runId))
       .write.mode("append").parquet(cdcPath)
     next
@@ -192,13 +198,12 @@ object ScdEngine {
 
   /** Type-dispatched incremental merge returning the new snapshot: the
     * batch is first reconciled with the target per `on_schema_change`
-    * ([[alignSchemas]]), and with `incremental_predicates` (P8) target rows
-    * failing the predicates bypass the merge entirely (smaller semi-join and
-    * merge inputs — the reference's MERGE-ON pruning conjuncts,
-    * `get_incremental_scd2_sql.sql:247-255`) and pass through unchanged.
-    * Like the reference's MERGE-ON conjuncts, a batch key whose history was
-    * predicated away re-enters as brand-new — the pruning trade-off is the
-    * caller's to make.
+    * ([[alignSchemas]]), then merged by [[Scd2]] or [[Scd01]]. Each operator
+    * ANDs `incremental_predicates` (P8) into its own selection of the
+    * stored rows a merge may touch, as the reference ANDs them into MERGE ON
+    * (`get_incremental_scd2_sql.sql:247-255`): target rows failing them pass
+    * through unchanged, and a batch key whose history was predicated away
+    * re-enters as brand-new — the pruning trade-off is the caller's to make.
     */
   def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
     incremental(target, delta, cfg, numBuckets = None)
@@ -212,18 +217,12 @@ object ScdEngine {
                           cfg: ScdConfig,
                           numBuckets: Option[Int]): DataFrame = {
     val (t, b) = alignSchemas(target, delta, cfg)
-    def mergeInto(slice: DataFrame) = (cfg.scdType, numBuckets) match {
+    (cfg.scdType, numBuckets) match {
       case (2, Some(n)) =>
         val keys = cfg.uniqueKey.map(resolveCi(b.columns.toSeq, _))
-        Scd2.incrementalClustered(slice, b.withColumn(BucketCol, bucketOf(keys, n)),
-                                  cfg, BucketCol)
-      case (2, None) => Scd2.incremental(slice, b, cfg)
-      case _ => Scd01.incremental(slice, b, cfg)
-    }
-    if (cfg.incrementalPredicates.isEmpty) mergeInto(t)
-    else {
-      val p = cfg.incrementalPredicates.map(expr).reduce(_ && _)
-      mergeInto(t.filter(p)).unionByName(t.filter(!coalesce(p, lit(false))))
+        Scd2.incrementalClustered(t, b.withColumn(BucketCol, bucketOf(keys, n)), cfg, BucketCol)
+      case (2, None) => Scd2.incremental(t, b, cfg)
+      case _ => Scd01.incremental(t, b, cfg)
     }
   }
 
@@ -242,7 +241,8 @@ object ScdEngine {
     *
     * Audit columns and the [[BucketCol]] of a bucketed slice live only on
     * the target by construction and never count as drift. Pure projection
-    * work — no extra shuffle or scan at any scale.
+    * work over plan schemas (the table's from a footer, [[read]]) — no
+    * extra shuffle, scan or job at any scale.
     */
   def alignSchemas(target: DataFrame,
                    batch: DataFrame,
@@ -282,7 +282,8 @@ object ScdEngine {
   def bucketOf(keys: Seq[String], n: Int) =
     pmod(hash(keys.map(col): _*), lit(n))
 
-  /** Incremental over a bucketed target: prune the target scan AND the
+  /** Incremental over a bucketed target whose bucket ids are `dirs` and
+    * data schema `schema` ([[footerSchema]]): prune the target scan AND the
     * rewrite to the buckets the batch touches. Returns false, having
     * written nothing, when the run needs the full rewrite instead: the
     * target has no bucket directory at all (an unbucketed table being
@@ -293,9 +294,11 @@ object ScdEngine {
                                   fs: FileSystem,
                                   batch: DataFrame,
                                   targetPath: String,
+                                  dirs: Seq[Int], schema: Option[StructType],
                                   cfg: ScdConfig,
                                   n: Int,
-                                  contract: Option[org.apache.spark.sql.types.StructType]): Boolean = {
+                                  contract: Option[StructType]): Boolean = {
+    if (dirs.isEmpty) return false
     val keys = cfg.uniqueKey.map(resolveCi(batch.columns.toSeq, _))
     // Which buckets does the batch touch? One job over the cached batch
     // (it also fills the cache): each partition returns its set of bucket
@@ -303,25 +306,12 @@ object ScdEngine {
     val touched = batch.select(bucketOf(keys, n)).rdd
       .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
       .collect().flatten.distinct.sorted.toSeq
-    // Only the touched directories that EXIST are ever listed or read (a
-    // touched bucket with no directory yet contributes no history — its
-    // keys are brand-new): |touched| existence probes, delta-bounded, so
-    // nothing on this path runs Spark's recursive partition discovery over
-    // the whole table.
-    val existing = existingBuckets(fs, targetPath, touched)
-    // Schema donor for the column probe and the empty-selection read: an
-    // existing touched bucket, else ONE top-level listing (only when every
-    // touched bucket is new). None = no bucket directory at all.
-    val donor = existing.headOption.orElse(listBucketDirs(fs, targetPath).headOption)
-    // Every read below takes the data schema from the donor's footer, so
-    // none of them runs a schema-inference job.
-    val schema = donor.flatMap(b => footerSchema(spark, fs, s"$targetPath/$BucketCol=$b"))
-    // Bucket-dir read with the partition column restored via basePath.
-    def readBuckets(bs: Seq[Int]): DataFrame = {
-      val reader = spark.read.option("basePath", targetPath)
-      schema.fold(reader)(reader.schema)
-        .parquet(bs.map(b => s"$targetPath/$BucketCol=$b"): _*)
-    }
+    // Only the touched directories that EXIST are read (a touched bucket
+    // with no directory yet contributes no history — its keys are
+    // brand-new). `dirs` is one listing of bucket names, so nothing here
+    // runs Spark's recursive partition discovery over the whole table.
+    val existing = touched.filter(dirs.toSet)
+    def readBuckets(bs: Seq[Int]): DataFrame = read(spark, targetPath, schema, Some(bs))
     // Schema-WIDENING evolution cannot ride the pruned path: rewriting only
     // touched buckets would leave untouched bucket files with the old
     // footer schema, and a later plain parquet read resolves the table
@@ -332,24 +322,24 @@ object ScdEngine {
     // in alignSchemas — neither widens disk, both stay pruned.) The
     // column-set probe reads ONE bucket directory's schema, not the whole
     // table (disk schema is uniform across buckets by construction).
-    val widens = cfg.onSchemaChange == "append_new_columns" && donor.exists { b =>
-      val tCols = readBuckets(Seq(b)).columns.map(_.toUpperCase).toSet
+    val widens = cfg.onSchemaChange == "append_new_columns" && {
+      val tCols = readBuckets(dirs.take(1)).columns.map(_.toUpperCase).toSet
       batch.columns.exists(c => !tCols.contains(c.toUpperCase))
     }
-    if (donor.isEmpty || widens) return false
+    if (widens) return false
     // Untouched buckets are validated only the FIRST time this contract is
     // seen on this target (marker absent): the pruned path never reads them
     // again, so a contract added/tightened on an existing table pays one
-    // full-coverage null-count (by DIRECTORY, off a listing), after which
+    // full-coverage null-count (by DIRECTORY, off the listing), after which
     // the marker certifies them. It runs before any write, so a violation
     // leaves the table and its neighbours untouched.
     contract.filterNot(c => fs.exists(contractMarkerPath(targetPath, c)))
       .foreach { c =>
-        val untouched = listBucketDirs(fs, targetPath).filterNot(touched.contains)
+        val untouched = dirs.filterNot(touched.contains)
         if (untouched.nonEmpty) Contracts.enforceNotNull(readBuckets(untouched), c)
       }
     val target =
-      if (existing.nonEmpty) readBuckets(existing) else readBuckets(donor.toSeq).limit(0)
+      if (existing.nonEmpty) readBuckets(existing) else readBuckets(dirs.take(1)).limit(0)
     // An SCD2 merge keeps the bucket column and clusters on it once; the
     // write's repartition on the same column then plans no second exchange.
     val snapshot =
@@ -390,7 +380,7 @@ object ScdEngine {
                        targetPath: String,
                        cfg: ScdConfig,
                        numBuckets: Option[Int],
-                       contract: Option[org.apache.spark.sql.types.StructType]): Path = {
+                       contract: Option[StructType]): Path = {
     val data = snapshot.drop(BucketCol)
     contract.foreach(Contracts.enforceStructural(data.schema, _))
     val tmp = new Path(targetPath + ".tmp")
@@ -416,7 +406,7 @@ object ScdEngine {
     // the check reads the written columns with the snapshot's schema: no
     // schema-inference job
     try contract.foreach(c =>
-      Contracts.enforceNotNull(spark.read.schema(data.schema).parquet(tmp.toString), c))
+      Contracts.enforceNotNull(read(spark, tmp.toString, Some(data.schema)), c))
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
     tmp
   }
@@ -433,7 +423,7 @@ object ScdEngine {
                          targetPath: String,
                          cfg: ScdConfig,
                          numBuckets: Option[Int],
-                         contract: Option[org.apache.spark.sql.types.StructType]): Unit = {
+                         contract: Option[StructType]): Unit = {
     val tmp = writeTmp(spark, fs, snapshot, targetPath, cfg, numBuckets, contract)
     val old = new Path(targetPath + ".old")
     val dst = new Path(targetPath)
@@ -452,20 +442,23 @@ object ScdEngine {
     * one-off full validation on the pruned bucketed path.
     */
   private def contractMarkerPath(targetPath: String,
-                                 contract: org.apache.spark.sql.types.StructType): Path = {
+                                 contract: StructType): Path = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(contract.json.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
     new Path(s"$targetPath/_CONTRACT_OK_$hex")
   }
 
-  /** The data schema Spark wrote into the footer of one part file of `dir`
-    * (key `org.apache.spark.sql.parquet.row.metadata`): the schema a parquet
-    * read would infer, read on the driver without a Spark job. None when no
-    * part file carries it.
+  /** The data schema Spark wrote into the footer of one part file of the
+    * table (key `org.apache.spark.sql.parquet.row.metadata`), in its first
+    * bucket directory of `dirs` or else its root: the schema a parquet read
+    * would infer, read on the driver without a Spark job. None when no part
+    * file carries it.
     */
-  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: String): Option[StructType] =
-    fs.listStatus(new Path(dir)).iterator.map(_.getPath)
+  private def footerSchema(spark: SparkSession, fs: FileSystem, targetPath: String,
+                           dirs: Seq[Int]): Option[StructType] =
+    fs.listStatus(new Path(dirs.headOption.fold(targetPath)(b => s"$targetPath/$BucketCol=$b")))
+      .iterator.map(_.getPath)
       .find(_.getName.endsWith(".parquet"))
       .flatMap { p =>
         val reader = ParquetFileReader.open(

@@ -6023,7 +6023,6 @@ object SparkEntry {
       // fact join, and the share window runs on the bounded year×nation
       // grid. Revenue is exact integer e4 (cents × discount-pct), so
       // every share is engine-exact.
-      import org.apache.spark.sql.expressions.Window
       val orders = Tables.read(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
                 year(col("o_orderdate")).as("o_year"))

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}

@@ -30,6 +30,13 @@ object ScdFunctions {
 
   def surrogateKeyOf(names: Seq[String]): Column = surrogateKey(names.map(col))
 
+  /** `incremental_predicates` as one conjunct (NULL = false; TRUE when
+    * none) of a merge's selection of stored rows, as in the reference's
+    * MERGE ON (`get_incremental_scd2_sql.sql:247-255`).
+    */
+  private[graft] def predicateConjunct(predicates: Seq[String]): Column =
+    predicates.map(expr).reduceOption(_ && _).fold(lit(true))(coalesce(_, lit(false)))
+
   /** Window over one key's versions in event-time order — the partition spec of
     * every window in the reference (`columns/<any>.sql`).
     */

@@ -1963,7 +1963,7 @@ object Dedup {
 
   private def ppjMatches(pref: DataFrame,
                          tauNum: Int, tauDen: Int,
-                         saltOverride: Option[Int] = None): DataFrame = {
+                         saltOverride: Option[Int]): DataFrame = {
     val spark = pref.sparkSession
     val k = saltOverride.getOrElse(ppjSaltFor(spark))
     val nPart = math.max(k, spark.sparkContext.defaultParallelism * 4)

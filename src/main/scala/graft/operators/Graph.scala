@@ -859,7 +859,7 @@ object Graph {
       // at the sweep budget, whichever first. Note sym deliberately keeps
       // a (a,b)+(b,a) input pair as two arcs each way, exactly as the
       // union above does.
-      var deg = scala.collection.mutable.HashMap.empty[Long, Long]
+      val deg = scala.collection.mutable.HashMap.empty[Long, Long]
       arcs.foreach { case (u, _) => deg.update(u, deg.getOrElse(u, 0L) + 1L) }
       var removed = deg.iterator.filter(_._2 < k).map(_._1).toArray
       removed.foreach(deg.remove)
@@ -1633,7 +1633,7 @@ object Graph {
     */
   private def sigmaBfs(sym: DataFrame, seeds: DataFrame,
                        ck: Seal.Tracker,
-                       gateEdges: Long = SmallGraphGate): DataFrame = {
+                       gateEdges: Long): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
     // Small-graph driver gate (r16, the r15 mirror discipline): the

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Incremental view maintenance for inner equi-joins: keep a materialized
   * join current by joining DELTAS, never re-running the full join.

@@ -585,7 +585,6 @@ object Profile {
                  candidates: Seq[(String, String)]): DataFrame = {
     require(candidates.nonEmpty,
             "fdStrength: at least one (a, b) candidate FD required")
-    val spark = df.sparkSession
     candidates.map { case (a, b) =>
       val ab = df.groupBy(col(a).as("_a"), col(b).as("_b"))
         .agg(count(lit(1)).as("_n"))

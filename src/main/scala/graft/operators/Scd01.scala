@@ -46,7 +46,9 @@ object Scd01 {
     *     (`get_incremental_scd1_sql.sql:55-93`)
     *   - type 0: matched -> no action; not matched -> insert.
     *     (`get_incremental_scd0_sql.sql:50-83`)
-    * Returns the post-merge snapshot.
+    * `incremental_predicates` are one more conjunct of the join condition
+    * (MERGE ON): a target row failing them matches nothing and passes
+    * through. Returns the post-merge snapshot.
     */
   def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
     cfg.validate()
@@ -64,7 +66,7 @@ object Scd01 {
     val t = target.withColumn("_t_exists", lit(true))
     val joinCond = keys
       .map(k => col(k) <=> col(s"_s_$k"))
-      .reduce(_ && _)
+      .reduce(_ && _) && predicateConjunct(cfg.incrementalPredicates)
     val joined = t.join(s, joinCond, "full_outer")
     val sourceOnly = col("_t_exists").isNull
 

@@ -130,8 +130,9 @@ object Scd2 {
 
   /** The batch's business columns, the target rows that bypass the
     * timeline, the [[timeline]] of the batch ∪ the persisted versions it may
-    * affect, and the column flagging the timeline rows it selected. The
-    * layout decides the selection (J1/J2 below):
+    * affect, and the column flagging the timeline rows it selected: stored
+    * rows of batch keys (J1/J2 below) that pass the `incremental_predicates`
+    * (NULL = false; MERGE ON). The layout decides how they are selected:
     *
     *   - unclustered (`bucket` None): the batch's distinct keys broadcast
     *     into a semi-join that pulls the affected versions and an anti-join
@@ -162,8 +163,11 @@ object Scd2 {
     val targetCols = target.columns.toSeq
     val validTo = resolveCi(targetCols, cfg.validToCol)
     val loadedAt = destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol))
+    // audit columns keep their names until the selection is made
     val stored = destCols.map(c => col(resolveCi(targetCols, c)).as(c)) ++
-      cfg.auditColumns.map(a => col(resolveCi(targetCols, a)).as(s"_t_$a"))
+      cfg.auditColumns.map(a => col(resolveCi(targetCols, a)).as(a))
+    def renamed(df: DataFrame) = df.withColumnsRenamed(cfg.auditColumns.map(a => a -> s"_t_$a").toMap)
+    val inScope = predicateConjunct(cfg.incrementalPredicates)
 
     // previous_record (:93-118): pull from the target ONLY prior versions of
     // keys present in the batch — the affected-key pruning that keeps
@@ -184,12 +188,12 @@ object Scd2 {
           .distinct()
         val keysMatch = keys.map(k => col(k) <=> col(s"_n_$k")).reduce(_ && _)
         val nu = col(s"_n_$updatedAt")
-        val semiCond =
+        val semiCond = inScope && (
           if (cfg.updateAllPreviousRecords) keysMatch
           else keysMatch && (nu <= col(validTo) ||
-                               nu.isNull && col(resolveCi(targetCols, updatedAt)).isNull)
+                               nu.isNull && col(resolveCi(targetCols, updatedAt)).isNull))
         val previousRecord = tagged(
-          target.join(probe, semiCond, "left_semi").select(stored: _*), "previous", check)
+          renamed(target.join(probe, semiCond, "left_semi").select(stored: _*)), "previous", check)
         // all_records (:123-145) through scd2_versions + redundant_versions
         // (:149-229)
         (destCols,
@@ -210,13 +214,13 @@ object Scd2 {
         val u = col(updatedAt)
         val hit =
           if (cfg.updateAllPreviousRecords) max(isNew).over(byKey)
-          else min(when(isNew, u)).over(byKey) <= col(s"_t_${cfg.validToCol}") ||
+          else min(when(isNew, u)).over(byKey) <= col(cfg.validToCol) ||
                  u.isNull && max(isNew && u.isNull).over(byKey)
         val sel = col(SelCol)
+        val flagged = renamed(all.withColumn(SelCol, isNew || inScope && coalesce(hit, lit(false))))
         (destCols,
          None,
-         timeline(withTags(all.withColumn(SelCol, isNew || coalesce(hit, lit(false))), check, sel),
-                  cfg, b +: keys :+ SelCol, updatedAt, loadedAt, sel),
+         timeline(withTags(flagged, check, sel), cfg, b +: keys :+ SelCol, updatedAt, loadedAt, sel),
          sel)
     }
   }

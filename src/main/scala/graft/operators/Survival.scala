@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,7 +38,6 @@ object Survival {
                   durationCol: String = "duration",
                   censoredCol: String = "censored"): DataFrame = {
     val spark = durations.sparkSession
-    import spark.implicits._
     val perT = durations
       .groupBy(col(durationCol).cast("long").as("t"))
       .agg(count(lit(1)).as("n_all"),

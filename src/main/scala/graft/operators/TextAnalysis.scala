@@ -333,7 +333,6 @@ object TextAnalysis {
                idCol: String,
                textCol: String,
                vocabSize: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc_id"),
                          explode_outer(tokens(col(textCol))).as("token"))
     // top-vocabSize via TakeOrdered, not a global rank window over the

@@ -68,7 +68,7 @@ final case class SummaryRewrite(
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg @ Aggregate(groupings, aggExprs, child, _) if isBase(child) &&
+    case Aggregate(groupings, aggExprs, child, _) if isBase(child) &&
         groupings.forall {
           case a: AttributeReference => groupCols(a.name.toLowerCase)
           case _ => false

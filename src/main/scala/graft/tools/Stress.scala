@@ -256,7 +256,7 @@ object Stress {
     val ovK = time(s"oov ${k}x")(TextAnalysis.oovStats(dK, "doc_id", "text"))
 
     // Round-3b operators --------------------------------------------------
-    import graft.operators.{Intervals, Linkage, SkewJoin}
+    import graft.operators.{Intervals, SkewJoin}
     def sessDim(df: DataFrame) = {
       val sess = Sessionize.sessions(df, "user_id", "ts", "event_type")
         .withColumn("sess_end_x",

@@ -42,14 +42,19 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
 
   private def df(rs: Seq[(Option[Int], String, java.sql.Timestamp, java.sql.Timestamp)],
-                 load: Option[Int]): DataFrame = {
+                 load: Option[Int], createdAt: Boolean = false): DataFrame = {
     val d = rs.toDF("k", "v", "_updated_at", "deleted_at")
-    load.fold(d)(i => d.withColumn("_loaded_at", lit(slot(20 + i))))
+    val c = if (createdAt) d.withColumn("created_at", expr("_updated_at - INTERVAL 12 HOURS")) else d
+    load.fold(c)(i => c.withColumn("_loaded_at", lit(slot(20 + i))))
   }
 
-  /** A merge configuration, its input shape and arrival order. */
+  /** A merge configuration, its input shape and arrival order. With
+    * `oneRowPerVersion` a batch holds one row per (key, slot), for SCD
+    * types 0/1, whose in-batch winner has no tie-break.
+    */
   private case class Case(cfg: ScdConfig, nullKey: Boolean = false,
-                          inOrder: Boolean = false, loadedAt: Boolean = false)
+                          inOrder: Boolean = false, loadedAt: Boolean = false,
+                          createdAt: Boolean = false, oneRowPerVersion: Boolean = false)
 
   test("bucketed merge == unbucketed merge over random batch splits") {
     val base = ScdConfig(uniqueKey = Seq("k"))
@@ -68,10 +73,19 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
              nullKey = true, inOrder = true),
       // the later batches touch keys 0..2 only; keys 3..5 fail the
       // predicate and pass through
-      "incremental_predicates" -> Case(base.copy(incrementalPredicates = Seq("k <= 2"))))
+      "incremental_predicates" -> Case(base.copy(incrementalPredicates = Seq("k <= 2"))),
+      // a later batch back-dates a key's first version: the clustered
+      // merge recomputes the stored version's created_at start
+      // (_valid_from is a merge-update column)
+      "created_at" -> Case(base.copy(createdAtCol = Some("created_at")), createdAt = true),
+      // SCD type 1: the predicates are a conjunct of the full-outer join
+      "SCD1, incremental_predicates" ->
+        Case(base.copy(scdType = 1, incrementalPredicates = Seq("k <= 2")),
+             oneRowPerVersion = true))
     val rnd = new Random(97)
     for ((name, c) <- cases; trial <- 1 to 2) {
-      val all = rows(rnd, c.nullKey)
+      val drawn = rows(rnd, c.nullKey)
+      val all = if (c.oneRowPerVersion) drawn.distinctBy(r => (r._1, r._3)) else drawn
       val ordered = if (c.inOrder) all.sortBy(_._3.getTime) else rnd.shuffle(all)
       val (first, rest) = ordered.splitAt(ordered.size / 3)
       val later =
@@ -81,7 +95,7 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val tag = s"$name, trial $trial"
       val (bucketed, flat) = (tempPath("bucketed"), tempPath("flat"))
       for ((b, i) <- batches.zipWithIndex; (path, n) <- Seq(bucketed -> Some(8), flat -> None))
-        ScdEngine.merge(spark, df(b, Some(i).filter(_ => c.loadedAt)), path, c.cfg,
+        ScdEngine.merge(spark, df(b, Some(i).filter(_ => c.loadedAt), c.createdAt), path, c.cfg,
                         numBuckets = n)
       val got = spark.read.parquet(bucketed).drop(ScdEngine.BucketCol)
       val want = spark.read.parquet(flat)
@@ -104,6 +118,63 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val (out, jobs) =
       try jobsDuring(body) finally spark.listenerManager.unregister(listener)
     (out, jobs, plans.asScala.toSeq)
+  }
+
+  private def pinBatch(rs: Seq[(Int, String, Int)]): DataFrame =
+    rs.map { case (k, v, s) => (k, v, slot(s), null: java.sql.Timestamp) }
+      .toDF("k", "v", "_updated_at", "deleted_at")
+
+  /** A 200-key table in 16 buckets, warmed by one merge. */
+  private def warmTable(name: String, cfg: ScdConfig): String = {
+    val path = tempPath(name)
+    val history = (1 to 200).map(k => (k, "a", 0)) ++ (1 to 200 by 7).map(k => (k, "b", 2))
+    ScdEngine.merge(spark, pinBatch(history), path, cfg, numBuckets = Some(16))
+    ScdEngine.merge(spark, pinBatch(Seq((3, "c", 3), (50, "c", 1), (201, "a", 3))), path, cfg,
+                    numBuckets = Some(16))
+    path
+  }
+
+  private val pinB2 = Seq((8, "d", 4), (99, "a", 1), (150, "d", 5), (202, "a", 4))
+
+  test("a warm bucketed run reads the table back without a job of its own") {
+    val cfg = ScdConfig(uniqueKey = Seq("k"), deletedAtCol = Some("deleted_at"))
+    val (merged, ran) = (warmTable("merge", cfg), warmTable("run", cfg))
+    val (_, mergeJobs) = jobsDuring {
+      ScdEngine.merge(spark, pinBatch(pinB2), merged, cfg, numBuckets = Some(16))
+    }
+    val (out, runJobs) = jobsDuring {
+      ScdEngine.run(spark, pinBatch(pinB2), ran, cfg, numBuckets = Some(16))
+    }
+    assert(mergeJobs <= 3, s"the merge ran $mergeJobs jobs")
+    assert(runJobs === mergeJobs, s"run: $runJobs jobs, its merge: $mergeJobs")
+    val want = spark.read.parquet(merged)
+    assert(out.columns.toSet === want.columns.toSet)
+    val cols = want.columns.map(col).toSeq
+    assert(out.select(cols: _*).exceptAll(want).count() === 0)
+    assert(want.exceptAll(out.select(cols: _*)).count() === 0)
+  }
+
+  test("a warm bucketed merge with incremental_predicates writes over one exchange") {
+    val cfg = ScdConfig(uniqueKey = Seq("k"), deletedAtCol = Some("deleted_at"),
+                        incrementalPredicates = Seq("k <= 150"))
+    val path = warmTable("predicates", cfg)
+    val (_, jobs, plans) = plansDuring {
+      ScdEngine.merge(spark, pinBatch(pinB2), path, cfg, numBuckets = Some(16))
+    }
+    assert(jobs <= 3, s"the merge ran $jobs jobs")
+    val writes = plans.filter(find(_)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+    assert(writes.size === 1, plans.mkString("\n"))
+    val write = writes.head
+    assert(collect(write) { case e: ShuffleExchangeLike => e }.size === 1, write)
+    assert(collect(write) { case e: BroadcastExchangeLike => e }.isEmpty, write)
+    // every batch key with a history passes the predicates, so the table
+    // is a full refresh
+    val got = spark.read.parquet(path).drop(ScdEngine.BucketCol)
+    val history = (1 to 200).map(k => (k, "a", 0)) ++ (1 to 200 by 7).map(k => (k, "b", 2)) ++
+      Seq((3, "c", 3), (50, "c", 1), (201, "a", 3)) ++ pinB2
+    val full = Scd2.initialLoad(pinBatch(history), cfg).select(got.columns.map(col).toSeq: _*)
+    assert(got.exceptAll(full).count() === 0)
+    assert(full.exceptAll(got).count() === 0)
   }
 
   test("a warm bucketed merge runs at most 3 jobs and writes over one exchange") {
