@@ -17,11 +17,11 @@ import graft.operators.{Scd01, Scd2}
   * + `scd_plan.sql:24-282`), including the MERGE sink rewrite of SURVEY.md §4.3.
   *
   * Vanilla Spark-over-Parquet has no transactional MERGE, so the merge result
-  * is computed as a full snapshot and swapped in via write-new-dir-and-rename.
+  * is computed as a snapshot and swapped in via write-new-dir-and-rename.
   * Atomicity story (SURVEY.md §7.4.1): the new snapshot is fully written to a
-  * sibling `<target>.tmp` directory before any destructive rename; a crash
-  * before the swap leaves the old table intact, a crash between the two renames
-  * leaves `<target>.old` recoverable by hand. (A real deployment would layer a
+  * sibling `<target>.tmp` directory before [[swap]]'s one commit point; a crash
+  * before it leaves the old table intact, a crash after it is finished forward
+  * by the next [[merge]] or [[runWithCdc]]. (A real deployment would layer a
   * transactional table format; the engine semantics are format-agnostic.)
   *
   * == Scale design: key-bucketed layout ==
@@ -53,10 +53,9 @@ import graft.operators.{Scd01, Scd2}
   *
   * Every read of the table goes through [[read]], with the data schema
   * taken from one part file's footer, read once per merge: no read runs a
-  * schema-inference job. Both swaps — the whole-table one of [[atomicSwap]]
-  * and the per-bucket one of the pruned path — stage the snapshot through
+  * schema-inference job. Every write stages its snapshot through
   * [[writeTmp]], the one place that writes `<target>.tmp` and enforces the
-  * contract on it.
+  * contract on it, and commits it through [[swap]].
   */
 object ScdEngine {
 
@@ -94,7 +93,8 @@ object ScdEngine {
   /** Run one SCD maintenance step against a Parquet table at `targetPath`:
     * initial load when the target does not exist (or `fullRefresh`), otherwise
     * incremental merge. Returns the post-run snapshot (read back from disk —
-    * lineage is truncated at the write, exactly like a warehouse table).
+    * lineage is truncated at the write, exactly like a warehouse table). A
+    * swap an earlier run left cut off past its commit point is finished first.
     *
     * `contract` (dbt `contract: enforced`) declares the REQUIRED schema of
     * the final relation — names, Catalyst types, nullability
@@ -144,25 +144,25 @@ object ScdEngine {
             contract: Option[StructType] = None): Unit = {
     cfg.validate()
     val fs = fileSystem(spark, targetPath)
+    resume(fs, targetPath)
     // S2: materialize the batch once (temp CTAS equivalent) so schema
     // introspection + the multiple passes below reuse one computation.
     val batch = delta.cache()
     try {
-      if (!fs.exists(new Path(targetPath)) || fullRefresh)
-        atomicSwap(spark, fs, initial(batch, cfg), targetPath, cfg,
-                   numBuckets, contract)
-      else {
-        val dirs = listBucketDirs(fs, targetPath)
-        val schema = footerSchema(spark, fs, targetPath, dirs)
-        if (!numBuckets.exists(n => incrementalBucketed(spark, fs, batch, targetPath,
-                                                        dirs, schema, cfg, n, contract)))
-          // Full rewrite: an unbucketed table, or a bucketed run the pruned
-          // path declined. The read's bucket column is dropped; writeTmp
-          // derives it afresh when the layout is bucketed.
-          atomicSwap(spark, fs,
-                     incremental(read(spark, targetPath, schema).drop(BucketCol), batch, cfg),
-                     targetPath, cfg, numBuckets, contract)
-      }
+      val (snapshot, pruned) =
+        if (!fs.exists(new Path(targetPath)) || fullRefresh) (initial(batch, cfg), false)
+        else {
+          val dirs = listBucketDirs(fs, targetPath)
+          val schema = footerSchema(spark, fs, targetPath, dirs)
+          numBuckets.flatMap(n => incrementalBucketed(spark, fs, batch, targetPath,
+                                                      dirs, schema, cfg, n, contract))
+            .map((_, true)).getOrElse(
+              // Full rewrite: an unbucketed table, or a bucketed run the pruned
+              // path declined. The read's bucket column is dropped; writeTmp
+              // derives it afresh when the layout is bucketed.
+              (incremental(read(spark, targetPath, schema).drop(BucketCol), batch, cfg), false))
+        }
+      swap(spark, fs, snapshot, targetPath, cfg, numBuckets, contract, pruned)
     } finally batch.unpersist() // S7: post-run temp drop
   }
 
@@ -171,7 +171,8 @@ object ScdEngine {
     * stamped with `runId` — the batch counterpart of
     * [[graft.streaming.CdcStream]] (same changelog contract: replayable via
     * `Scd2.applyDelta`, dedupable on (_batch_id, version key) under
-    * retries). The pre-run snapshot is pinned with an eager localCheckpoint
+    * retries). A swap an earlier run left cut off is finished first, so its
+    * batch is in the pre-run snapshot, pinned with an eager localCheckpoint
     * before the directory swap invalidates its file listing. SCD2 only.
     */
   def runWithCdc(spark: SparkSession,
@@ -182,7 +183,9 @@ object ScdEngine {
                  cfg: ScdConfig,
                  numBuckets: Option[Int] = None): DataFrame = {
     require(cfg.scdType == 2, "CDC changelog export is SCD2-only")
-    val prev = Option.when(fileSystem(spark, targetPath).exists(new Path(targetPath)))(
+    val fs = fileSystem(spark, targetPath)
+    resume(fs, targetPath)
+    val prev = Option.when(fs.exists(new Path(targetPath)))(
       readTable(spark, targetPath).localCheckpoint())
     val next = run(spark, delta, targetPath, cfg, numBuckets = numBuckets)
     Scd2.snapshotDelta(prev.getOrElse(next.limit(0)), next, cfg, includePayload = true)
@@ -283,22 +286,17 @@ object ScdEngine {
     pmod(hash(keys.map(col): _*), lit(n))
 
   /** Incremental over a bucketed target whose bucket ids are `dirs` and
-    * data schema `schema` ([[footerSchema]]): prune the target scan AND the
-    * rewrite to the buckets the batch touches. Returns false, having
-    * written nothing, when the run needs the full rewrite instead: the
-    * target has no bucket directory at all (an unbucketed table being
-    * bucketed — merging only the touched buckets would leave the old root
-    * files beside them), or the batch widens the schema.
+    * data schema `schema` ([[footerSchema]]): the snapshot of ONLY the
+    * buckets the batch touches. None when the run needs the full rewrite
+    * instead: the target has no bucket directory at all (an unbucketed
+    * table being bucketed — merging only the touched buckets would leave
+    * the old root files beside them), or the batch widens the schema.
     */
-  private def incrementalBucketed(spark: SparkSession,
-                                  fs: FileSystem,
-                                  batch: DataFrame,
-                                  targetPath: String,
-                                  dirs: Seq[Int], schema: Option[StructType],
-                                  cfg: ScdConfig,
-                                  n: Int,
-                                  contract: Option[StructType]): Boolean = {
-    if (dirs.isEmpty) return false
+  private def incrementalBucketed(spark: SparkSession, fs: FileSystem, batch: DataFrame,
+                                  targetPath: String, dirs: Seq[Int],
+                                  schema: Option[StructType], cfg: ScdConfig, n: Int,
+                                  contract: Option[StructType]): Option[DataFrame] = {
+    if (dirs.isEmpty) return None
     val keys = cfg.uniqueKey.map(resolveCi(batch.columns.toSeq, _))
     // Which buckets does the batch touch? One job over the cached batch
     // (it also fills the cache): each partition returns its set of bucket
@@ -326,7 +324,7 @@ object ScdEngine {
       val tCols = readBuckets(dirs.take(1)).columns.map(_.toUpperCase).toSet
       batch.columns.exists(c => !tCols.contains(c.toUpperCase))
     }
-    if (widens) return false
+    if (widens) return None
     // Untouched buckets are validated only the FIRST time this contract is
     // seen on this target (marker absent): the pruned path never reads them
     // again, so a contract added/tightened on an existing table pays one
@@ -342,25 +340,12 @@ object ScdEngine {
       if (existing.nonEmpty) readBuckets(existing) else readBuckets(dirs.take(1)).limit(0)
     // An SCD2 merge keeps the bucket column and clusters on it once; the
     // write's repartition on the same column then plans no second exchange.
-    val snapshot =
-      if (cfg.scdType == 2) incremental(target, batch, cfg, Some(n))
-      else incremental(target.drop(BucketCol), batch, cfg)
-    val tmp = writeTmp(spark, fs, snapshot, targetPath, cfg, Some(n), contract)
-    for (b <- touched) {
-      val dst = new Path(s"$targetPath/$BucketCol=$b")
-      val src = new Path(tmp, s"$BucketCol=$b")
-      fs.delete(dst, true)
-      // the merged bucket in tmp is now the ONLY copy of its history
-      if (fs.exists(src)) rename(fs, src, dst)
-    }
-    fs.delete(tmp, true)
-    contract.foreach(c =>
-      fs.create(contractMarkerPath(targetPath, c), true).close())
-    true
+    Some(if (cfg.scdType == 2) incremental(target, batch, cfg, Some(n))
+         else incremental(target.drop(BucketCol), batch, cfg))
   }
 
-  /** `fs.rename` that fails loudly: a false return throws before the
-    * caller's next delete can remove the only other copy of the data.
+  /** `fs.rename` that fails loudly: a false return throws before any delete,
+    * leaving the live table intact or, past the commit point, [[resume]]'s input.
     */
   private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
@@ -371,16 +356,12 @@ object ScdEngine {
     * then the write (bucket column added and rows clustered onto it when
     * bucketed), then declared NOT NULL off the WRITTEN bytes (a narrow
     * parquet column scan — the snapshot pipeline is not re-executed). A
-    * violation deletes the tmp directory and rethrows, so the caller's
-    * swap never starts and the live table survives untouched.
+    * violation deletes the tmp directory and rethrows, so [[swap]] never
+    * reaches its commit point and the live table survives untouched.
     */
-  private def writeTmp(spark: SparkSession,
-                       fs: FileSystem,
-                       snapshot: DataFrame,
-                       targetPath: String,
-                       cfg: ScdConfig,
-                       numBuckets: Option[Int],
-                       contract: Option[StructType]): Path = {
+  private def writeTmp(spark: SparkSession, fs: FileSystem, snapshot: DataFrame,
+                       targetPath: String, cfg: ScdConfig, numBuckets: Option[Int],
+                       contract: Option[StructType]): Unit = {
     val data = snapshot.drop(BucketCol)
     contract.foreach(Contracts.enforceStructural(data.schema, _))
     val tmp = new Path(targetPath + ".tmp")
@@ -408,32 +389,51 @@ object ScdEngine {
     try contract.foreach(c =>
       Contracts.enforceNotNull(read(spark, tmp.toString, Some(data.schema)), c))
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    tmp
   }
 
-  /** Write-new-dir-and-swap (SURVEY.md §4.3.2): breaks the read-write cycle on
-    * `targetPath` (the snapshot's lineage reads the same path it replaces).
-    * The snapshot is staged and checked by [[writeTmp]]; only then is the
-    * old table moved aside. A passing full-snapshot validation certifies
-    * every row, so the contract marker lands post-swap.
+  /** Write-new-dir-and-swap (SURVEY.md §4.3.2), the one routine that renames
+    * into the table; it breaks the read-write cycle on `targetPath` (the
+    * snapshot's lineage reads the same path it replaces). The snapshot (with
+    * `pruned`, of the touched buckets only) is staged and checked by
+    * [[writeTmp]]; then the commit point: the live table's rename to `.old`,
+    * or with `pruned` the creation of `.old`. A passing validation certifies
+    * every row the snapshot holds, so the contract marker lands post-swap.
     */
-  private def atomicSwap(spark: SparkSession,
-                         fs: FileSystem,
-                         snapshot: DataFrame,
-                         targetPath: String,
-                         cfg: ScdConfig,
-                         numBuckets: Option[Int],
-                         contract: Option[StructType]): Unit = {
-    val tmp = writeTmp(spark, fs, snapshot, targetPath, cfg, numBuckets, contract)
-    val old = new Path(targetPath + ".old")
+  private def swap(spark: SparkSession, fs: FileSystem, snapshot: DataFrame,
+                   targetPath: String, cfg: ScdConfig, numBuckets: Option[Int],
+                   contract: Option[StructType], pruned: Boolean): Unit = {
+    writeTmp(spark, fs, snapshot, targetPath, cfg, numBuckets, contract)
     val dst = new Path(targetPath)
-    fs.delete(old, true)
-    if (fs.exists(dst)) rename(fs, dst, old)
-    rename(fs, tmp, dst) // on failure `.old` holds the previous table
-    fs.delete(old, true)
-    contract.foreach(c =>
-      fs.create(contractMarkerPath(targetPath, c), true).close())
+    if (pruned) fs.mkdirs(dst.suffix(".old"))
+    else if (fs.exists(dst)) rename(fs, dst, dst.suffix(".old"))
+    finishSwap(fs, dst)
+    contract.foreach(c => fs.create(contractMarkerPath(targetPath, c), true).close())
   }
+
+  /** The second half of [[swap]], idempotent so [[resume]] can re-run it:
+    * with no live table `.tmp` becomes the table; otherwise each bucket
+    * directory in `.tmp` replaces its live bucket, moved to `.old` first;
+    * then both are deleted. Finishing forward is safe: the merge absorbs a
+    * re-applied batch (SCD2's dedup keeps the stored version; 0/1 idempotent).
+    */
+  private def finishSwap(fs: FileSystem, dst: Path): Unit = {
+    val (tmp, old) = (dst.suffix(".tmp"), dst.suffix(".old"))
+    if (!fs.exists(dst)) rename(fs, tmp, dst)
+    else if (fs.exists(tmp))
+      for (b <- listBucketDirs(fs, tmp.toString)) {
+        val live = new Path(dst, s"$BucketCol=$b")
+        if (fs.exists(live)) rename(fs, live, new Path(old, live.getName))
+        rename(fs, new Path(tmp, live.getName), live)
+      }
+    fs.delete(old, true)
+    fs.delete(tmp, true)
+  }
+
+  /** Finishes a [[swap]] cut off past its commit point, which `.old` marks
+    * (a `.tmp` without it is a cut-off write, which [[writeTmp]] discards).
+    */
+  private def resume(fs: FileSystem, targetPath: String): Unit =
+    if (fs.exists(new Path(targetPath + ".old"))) finishSwap(fs, new Path(targetPath))
 
   /** Marker certifying "this exact contract passed in full against this
     * table": `_CONTRACT_OK_<md5(contract.json) prefix>` at the table root —

@@ -16,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * data and pre-commit files the same way; its txn file is the commit
   * point.
   *
-  * Why not rename-swap (ScdEngine.atomicSwap): between its two renames the
-  * table path does not exist — a concurrent reader errors. Here a reader
+  * Why not rename-swap (ScdEngine.swap): between its renames the table path
+  * (or a replaced bucket) does not exist — a concurrent reader errors, even
+  * though the next merge finishes a swap cut off there. Here a reader
   * always sees the previous committed snapshot until the marker exists
   * (file create is atomic on HDFS-like and object stores' PUT), so
   * publish/read race-free without a lock service. The price is one full

@@ -16,7 +16,11 @@ import graft.{ScdConfig, ScdEngine}
   *
   * The pre-merge snapshot is pinned with an eager `localCheckpoint` BEFORE
   * the merge swaps the target directory underneath its file listing —
-  * without it the lazy read would resolve against the post-swap files. The
+  * without it the lazy read would resolve against the post-swap files. A
+  * micro-batch cut off mid-swap, past the swap's commit point, is finished
+  * by the next one before that one reads its pre-merge snapshot; the
+  * cut-off batch's own changes then reach no changelog (a replay of it
+  * finds them already applied). The
   * changelog write is append-only with a `_batch_id` column: at-least-once
   * `foreachBatch` retries overwrite their own batch deterministically
   * (same inputs -> same delta), so consumers dedup on (_batch_id, key).

@@ -26,11 +26,13 @@ object ScdStream {
   /** Attach an SCD sink to a streaming DataFrame. Caller starts/stops the
     * returned writer (`.start()`).
     *
-    * Replay semantics: a crash-replayed micro-batch re-runs the merge.
-    * That is SEMANTICALLY absorbed (redundant-version collapse makes the
-    * merge content-idempotent) but pays a full merge; [[scdSinkVersioned]]
-    * is the variant that detects the replay via the batch token and skips
-    * it outright.
+    * Replay semantics: a micro-batch cut off mid-swap is finished by the
+    * next one (`ScdEngine.merge` completes a swap past its commit point
+    * before it reads the table), and a crash-replayed micro-batch re-runs
+    * the merge. That is SEMANTICALLY absorbed (redundant-version collapse
+    * makes the merge content-idempotent) but pays a full merge;
+    * [[scdSinkVersioned]] is the variant that detects the replay via the
+    * batch token and skips it outright.
     */
   def scdSink(stream: DataFrame,
               targetPath: String,

@@ -153,6 +153,90 @@ class ScdEngineWriterSpec extends SparkTestBase {
       assert(spark.read.parquet(s"$d/dim.tmp").count() === 2)
     }
   }
+
+  private def rows(v: String, t: String, keys: Int*) =
+    keys.map(k => (k, v, ts(t))).toDF("k", "v", "_updated_at")
+
+  // One swap cut off at one rename, then the next merge, run normally.
+  private case class CutSwap(name: String, buckets: Option[Int],
+                             refuse: (Path, Path) => Boolean, pastCommit: Boolean)
+
+  test("a swap cut off at any of its renames is finished by the next merge") {
+    val n = 8
+    val bucketOfKey = (1 to n).toDF("k")
+      .select($"k", ScdEngine.bucketOf(Seq("k"), n)).as[(Int, Int)].collect().toMap
+    // two keys in different buckets, so a merge of both rewrites 2 buckets
+    val keys = Seq(1, (2 to n).find(bucketOfKey(_) != bucketOfKey(1)).get)
+    def dirOf(k: Int) = s"${ScdEngine.BucketCol}=${bucketOfKey(k)}"
+    val bucketCuts = keys.flatMap(k => Seq(
+      CutSwap(s"bucket of key $k: live -> .old", Some(n),
+              (_, dst) => dst.getParent.getName == "dim.old" && dst.getName == dirOf(k),
+              pastCommit = true),
+      CutSwap(s"bucket of key $k: .tmp -> live", Some(n),
+              (src, _) => src.getParent.getName == "dim.tmp" && src.getName == dirOf(k),
+              pastCommit = true)))
+    val cuts = Seq(
+      CutSwap("whole table: live -> .old", None, (_, dst) => dst.getName == "dim.old",
+              pastCommit = false),
+      CutSwap("whole table: .tmp -> live", None, (src, _) => src.getName == "dim.tmp",
+              pastCommit = true)) ++ bucketCuts
+    val failures = cuts.flatMap { cut =>
+      var failure = Option.empty[String]
+      withNoRenameFs("graft-writer-cut") { (d, root) =>
+        // every key of `keys` changes in every batch; one more key only in a
+        val all = keys ++ (1 to n).filterNot(keys.contains).take(1)
+        val (a, b, c) = (rows("a", "2025-01-01 00:00:00", all: _*),
+                         rows("b", "2025-01-02 00:00:00", keys: _*),
+                         rows("c", "2025-01-03 00:00:00", keys: _*))
+        def merge(df: org.apache.spark.sql.DataFrame) =
+          ScdEngine.merge(spark, df, s"$root/dim", cfg, numBuckets = cut.buckets)
+        merge(a)
+        NoRenameFs.refuse = cut.refuse
+        val cutOff = scala.util.Try(merge(b)).failed.toOption
+        NoRenameFs.refuse = (_, _) => false
+        merge(c)
+        val applied = if (cut.pastCommit) Seq(a, b, c) else Seq(a, c)
+        val want = operators.Scd2.initialLoad(applied.reduce(_ union _), cfg)
+        val got = spark.read.parquet(s"$d/dim").drop(ScdEngine.BucketCol)
+          .select(want.columns.map(col): _*)
+        val violations = ScdInvariants.report(got, cfg).filter($"violations" > 0)
+          .as[(String, Long)].collect()
+        val problems = Seq(
+          Option.when(!cutOff.exists(_.isInstanceOf[java.io.IOException]))(
+            s"merge of b did not throw at the refused rename: $cutOff"),
+          Option.when(got.count() != want.count())(
+            s"${got.count()} rows where there should be ${want.count()}"),
+          Option.when(!got.exceptAll(want).isEmpty || !want.exceptAll(got).isEmpty)(
+            "table differs from Scd2.initialLoad over the applied batches"),
+          Option.when(violations.nonEmpty)(s"invariant violations ${violations.toSeq}"),
+          Option.when(new java.io.File(s"$d/dim.tmp").exists ||
+                      new java.io.File(s"$d/dim.old").exists)(".tmp or .old left behind")
+        ).flatten
+        if (problems.nonEmpty) failure = Some(s"${cut.name}: ${problems.mkString("; ")}")
+      }
+      failure
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("runWithCdc after a cut-off swap emits the uninterrupted changelog") {
+    withNoRenameFs("graft-writer-cdc") { (d, root) =>
+      val batches = Seq("a", "b", "c").zipWithIndex
+        .map { case (v, i) => batch(v, s"2025-01-0${i + 1} 00:00:00") }
+      for ((b, i) <- batches.zipWithIndex)
+        ScdEngine.runWithCdc(spark, b, s"$d/ref", s"$d/ref_cdc", i.toLong, cfg)
+      ScdEngine.merge(spark, batches(0), s"$root/dim", cfg)
+      NoRenameFs.refuse = (src, _) => src.getName == "dim.tmp"
+      intercept[java.io.IOException](ScdEngine.merge(spark, batches(1), s"$root/dim", cfg))
+      NoRenameFs.refuse = (_, _) => false
+      ScdEngine.runWithCdc(spark, batches(2), s"$root/dim", s"$d/dim_cdc", 2L, cfg)
+      val want = spark.read.parquet(s"$d/ref_cdc").filter($"_batch_id" === 2)
+      val got = spark.read.parquet(s"$d/dim_cdc").select(want.columns.map(col): _*)
+      assert(want.count() === 2) // b's version closed, c's inserted
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"changelog:\n${got.collect().mkString("\n")}\nwanted:\n${want.collect().mkString("\n")}")
+    }
+  }
 }
 
 /** Local file system under its own `norename` scheme whose `rename`
