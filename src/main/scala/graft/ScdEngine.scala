@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -32,12 +33,14 @@ import graft.operators.{Scd01, Scd2}
   * work by business key, so an incremental run:
   *
   *   1. finds the buckets the delta batch touches in one job (each
-  *      partition of the cached batch returns its set of bucket ids),
+  *      partition of the checkpointed batch returns its set of bucket ids),
   *   2. learns which bucket directories exist from one top-level listing
   *      of their NAMES, and reads ONLY the touched ones among them (the
   *      contents of untouched buckets are never listed or read),
-  *   3. merges batch ∪ slice over ONE exchange on the bucket column
-  *      ([[Scd2.incrementalClustered]]; SCD2),
+  *   3. merges batch ∪ slice over ONE exchange on the bucket column, for
+  *      every SCD type ([[Scd2.incrementalClustered]],
+  *      [[Scd01.incrementalClustered]]): the stored rows no batch row
+  *      selects pass around the merge over that same exchange,
   *   4. rewrites ONLY the touched bucket directories; the write reuses the
   *      merge's clustering, so the whole merge is three jobs: the touched
   *      buckets, the exchange, the write (plus Spark's parallel listing
@@ -104,7 +107,7 @@ object ScdEngine {
     * ALREADY-WRITTEN tmp output right before the swap (the snapshot plan is
     * never executed twice just to validate it). A violating snapshot is
     * never published — its tmp directory is deleted and the old table
-    * survives untouched. The cached delta batch is exempt, mirroring
+    * survives untouched. The checkpointed delta batch is exempt, mirroring
     * `create_temp_table_as.sql:1-5` (the temp holds raw business columns
     * only — audit columns arrive downstream).
     *
@@ -146,8 +149,12 @@ object ScdEngine {
     val fs = fileSystem(spark, targetPath)
     resume(fs, targetPath)
     // S2: materialize the batch once (temp CTAS equivalent) so schema
-    // introspection + the multiple passes below reuse one computation.
-    val batch = delta.cache()
+    // introspection + the multiple passes below reuse one computation. A
+    // local checkpoint, not a cache: AQE plans every scan of a cached
+    // relation as a query stage of its own, and an exchange over one never
+    // matches another, so a clustered merge's two branches could not share
+    // their one exchange.
+    val batch = delta.localCheckpoint(eager = false)
     try {
       val (snapshot, pruned) =
         if (!fs.exists(new Path(targetPath)) || fullRefresh) (initial(batch, cfg), false)
@@ -163,7 +170,8 @@ object ScdEngine {
               (incremental(read(spark, targetPath, schema).drop(BucketCol), batch, cfg), false))
         }
       swap(spark, fs, snapshot, targetPath, cfg, numBuckets, contract, pruned)
-    } finally batch.unpersist() // S7: post-run temp drop
+    } finally // S7: post-run temp drop
+      batch.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist() }
   }
 
   /** [[run]] plus a CDC changelog: appends the payload-carrying
@@ -211,21 +219,21 @@ object ScdEngine {
   def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
     incremental(target, delta, cfg, numBuckets = None)
 
-  /** [[incremental]]; with `numBuckets` (SCD2 only) `target` is a bucketed
-    * slice that keeps its [[BucketCol]], the batch gets its own, and the
-    * merge clusters on it ([[Scd2.incrementalClustered]]).
+  /** [[incremental]]; with `numBuckets` `target` is a bucketed slice that
+    * keeps its [[BucketCol]], the batch gets its own, and the merge clusters
+    * on it ([[Scd2.incrementalClustered]], [[Scd01.incrementalClustered]]).
     */
   private def incremental(target: DataFrame,
                           delta: DataFrame,
                           cfg: ScdConfig,
                           numBuckets: Option[Int]): DataFrame = {
     val (t, b) = alignSchemas(target, delta, cfg)
-    (cfg.scdType, numBuckets) match {
-      case (2, Some(n)) =>
-        val keys = cfg.uniqueKey.map(resolveCi(b.columns.toSeq, _))
-        Scd2.incrementalClustered(t, b.withColumn(BucketCol, bucketOf(keys, n)), cfg, BucketCol)
-      case (2, None) => Scd2.incremental(t, b, cfg)
-      case _ => Scd01.incremental(t, b, cfg)
+    val scd2 = cfg.scdType == 2
+    numBuckets.fold(if (scd2) Scd2.incremental(t, b, cfg) else Scd01.incremental(t, b, cfg)) { n =>
+      val keys = cfg.uniqueKey.map(resolveCi(b.columns.toSeq, _))
+      val clustered = b.withColumn(BucketCol, bucketOf(keys, n))
+      if (scd2) Scd2.incrementalClustered(t, clustered, cfg, BucketCol)
+      else Scd01.incrementalClustered(t, clustered, cfg, BucketCol)
     }
   }
 
@@ -298,9 +306,9 @@ object ScdEngine {
                                   contract: Option[StructType]): Option[DataFrame] = {
     if (dirs.isEmpty) return None
     val keys = cfg.uniqueKey.map(resolveCi(batch.columns.toSeq, _))
-    // Which buckets does the batch touch? One job over the cached batch
-    // (it also fills the cache): each partition returns its set of bucket
-    // ids and the driver unions them, with no exchange.
+    // Which buckets does the batch touch? One job over the checkpointed
+    // batch (it also fills the checkpoint): each partition returns its set
+    // of bucket ids and the driver unions them, with no exchange.
     val touched = batch.select(bucketOf(keys, n)).rdd
       .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
       .collect().flatten.distinct.sorted.toSeq
@@ -338,10 +346,9 @@ object ScdEngine {
       }
     val target =
       if (existing.nonEmpty) readBuckets(existing) else readBuckets(dirs.take(1)).limit(0)
-    // An SCD2 merge keeps the bucket column and clusters on it once; the
+    // The merge keeps the bucket column and clusters on it once; the
     // write's repartition on the same column then plans no second exchange.
-    Some(if (cfg.scdType == 2) incremental(target, batch, cfg, Some(n))
-         else incremental(target.drop(BucketCol), batch, cfg))
+    Some(incremental(target, batch, cfg, Some(n)))
   }
 
   /** `fs.rename` that fails loudly: a false return throws before any delete,

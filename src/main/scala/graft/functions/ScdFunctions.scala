@@ -30,12 +30,54 @@ object ScdFunctions {
 
   def surrogateKeyOf(names: Seq[String]): Column = surrogateKey(names.map(col))
 
-  /** `incremental_predicates` as one conjunct (NULL = false; TRUE when
-    * none) of a merge's selection of stored rows, as in the reference's
-    * MERGE ON (`get_incremental_scd2_sql.sql:247-255`).
+  /** Source tag of a merge's rows: 'new' (batch) or 'previous' (stored). */
+  private[graft] val SourceCol = "_source"
+
+  /** The one selection of every SCD merge, the reference's MERGE ON
+    * (`get_incremental_scd2_sql.sql:247-255`): a stored row is selected when
+    * its business key has a `batch` row, matched null-safely (J1: per-column
+    * `=` drops NULL-bearing keys), and it passes the `predicates` (NULL =
+    * false). With `landing` (updated_at, valid_to; SCD2 with
+    * update_all_previous_records off) a stored version is selected only when
+    * a batch row lands in its window (J2) or twins its NULL updated_at, which
+    * the reference's MERGE ON matched null-safely. Returns the stored rows
+    * not selected, as stored, and batch ∪ selected rows tagged [[SourceCol]].
+    * Unclustered (`bucket` None), the batch's distinct keys broadcast into a
+    * semi-join and its anti-join complement, so only the selected slice
+    * reaches the merge's exchange. Clustered on `bucket` (a function of the
+    * key that both sides carry), batch ∪ target cross ONE exchange on it, a
+    * per-key window flags the selection, and both branches filter that one
+    * relation, so they share the exchange and keep its clustering.
     */
-  private[graft] def predicateConjunct(predicates: Seq[String]): Column =
-    predicates.map(expr).reduceOption(_ && _).fold(lit(true))(coalesce(_, lit(false)))
+  private[graft] def splitStored(target: DataFrame, batch: DataFrame, keys: Seq[String],
+                                 predicates: Seq[String], landing: Option[(String, String)],
+                                 bucket: Option[String]): (DataFrame, DataFrame) = {
+    val inScope = predicates.map(expr).reduceOption(_ && _).fold(lit(true))(coalesce(_, lit(false)))
+    def withBatch(stored: DataFrame) = batch.withColumn(SourceCol, lit("new"))
+      .unionByName(stored.withColumn(SourceCol, lit("previous")), allowMissingColumns = true)
+    bucket match {
+      case None =>
+        val probe = batch.select((keys ++ landing.map(_._1)).map(c => col(c).as(s"_n_$c")): _*)
+          .distinct()
+        val keysMatch = keys.map(k => col(k) <=> col(s"_n_$k")).reduce(_ && _)
+        val cond = inScope && landing.fold(keysMatch) { case (u, validTo) =>
+          val nu = col(s"_n_$u")
+          keysMatch && (nu <= col(validTo) || nu.isNull && col(u).isNull)
+        }
+        (target.join(probe, cond, "left_anti"), withBatch(target.join(probe, cond, "left_semi")))
+      case Some(b) =>
+        val byKey = Window.partitionBy((b +: keys).map(col): _*)
+        val isNew = col(SourceCol) === "new"
+        val hit = landing.fold(max(isNew).over(byKey)) { case (u, validTo) =>
+          min(when(isNew, col(u))).over(byKey) <= col(validTo) ||
+            col(u).isNull && max(isNew && col(u).isNull).over(byKey)
+        }
+        val flagged = withBatch(target).repartition(col(b))
+          .withColumn("_sel", isNew || inScope && coalesce(hit, lit(false)))
+        (flagged.filter(!col("_sel")).select(target.columns.map(c => col(c).as(c)).toSeq: _*),
+         flagged.filter(col("_sel")).drop("_sel"))
+    }
+  }
 
   /** Window over one key's versions in event-time order — the partition spec of
     * every window in the reference (`columns/<any>.sql`).

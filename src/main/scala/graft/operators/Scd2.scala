@@ -14,16 +14,15 @@ import graft.functions.ScdFunctions._
   *   - incremental   -> `get_incremental_scd2_sql.sql:75-268` (the 9-CTE MERGE)
   *
   * All computation is one lazy DataFrame DAG per call — Catalyst plans the
-  * joins/windows. Which persisted versions a batch affects (J1/J2) is
-  * decided by the target's layout:
-  *   - an unclustered target: the batch's distinct keys broadcast into the
-  *     affected-key semi-join and its anti-join complement, so only the
-  *     affected slice reaches the business-key window exchange and
-  *     incremental cost tracks batch size;
-  *   - a bucketed slice ([[incrementalClustered]], the pruned path of
-  *     [[graft.ScdEngine]]): batch ∪ slice cross ONE exchange on the bucket
-  *     column, a per-key window flag selects the affected versions, and
-  *     the timeline's windows and the bucketed write reuse that exchange.
+  * joins/windows. A merge is the shape every SCD type shares
+  * ([[graft.functions.ScdFunctions.splitStored]]): the persisted versions
+  * the batch affects (J1/J2) are selected, the rest pass around as stored,
+  * and the timeline runs over the batch ∪ the selected versions. The
+  * target's layout decides how they are selected: broadcast probe joins
+  * for an unclustered target, so cost tracks batch size; for a bucketed
+  * slice ([[incrementalClustered]], the pruned path of [[graft.ScdEngine]])
+  * a per-key window flag after ONE exchange on the bucket column, which
+  * the timeline's windows and the bucketed write reuse.
   */
 object Scd2 {
 
@@ -39,12 +38,9 @@ object Scd2 {
   val HashCol = "_scd2_hash" // change-detection content hash
   val PrevHashCol = "_prev_hash"
   val RunIdCol = "_run_id"
-  val SourceCol = "_source"
   val PriorityCol = "_priority"
   val OpCol = "_scd2_op"
   val KeepCol = "_keep"
-  // timeline rows a clustered merge selected (the rest pass through)
-  private val SelCol = "_sel"
 
   /** Initial (full-refresh) load: delta batch -> complete SCD2 history.
     * Mirrors `get_initial_load_scd2_sql.sql:52-96`: the [[timeline]] of the
@@ -58,7 +54,7 @@ object Scd2 {
     cfg.validateSchema(cols)
     val keys = cfg.uniqueKey.map(resolveCi(cols, _))
     val updatedAt = resolveCi(cols, cfg.updatedAtCol)
-    val source = tagged(delta, "new", cfg.checkColumns(cols))
+    val source = withTags(delta.withColumn(SourceCol, lit("new")), cfg.checkColumns(cols))
     timeline(source, cfg, keys, updatedAt, loadedAt = None)
       .select(cols.map(col) ++ cfg.auditColumns.map(col): _*)
   }
@@ -78,7 +74,7 @@ object Scd2 {
     * `incremental` returns the snapshot they produce.
     */
   def mergeSource(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
-    val (destCols, _, merged, _) = affected(target, delta, cfg, bucket = None)
+    val (destCols, _, merged) = affected(target, delta, cfg, bucket = None)
     merged.select(destCols.map(col) ++
                     cfg.auditColumns.map(c => when(col(KeepCol), col(c)).as(c)) :+
                     when(col(KeepCol), lit("upsert")).otherwise(lit("delete")).as(OpCol): _*)
@@ -88,8 +84,8 @@ object Scd2 {
     * (`get_incremental_scd2_sql.sql:238-268`, SURVEY.md §4.3) leaves. The
     * [[affected]] timeline already pairs each batch version with its stored
     * one (previous wins the dedup), so no join replays the MERGE: the target
-    * rows the affected-key probe does not select pass through as stored, and
-    * the rows the timeline keeps replace the rest. A kept persisted row takes
+    * rows the selection leaves out pass through as stored, and the rows the
+    * timeline keeps replace the selected ones. A kept persisted row takes
     * the recomputed `merge_update_cols` and keeps its other stored audit
     * columns (the matched update); persisted rows not kept are the deletes.
     */
@@ -108,41 +104,34 @@ object Scd2 {
                                           bucket: String): DataFrame =
     merged(target, delta, cfg, Some(bucket))
 
-  /** The snapshot of both layouts: the target rows the timeline does not
-    * select pass through as stored, the kept timeline rows replace the rest.
+  /** The snapshot of both layouts: the target rows the selection leaves out
+    * pass through as stored, the kept timeline rows replace the rest.
     */
   private def merged(target: DataFrame,
                      delta: DataFrame,
                      cfg: ScdConfig,
                      bucket: Option[String]): DataFrame = {
-    val (_, untouched, timelined, selected) = affected(target, delta, cfg, bucket)
+    val (_, passed, timelined) = affected(target, delta, cfg, bucket)
     val isPrevious = col(SourceCol) === "previous"
     val out = target.columns.map { c =>
       cfg.auditColumns.find(_.equalsIgnoreCase(c)).fold(col(c)) { a =>
-        val stored =
-          if (cfg.mergeUpdateCols.contains(a)) isPrevious && !selected else isPrevious
-        when(stored, col(s"_t_$a")).otherwise(col(a))
+        // a merge-update column is stored only on the rows the filter below
+        // drops; still reading it keeps every stored column in this branch,
+        // so both branches of a clustered split prune its exchange alike and
+        // it is planned once
+        val stored = if (cfg.mergeUpdateCols.contains(a)) !col(KeepCol) else lit(true)
+        when(isPrevious && stored, col(s"_t_$a")).otherwise(col(a))
       }.as(c)
     }
-    val kept = timelined.filter(col(KeepCol) || !selected).select(out: _*)
-    untouched.fold(kept)(_.unionByName(kept))
+    passed.unionByName(timelined.filter(col(KeepCol)).select(out: _*))
   }
 
-  /** The batch's business columns, the target rows that bypass the
-    * timeline, the [[timeline]] of the batch ∪ the persisted versions it may
-    * affect, and the column flagging the timeline rows it selected: stored
-    * rows of batch keys (J1/J2 below) that pass the `incremental_predicates`
-    * (NULL = false; MERGE ON). The layout decides how they are selected:
-    *
-    *   - unclustered (`bucket` None): the batch's distinct keys broadcast
-    *     into a semi-join that pulls the affected versions and an anti-join
-    *     that passes the rest by, so only the affected slice of the target
-    *     reaches the business-key exchange and cost tracks the batch;
-    *   - clustered on `bucket`: the target is already the touched slice.
-    *     Batch ∪ slice cross one exchange on `bucket`, a per-key window flag
-    *     selects the affected versions, and every timeline window is
-    *     partitioned by (`bucket`, keys, flag), so it reuses that exchange.
-    *     Unselected rows ride through the timeline unchanged.
+  /** The batch's business columns, the target rows the selection
+    * ([[graft.functions.ScdFunctions.splitStored]]) leaves out, and the
+    * [[timeline]] of the batch ∪ the persisted versions it selects: stored
+    * rows of batch keys (J1/J2) that pass the `incremental_predicates`.
+    * Clustered on `bucket`, every timeline window is partitioned by
+    * (`bucket`, keys), so it reuses the selection's exchange.
     *
     * Persisted rows carry their stored audit columns as `_t_<col>` (NULL on
     * batch rows).
@@ -150,7 +139,7 @@ object Scd2 {
   private def affected(target: DataFrame,
                        delta: DataFrame,
                        cfg: ScdConfig,
-                       bucket: Option[String]): (Seq[String], Option[DataFrame], DataFrame, Column) = {
+                       bucket: Option[String]): (Seq[String], DataFrame, DataFrame) = {
     cfg.validate()
     val deltaCols = delta.columns.toSeq.filterNot(bucket.contains)
     cfg.validateSchema(deltaCols)
@@ -159,88 +148,37 @@ object Scd2 {
     val destCols = businessColumns(deltaCols, cfg.auditColumns)
     val keys = cfg.uniqueKey.map(resolveCi(destCols, _))
     val updatedAt = resolveCi(destCols, cfg.updatedAtCol)
-    val check = cfg.checkColumns(destCols)
-    val targetCols = target.columns.toSeq
-    val validTo = resolveCi(targetCols, cfg.validToCol)
     val loadedAt = destCols.find(_.equalsIgnoreCase(cfg.loadedAtCol))
-    // audit columns keep their names until the selection is made
-    val stored = destCols.map(c => col(resolveCi(targetCols, c)).as(c)) ++
-      cfg.auditColumns.map(a => col(resolveCi(targetCols, a)).as(a))
-    def renamed(df: DataFrame) = df.withColumnsRenamed(cfg.auditColumns.map(a => a -> s"_t_$a").toMap)
-    val inScope = predicateConjunct(cfg.incrementalPredicates)
 
-    // previous_record (:93-118): pull from the target ONLY prior versions of
-    // keys present in the batch — the affected-key pruning that keeps
-    // incremental cost ∝ batch size. Matched null-safely (`<=>`), the Spark
-    // shape of the reference's business-key-hash match (J1: per-column `=`
-    // drops NULL-bearing keys). When update_all_previous_records is off,
-    // restrict further to windows a new row could land in (J2), plus the
-    // stored version a batch row with a NULL updated_at twins: the
-    // reference's MERGE ON matched that version key null-safely.
-    bucket match {
-      case None =>
-        // new_records (:79-89)
-        val newRecords = tagged(delta.select(destCols.map(col): _*), "new", check)
-        val probeCols =
-          if (cfg.updateAllPreviousRecords) keys else keys :+ updatedAt
-        val probe = newRecords
-          .select(probeCols.map(c => col(c).as(s"_n_$c")): _*)
-          .distinct()
-        val keysMatch = keys.map(k => col(k) <=> col(s"_n_$k")).reduce(_ && _)
-        val nu = col(s"_n_$updatedAt")
-        val semiCond = inScope && (
-          if (cfg.updateAllPreviousRecords) keysMatch
-          else keysMatch && (nu <= col(validTo) ||
-                               nu.isNull && col(resolveCi(targetCols, updatedAt)).isNull))
-        val previousRecord = tagged(
-          renamed(target.join(probe, semiCond, "left_semi").select(stored: _*)), "previous", check)
-        // all_records (:123-145) through scd2_versions + redundant_versions
-        // (:149-229)
-        (destCols,
-         Some(target.join(probe, semiCond, "left_anti")),
-         timeline(newRecords.unionByName(previousRecord, allowMissingColumns = true),
-                  cfg, keys, updatedAt, loadedAt),
-         lit(true))
-      case Some(b) =>
-        // the content hash and dedup priority are added after the exchange,
-        // so it carries only the rows and their source tag; rows passing
-        // through unselected need no hash
-        val all = delta.select(destCols.map(col) :+ col(b) :+ lit("new").as(SourceCol): _*)
-          .unionByName(target.select(stored :+ col(b) :+ lit("previous").as(SourceCol): _*),
-                       allowMissingColumns = true)
-          .repartition(col(b))
-        val byKey = Window.partitionBy((b +: keys).map(col): _*)
-        val isNew = col(SourceCol) === "new"
-        val u = col(updatedAt)
-        val hit =
-          if (cfg.updateAllPreviousRecords) max(isNew).over(byKey)
-          else min(when(isNew, u)).over(byKey) <= col(cfg.validToCol) ||
-                 u.isNull && max(isNew && u.isNull).over(byKey)
-        val sel = col(SelCol)
-        val flagged = renamed(all.withColumn(SelCol, isNew || inScope && coalesce(hit, lit(false))))
-        (destCols,
-         None,
-         timeline(withTags(flagged, check, sel), cfg, b +: keys :+ SelCol, updatedAt, loadedAt, sel),
-         sel)
-    }
+    // new_records (:79-89) and previous_record (:93-118): pull from the
+    // target ONLY prior versions of keys present in the batch — the
+    // affected-key pruning that keeps incremental cost ∝ batch size. When
+    // update_all_previous_records is off, restrict further to windows a new
+    // row could land in (J2).
+    val landing = Option.when(!cfg.updateAllPreviousRecords)(
+      updatedAt -> resolveCi(target.columns.toSeq, cfg.validToCol))
+    val (passed, rows) = splitStored(target, delta.select((destCols ++ bucket).map(col): _*),
+                                     keys, cfg.incrementalPredicates, landing, bucket)
+    // all_records (:123-145) through scd2_versions + redundant_versions
+    // (:149-229). The content hash and dedup priority are added after the
+    // split, so a clustered exchange carries only the rows and their source
+    // tag, and passed-through rows need no hash.
+    val renamed = rows.withColumnsRenamed(cfg.auditColumns.map(a => a -> s"_t_$a").toMap)
+    (destCols, passed,
+     timeline(withTags(renamed, cfg.checkColumns(destCols)), cfg, bucket.toSeq ++ keys, updatedAt,
+              loadedAt))
   }
 
-  /** `df` with the source tag ('new' or 'previous') and [[withTags]]. */
-  private def tagged(df: DataFrame, source: String, check: Seq[String]): DataFrame =
-    withTags(df.withColumn(SourceCol, lit(source)), check)
-
   /** Source-tagged rows with the reference's dedup priority (0 = previous
-    * wins) and the change-detection content hash the timeline reads (NULL
-    * on rows that are not `selected`).
+    * wins) and the change-detection content hash the timeline reads.
     */
-  private def withTags(df: DataFrame, check: Seq[String],
-                       selected: Column = lit(true)): DataFrame =
+  private def withTags(df: DataFrame, check: Seq[String]): DataFrame =
     df.withColumn(PriorityCol, when(col(SourceCol) === "previous", 0).otherwise(17))
-      .withColumn(HashCol, when(selected, surrogateKeyOf(check)))
+      .withColumn(HashCol, surrogateKeyOf(check))
 
-  /** The SCD2 timeline over tagged rows ([[tagged]]): one flag-and-window
+  /** The SCD2 timeline over tagged rows ([[withTags]]): one flag-and-window
     * pass, every window partitioned by `keys` (the business key, or with it
-    * a bucket and a selection flag) so the whole pass shares one exchange.
+    * a bucket) so the whole pass shares one exchange.
     *
     *   1. one row per version (keys, updated_at), previous rows winning;
     *   2. the lag of the content hash;
@@ -252,17 +190,13 @@ object Scd2 {
     *      them and [[merged]] drops the rows.
     *
     * `loadedAt` names the load-watermark column that picks each content
-    * run's winner when collapsing; without it the run opener wins. Rows
-    * that are not `selected` (persisted rows a clustered merge passes
-    * through) are never deduplicated away; the caller keeps their stored
-    * audit columns.
+    * run's winner when collapsing; without it the run opener wins.
     */
   private def timeline(all: DataFrame,
                        cfg: ScdConfig,
                        keys: Seq[String],
                        updatedAt: String,
-                       loadedAt: Option[String],
-                       selected: Column = lit(true)): DataFrame = {
+                       loadedAt: Option[String]): DataFrame = {
     val byKey = Window.partitionBy(keys.map(col): _*)
     // D1 / dedup per version key (:149-156). The reference `order by 1` is
     // arbitrary; its stated intent (':149-150' comment + the _priority tags)
@@ -275,7 +209,7 @@ object Scd2 {
     val deduped = all
       .withColumn("_prev_u", lag(uStr, 1).over(
         byKey.orderBy(col(updatedAt), col(PriorityCol), col(HashCol))))
-      .filter(!selected || col("_prev_u").isNull || col("_prev_u") =!= uStr)
+      .filter(col("_prev_u").isNull || col("_prev_u") =!= uStr)
       .drop("_prev_u")
 
     // compare_versions (:160-166)

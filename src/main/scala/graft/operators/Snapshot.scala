@@ -27,8 +27,9 @@ import graft.ScdConfig
   *     and merging them with the batch.
   *
   * Scale: the anti-join ships only the batch's key set against the target's
-  * CURRENT slice; the merge itself is the engine's one-exchange plan. A
-  * snapshot run costs O(snapshot + touched keys), like any other merge.
+  * CURRENT slice; the merge itself is the engine's affected-key plan (the
+  * selected slice alone reaches its exchange). A snapshot run costs
+  * O(snapshot + touched keys), like any other merge.
   */
 object Snapshot {
 

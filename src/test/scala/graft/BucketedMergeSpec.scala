@@ -13,12 +13,13 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleEx
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.operators.Scd2
+import graft.operators.{Scd01, Scd2}
 
 /** The bucketed merge of `ScdEngine` clusters batch ∪ touched slice on the
-  * bucket column and selects the affected versions with a window flag; the
-  * unbucketed merge selects them with broadcast probe joins. Both must
-  * leave the same table, and the bucketed one must stay one exchange.
+  * bucket column and selects the stored rows it merges with a window flag;
+  * the unbucketed merge selects them with broadcast probe joins. Both must
+  * leave the same table for every SCD type, and the bucketed one must stay
+  * one exchange.
   */
 class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -42,7 +43,7 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
 
   private def df(rs: Seq[(Option[Int], String, java.sql.Timestamp, java.sql.Timestamp)],
-                 load: Option[Int], createdAt: Boolean = false): DataFrame = {
+                 load: Option[Int], createdAt: Boolean): DataFrame = {
     val d = rs.toDF("k", "v", "_updated_at", "deleted_at")
     val c = if (createdAt) d.withColumn("created_at", expr("_updated_at - INTERVAL 12 HOURS")) else d
     load.fold(c)(i => c.withColumn("_loaded_at", lit(slot(20 + i))))
@@ -81,7 +82,14 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       // SCD type 1: the predicates are a conjunct of the full-outer join
       "SCD1, incremental_predicates" ->
         Case(base.copy(scdType = 1, incrementalPredicates = Seq("k <= 2")),
-             oneRowPerVersion = true))
+             oneRowPerVersion = true),
+      "SCD0" -> Case(base.copy(scdType = 0), oneRowPerVersion = true),
+      "SCD1" -> Case(base.copy(scdType = 1), oneRowPerVersion = true),
+      "SCD0, incremental_predicates" ->
+        Case(base.copy(scdType = 0, incrementalPredicates = Seq("k <= 2")),
+             oneRowPerVersion = true),
+      "SCD1, NULL business key" -> Case(base.copy(scdType = 1), nullKey = true,
+                                        oneRowPerVersion = true))
     val rnd = new Random(97)
     for ((name, c) <- cases; trial <- 1 to 2) {
       val drawn = rows(rnd, c.nullKey)
@@ -178,29 +186,73 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("a warm bucketed merge runs at most 3 jobs and writes over one exchange") {
-    val cfg = ScdConfig(uniqueKey = Seq("k"), deletedAtCol = Some("deleted_at"))
+    val scd2 = ScdConfig(uniqueKey = Seq("k"), deletedAtCol = Some("deleted_at"))
     def batch(rs: Seq[(Int, String, Int)]): DataFrame =
       rs.map { case (k, v, s) => (k, v, slot(s), null: java.sql.Timestamp) }
         .toDF("k", "v", "_updated_at", "deleted_at")
     val history = (1 to 200).map(k => (k, "a", 0)) ++ (1 to 200 by 7).map(k => (k, "b", 2))
     val b1 = Seq((3, "c", 3), (50, "c", 1), (201, "a", 3))
     val b2 = Seq((8, "d", 4), (99, "a", 1), (150, "d", 5), (202, "a", 4))
-    val path = tempPath("pin")
-    ScdEngine.merge(spark, batch(history), path, cfg, numBuckets = Some(16))
-    ScdEngine.merge(spark, batch(b1), path, cfg, numBuckets = Some(16)) // warm
-    val (_, jobs, plans) = plansDuring {
-      ScdEngine.merge(spark, batch(b2), path, cfg, numBuckets = Some(16))
-    }
-    assert(jobs <= 3, s"the merge ran $jobs jobs")
-    val writes = plans.filter(find(_)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
-    assert(writes.size === 1, plans.mkString("\n"))
-    val write = writes.head
-    assert(collect(write) { case e: ShuffleExchangeLike => e }.size === 1, write)
-    assert(collect(write) { case e: BroadcastExchangeLike => e }.isEmpty, write)
+    // types 0 and 1 take the same merge shape
+    for (cfg <- Seq(scd2, ScdConfig(uniqueKey = Seq("k"), scdType = 0),
+                    ScdConfig(uniqueKey = Seq("k"), scdType = 1))) withClue(s"SCD${cfg.scdType}: ") {
+      val path = tempPath("pin")
+      ScdEngine.merge(spark, batch(history), path, cfg, numBuckets = Some(16))
+      ScdEngine.merge(spark, batch(b1), path, cfg, numBuckets = Some(16)) // warm
+      val (_, jobs, plans) = plansDuring {
+        ScdEngine.merge(spark, batch(b2), path, cfg, numBuckets = Some(16))
+      }
+      assert(jobs <= 3, s"the merge ran $jobs jobs")
+      val writes = plans.filter(find(_)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+      assert(writes.size === 1, plans.mkString("\n"))
+      val write = writes.head
+      assert(collect(write) { case e: ShuffleExchangeLike => e }.size === 1, write)
+      assert(collect(write) { case e: BroadcastExchangeLike => e }.isEmpty, write)
 
-    val got = spark.read.parquet(path).drop(ScdEngine.BucketCol)
-    val full = Scd2.initialLoad(batch(history ++ b1 ++ b2), cfg).select(got.columns.map(col).toSeq: _*)
-    assert(got.exceptAll(full).count() === 0)
-    assert(full.exceptAll(got).count() === 0)
+      // type 1 lets the later batch win even with a back-dated row (keys 50
+      // and 99) and keeps a key's first-seen _valid_from, neither of which a
+      // single load of all the batches can know: its table is the
+      // unbucketed operator's merges
+      val got = spark.read.parquet(path).drop(ScdEngine.BucketCol)
+      val full = (cfg.scdType match {
+        case 2 => Scd2.initialLoad(batch(history ++ b1 ++ b2), cfg)
+        case 0 => Scd01.initialLoad(batch(history ++ b1 ++ b2), cfg)
+        case _ => Seq(b1, b2).foldLeft(Scd01.initialLoad(batch(history), cfg))(
+                    (t, b) => Scd01.incremental(t, batch(b), cfg))
+      }).select(got.columns.map(col).toSeq: _*)
+      assert(got.exceptAll(full).count() === 0)
+      assert(full.exceptAll(got).count() === 0)
+    }
+  }
+
+  test("types 0/1 merge every stored row a batch key selects, and insert beside none") {
+    // key k holds two stored rows: the first merge's predicate leaves the
+    // stored 'a' out, so it passes through and the batch's 'b' lands beside
+    // it; the next merge, without predicates, selects both
+    def batch(k: Option[Int], v: String, day: Int): DataFrame =
+      Seq((k, v, slot(day)), (Some(2), "x", slot(0))).toDF("k", "v", "_updated_at")
+    for (scdType <- Seq(0, 1); k <- Seq(Some(1), None)) withClue(s"SCD$scdType, k = $k: ") {
+      val cfg = ScdConfig(uniqueKey = Seq("k"), scdType = scdType)
+      val excluding = cfg.copy(incrementalPredicates = Seq("v <> 'a'"))
+      val (b0, b1, b2) = (batch(k, "a", 0), batch(k, "b", 1), batch(k, "c", 2))
+      val path = tempPath(s"scd$scdType")
+      for ((b, c) <- Seq(b0 -> cfg, b1 -> excluding, b2 -> cfg))
+        ScdEngine.merge(spark, b, path, c, numBuckets = Some(4))
+      val viaOperator = Scd01.incremental(
+        Scd01.incremental(Scd01.initialLoad(b0, cfg), b1, excluding), b2, cfg)
+      // (k, v, _updated_at, _valid_from); key 2 is re-sent unchanged
+      val want =
+        if (scdType == 1) Seq((k, "c", slot(2), slot(0)), (k, "c", slot(2), slot(1)),
+                              (Some(2), "x", slot(0), slot(0)))
+        else Seq((k, "a", slot(0), slot(0)), (k, "b", slot(1), slot(1)),
+                 (Some(2), "x", slot(0), slot(0)))
+      for ((name, got) <- Seq("Scd01.incremental" -> viaOperator,
+                              "bucketed ScdEngine.merge" -> spark.read.parquet(path))) {
+        val rows = got.select("k", "v", "_updated_at", "_valid_from")
+          .as[(Option[Int], String, java.sql.Timestamp, java.sql.Timestamp)].collect().toSeq
+        assert(rows.sortBy(r => (r._1.getOrElse(-1), r._4.getTime)) ===
+                 want.sortBy(r => (r._1.getOrElse(-1), r._4.getTime)), name)
+      }
+    }
   }
 }

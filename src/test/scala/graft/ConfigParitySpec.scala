@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Config-surface parity: legacy change-column aliases and
   * incremental_predicates (reference `scd_plan.sql:192-201,276`).
   */

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Enforced output contracts (reference schema.yml:159-192 +

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 /** Generic-test semantics mirror dbt's built-ins (not_null / unique /
   * accepted_values / relationships), including their NULL exemptions:

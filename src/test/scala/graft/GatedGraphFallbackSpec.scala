@@ -12,8 +12,6 @@ import graft.operators.Graph
   */
 class GatedGraphFallbackSpec extends SparkTestBase {
 
-  import spark.implicits._
-
   // deterministic pseudo-random multigraph on `n` nodes with ~`m` distinct
   // edges (src < dst); a chain is mixed in so it is connected and has
   // cycles, articulation points, and a non-trivial matching

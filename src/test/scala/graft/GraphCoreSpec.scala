@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Graph
 
 /** k-core peeling and integer HITS: distributed sweeps vs naive driver-side

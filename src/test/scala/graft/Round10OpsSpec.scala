@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Funnel, Rolling}
 
 /** Round-10 operators: clamped running balances (closed-form identity vs

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Graph, MultiPattern}
 
 /** Round-11 operators: Aho-Corasick multi-pattern scan (vs brute-force

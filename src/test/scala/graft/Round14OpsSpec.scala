@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Graph, Multimodal}
 
 /** Round-10 operator tier: sampled-pivot betweenness, mixed-container

@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.streaming.ScdStream
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** `on_schema_change` drift policies (dbt's names) at the engine boundary:
   * the persisted target's schema vs an incoming batch that added or dropped
   * a business column.

@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 
 /** Versioned-snapshot layout: publish/read/time-travel/rollback/vacuum, and

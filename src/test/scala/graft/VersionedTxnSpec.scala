@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
 
 /** Multi-table transaction layer over the versioned layout: all-or-nothing
   * visibility across tables, write-ahead txn file as the commit point,
