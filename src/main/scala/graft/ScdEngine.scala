@@ -38,9 +38,8 @@ import graft.operators.{Scd01, Scd2}
   *      of their NAMES, and reads ONLY the touched ones among them (the
   *      contents of untouched buckets are never listed or read),
   *   3. merges batch ∪ slice over ONE exchange on the bucket column, for
-  *      every SCD type ([[Scd2.incrementalClustered]],
-  *      [[Scd01.incrementalClustered]]): the stored rows no batch row
-  *      selects pass around the merge over that same exchange,
+  *      every SCD type ([[Scd2.merged]], [[Scd01.merged]]): the stored rows
+  *      no batch row selects pass around the merge over that same exchange,
   *   4. rewrites ONLY the touched bucket directories; the write reuses the
   *      merge's clustering, so the whole merge is three jobs: the touched
   *      buckets, the exchange, the write (plus Spark's parallel listing
@@ -144,7 +143,41 @@ object ScdEngine {
             cfg: ScdConfig,
             fullRefresh: Boolean = false,
             numBuckets: Option[Int] = None,
-            contract: Option[StructType] = None): Unit = {
+            contract: Option[StructType] = None): Unit =
+    mergeStep(spark, delta, targetPath, cfg, fullRefresh, numBuckets, contract, changelog = None)
+
+  /** [[run]] plus a CDC changelog: appends the payload-carrying
+    * `Scd2.snapshotDelta` of this maintenance step to `cdcPath`, stamped
+    * with `runId` — the batch counterpart of [[graft.streaming.CdcStream]]
+    * (same changelog contract: replayable via `Scd2.applyDelta`, dedupable
+    * on (_batch_id, version key) under retries). The changelog is written
+    * before the swap's commit point ([[writeChangelog]]), so a run cut off
+    * in its swap keeps it. SCD2 only.
+    */
+  def runWithCdc(spark: SparkSession,
+                 delta: DataFrame,
+                 targetPath: String,
+                 cdcPath: String,
+                 runId: Long,
+                 cfg: ScdConfig,
+                 numBuckets: Option[Int] = None): DataFrame = {
+    require(cfg.scdType == 2, "CDC changelog export is SCD2-only")
+    mergeStep(spark, delta, targetPath, cfg, fullRefresh = false, numBuckets, contract = None,
+              changelog = Some(cdcPath -> runId))
+    readTable(spark, targetPath)
+  }
+
+  /** [[merge]], and with `changelog` (path, run id) [[runWithCdc]]'s
+    * changelog write.
+    */
+  private def mergeStep(spark: SparkSession,
+                        delta: DataFrame,
+                        targetPath: String,
+                        cfg: ScdConfig,
+                        fullRefresh: Boolean,
+                        numBuckets: Option[Int],
+                        contract: Option[StructType],
+                        changelog: Option[(String, Long)]): Unit = {
     cfg.validate()
     val fs = fileSystem(spark, targetPath)
     resume(fs, targetPath)
@@ -169,37 +202,9 @@ object ScdEngine {
               // derives it afresh when the layout is bucketed.
               (incremental(read(spark, targetPath, schema).drop(BucketCol), batch, cfg), false))
         }
-      swap(spark, fs, snapshot, targetPath, cfg, numBuckets, contract, pruned)
+      swap(spark, fs, snapshot, targetPath, cfg, numBuckets, contract, pruned, changelog)
     } finally // S7: post-run temp drop
       batch.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist() }
-  }
-
-  /** [[run]] plus a CDC changelog: appends the payload-carrying
-    * `Scd2.snapshotDelta(pre, post)` of this maintenance step to `cdcPath`,
-    * stamped with `runId` — the batch counterpart of
-    * [[graft.streaming.CdcStream]] (same changelog contract: replayable via
-    * `Scd2.applyDelta`, dedupable on (_batch_id, version key) under
-    * retries). A swap an earlier run left cut off is finished first, so its
-    * batch is in the pre-run snapshot, pinned with an eager localCheckpoint
-    * before the directory swap invalidates its file listing. SCD2 only.
-    */
-  def runWithCdc(spark: SparkSession,
-                 delta: DataFrame,
-                 targetPath: String,
-                 cdcPath: String,
-                 runId: Long,
-                 cfg: ScdConfig,
-                 numBuckets: Option[Int] = None): DataFrame = {
-    require(cfg.scdType == 2, "CDC changelog export is SCD2-only")
-    val fs = fileSystem(spark, targetPath)
-    resume(fs, targetPath)
-    val prev = Option.when(fs.exists(new Path(targetPath)))(
-      readTable(spark, targetPath).localCheckpoint())
-    val next = run(spark, delta, targetPath, cfg, numBuckets = numBuckets)
-    Scd2.snapshotDelta(prev.getOrElse(next.limit(0)), next, cfg, includePayload = true)
-      .withColumn("_batch_id", lit(runId))
-      .write.mode("append").parquet(cdcPath)
-    next
   }
 
   /** Type-dispatched initial load (`scd_plan.sql:111-149,258-265`). */
@@ -221,20 +226,18 @@ object ScdEngine {
 
   /** [[incremental]]; with `numBuckets` `target` is a bucketed slice that
     * keeps its [[BucketCol]], the batch gets its own, and the merge clusters
-    * on it ([[Scd2.incrementalClustered]], [[Scd01.incrementalClustered]]).
+    * on it.
     */
   private def incremental(target: DataFrame,
                           delta: DataFrame,
                           cfg: ScdConfig,
                           numBuckets: Option[Int]): DataFrame = {
     val (t, b) = alignSchemas(target, delta, cfg)
-    val scd2 = cfg.scdType == 2
-    numBuckets.fold(if (scd2) Scd2.incremental(t, b, cfg) else Scd01.incremental(t, b, cfg)) { n =>
-      val keys = cfg.uniqueKey.map(resolveCi(b.columns.toSeq, _))
-      val clustered = b.withColumn(BucketCol, bucketOf(keys, n))
-      if (scd2) Scd2.incrementalClustered(t, clustered, cfg, BucketCol)
-      else Scd01.incrementalClustered(t, clustered, cfg, BucketCol)
+    val batch = numBuckets.fold(b) { n =>
+      b.withColumn(BucketCol, bucketOf(cfg.uniqueKey.map(resolveCi(b.columns.toSeq, _)), n))
     }
+    val bucket = numBuckets.map(_ => BucketCol)
+    if (cfg.scdType == 2) Scd2.merged(t, batch, cfg, bucket) else Scd01.merged(t, batch, cfg, bucket)
   }
 
   /** Reconcile batch-vs-target schema drift per `cfg.onSchemaChange` (dbt's
@@ -402,19 +405,51 @@ object ScdEngine {
     * into the table; it breaks the read-write cycle on `targetPath` (the
     * snapshot's lineage reads the same path it replaces). The snapshot (with
     * `pruned`, of the touched buckets only) is staged and checked by
-    * [[writeTmp]]; then the commit point: the live table's rename to `.old`,
-    * or with `pruned` the creation of `.old`. A passing validation certifies
-    * every row the snapshot holds, so the contract marker lands post-swap.
+    * [[writeTmp]], and with `changelog` diffed into it ([[writeChangelog]]);
+    * then the commit point: the live table's rename to `.old`, or with
+    * `pruned` the creation of `.old`. A passing validation certifies every
+    * row the snapshot holds, so the contract marker lands post-swap.
     */
   private def swap(spark: SparkSession, fs: FileSystem, snapshot: DataFrame,
                    targetPath: String, cfg: ScdConfig, numBuckets: Option[Int],
-                   contract: Option[StructType], pruned: Boolean): Unit = {
+                   contract: Option[StructType], pruned: Boolean,
+                   changelog: Option[(String, Long)]): Unit = {
     writeTmp(spark, fs, snapshot, targetPath, cfg, numBuckets, contract)
+    changelog.foreach { case (cdcPath, runId) =>
+      writeChangelog(spark, fs, targetPath, cfg, pruned, cdcPath, runId)
+    }
     val dst = new Path(targetPath)
     if (pruned) fs.mkdirs(dst.suffix(".old"))
     else if (fs.exists(dst)) rename(fs, dst, dst.suffix(".old"))
     finishSwap(fs, dst)
     contract.foreach(c => fs.create(contractMarkerPath(targetPath, c), true).close())
+  }
+
+  /** Appends to `cdcPath` the payload-carrying `Scd2.snapshotDelta` of the
+    * live rows the staged `.tmp` replaces (the whole table, or with
+    * `pruned` its buckets that `.tmp` holds) against `.tmp`, stamped
+    * `_batch_id` = `runId`. Both sides are read and diffed before [[swap]]
+    * renames anything, so no file listing goes stale under the diff. A run
+    * cut off later has written its changelog: its replay finds the batch
+    * applied (past the commit point) and appends no row, or restages it
+    * (before) and appends the same rows again.
+    */
+  private def writeChangelog(spark: SparkSession, fs: FileSystem, targetPath: String,
+                             cfg: ScdConfig, pruned: Boolean, cdcPath: String,
+                             runId: Long): Unit = {
+    val tmp = targetPath + ".tmp"
+    val staged = readTable(spark, tmp)
+    val live =
+      if (!fs.exists(new Path(targetPath))) None
+      else if (!pruned) Some(readTable(spark, targetPath))
+      else {
+        val dirs = listBucketDirs(fs, targetPath)
+        Some(listBucketDirs(fs, tmp).filter(dirs.contains)).filter(_.nonEmpty).map(bs =>
+          read(spark, targetPath, footerSchema(spark, fs, targetPath, dirs), Some(bs)))
+      }
+    Scd2.snapshotDelta(live.getOrElse(staged.limit(0)), staged, cfg, includePayload = true)
+      .withColumn("_batch_id", lit(runId))
+      .write.mode("append").parquet(cdcPath)
   }
 
   /** The second half of [[swap]], idempotent so [[resume]] can re-run it:

@@ -339,22 +339,6 @@ object Dedup {
     ok.minBy { case (b, _, coll) => (b, -coll) }
   }
 
-  /** [[minhashLshPairs]] at the [[planBands]]-chosen banding — the
-    * recall-floor-driven entry point: callers state the Jaccard they care
-    * about and the collision probability they need, not a banding.
-    */
-  def minhashLshPairsPlanned(df: DataFrame,
-                             idCol: String,
-                             textCol: String,
-                             n: Int = 3,
-                             targetJaccardPpm: Long = 500000L,
-                             recallFloorPpm: Long = 800000L,
-                             tauNum: Int = 1,
-                             tauDen: Int = 2): DataFrame = {
-    val (b, r, _) = planBands(targetJaccardPpm, recallFloorPpm)
-    minhashLshPairs(df, idCol, textCol, n, b, r, tauNum, tauDen)
-  }
-
   /** Empirical recall-delta disclosure between two bandings of the SAME
     * 12-component signature: one row per config with its analytic
     * collision probability at `targetJaccardPpm`, whether [[planBands]]
@@ -1714,121 +1698,6 @@ object Dedup {
            sum(when(col("_cnt") > 1, lit(1L)).otherwise(lit(0L)))
              .as("n_dup_sents"))
       .withColumn("dup_ppm", expr("(n_dup_sents * 1000000) DIV n_sents"))
-  }
-
-  /** (id, shingle-array, |set|) base relation shared by the prefix-filter
-    * joins — shingle sets are distinct by construction.
-    */
-  private def docShingleArrays(df: DataFrame, idCol: String, textCol: String,
-                               n: Int): DataFrame =
-    df.select(col(idCol).as("_id"),
-              shingles(TextAnalysis.tokens(col(textCol)), n).as("_shs"))
-      .withColumn("_n", size(col("_shs")).cast("long"))
-
-  /** Frequency-ranked postings: each document's shingles ranked by the
-    * GLOBAL canonical order (corpus frequency asc, shingle asc) — rare
-    * shingles first. The per-document rank window is bounded by the
-    * document's own shingle count, never corpus-sized.
-    */
-  private def rankedPostings(arrs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ds = arrs.select(col("_id"), explode(col("_shs")).as("_sh"))
-    val freq = ds.groupBy(col("_sh")).agg(count(lit(1)).as("_f"))
-    ds.join(freq, "_sh")
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(col("_id")).orderBy(col("_f"), col("_sh"))))
-  }
-
-  /** AllPairs/SSJoin-style prefix-filtered EXACT Jaccard join — the
-    * deterministic 100%-recall scale path beside MinHash-LSH (which trades
-    * recall for cost). Output is IDENTICAL to the all-pairs exact join at
-    * the same threshold ([[ngramJaccardPairs]] semantics), but candidate
-    * generation touches only PREFIX collisions:
-    *
-    * Prefix-filter theorem (Chaudhuri/Ganti/Kaushik SSJoin Lemma 1;
-    * Bayardo AllPairs): under any global total order on shingles, if
-    * J(A,B) ≥ τ then |A∩B| ≥ ⌈τ·max(|A|,|B|)⌉ = α, and the
-    * (|A|−α+1)/(|B|−α+1) prefixes must intersect. Each side's emitted
-    * prefix length |X|−⌈τ|X|⌉+1 is ≥ the needed length, so prefix⋈prefix
-    * finds every qualifying pair. The canonical order (corpus frequency
-    * asc, shingle asc) puts the RAREST shingles in the prefix, so
-    * collision lists are short — the same reason AllPairs beats inverted-
-    * index joins by orders of magnitude.
-    *
-    * Cost at 100 TB: one exchange for shingle frequencies, one bounded
-    * per-doc rank window, one join on prefix shingles (rare keys ⇒ short
-    * postings, no hot-key explosion), then array-verify on the candidate
-    * pairs only — no signature false negatives, no all-pairs blowup.
-    */
-  def prefixFilteredJaccardPairs(df: DataFrame,
-                                 idCol: String,
-                                 textCol: String,
-                                 n: Int = 3,
-                                 tauNum: Int = 1,
-                                 tauDen: Int = 2): DataFrame = {
-    val arrs = docShingleArrays(df, idCol, textCol, n)
-    // prefix length = |S| − ⌈τ|S|⌉ + 1;  ⌈a/b⌉ = (a+b−1) DIV b (a,b > 0)
-    val prefixes = rankedPostings(arrs)
-      .filter(col("_rk") <=
-        col("_n") - expr(s"($tauNum * _n + ${tauDen - 1}) DIV $tauDen") + 1)
-      .select(col("_id"), col("_sh"))
-    val cands = prefixes.as("a")
-      .join(prefixes.as("b"),
-            col("a._sh") === col("b._sh") && col("a._id") < col("b._id"))
-      .select(col("a._id").as("doc_a"), col("b._id").as("doc_b"))
-      .distinct()
-    cands
-      .join(arrs.select(col("_id").as("doc_a"), col("_shs").as("_sa")), "doc_a")
-      .join(arrs.select(col("_id").as("doc_b"), col("_shs").as("_sb")), "doc_b")
-      .withColumn("overlap", size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
-      .withColumn("union_size",
-                  size(col("_sa")).cast("long") + size(col("_sb")) - col("overlap"))
-      .filter(col("overlap") * tauDen >= col("union_size") * tauNum)
-      .select("doc_a", "doc_b", "overlap", "union_size")
-  }
-
-  /** Directional containment (subsumption) join: pairs where
-    * |A∩B| / |A| ≥ τ with A ≠ B — "document A is (mostly) contained in
-    * document B". Catches quote-inclusion, boilerplate reuse, and
-    * chunk-of-a-bigger-doc duplicates that Jaccard misses when |B| ≫ |A|
-    * (the union term drowns the overlap). Emits BOTH directions for
-    * mutually-containing (near-identical) pairs.
-    *
-    * Candidates: the contained side's frequency-ranked prefix
-    * (length |A|−⌈τ|A|⌉+1) joined against FULL postings — containment ≥ τ
-    * forces ≥⌈τ|A|⌉ common shingles, which cannot all fit in A's
-    * (⌈τ|A|⌉−1)-length suffix, so some prefix shingle of A is in B.
-    * Exact-verified on the candidate pairs via `array_intersect`;
-    * containment is integer ppm.
-    */
-  def containmentPairs(df: DataFrame,
-                       idCol: String,
-                       textCol: String,
-                       n: Int = 3,
-                       tauNum: Int = 4,
-                       tauDen: Int = 5): DataFrame = {
-    val arrs = docShingleArrays(df, idCol, textCol, n)
-    val ranked = rankedPostings(arrs)
-    val prefixes = ranked
-      .filter(col("_rk") <=
-        col("_n") - expr(s"($tauNum * _n + ${tauDen - 1}) DIV $tauDen") + 1)
-      .select(col("_id"), col("_sh"))
-    val full = ranked.select(col("_id"), col("_sh"))
-    val cands = prefixes.as("a")
-      .join(full.as("b"),
-            col("a._sh") === col("b._sh") && col("a._id") =!= col("b._id"))
-      .select(col("a._id").as("contained_id"), col("b._id").as("container_id"))
-      .distinct()
-    cands
-      .join(arrs.select(col("_id").as("contained_id"), col("_shs").as("_sa"),
-                        col("_n").as("n_contained")), "contained_id")
-      .join(arrs.select(col("_id").as("container_id"), col("_shs").as("_sb")),
-            "container_id")
-      .withColumn("overlap", size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
-      .filter(col("overlap") * tauDen >= col("n_contained") * tauNum)
-      .withColumn("containment_ppm", expr("overlap * 1000000L DIV n_contained"))
-      .select("contained_id", "container_id", "overlap", "n_contained",
-              "containment_ppm")
   }
 
   /** Prefix-filtered exact set-similarity candidates (the PPJoin family's

@@ -56,17 +56,13 @@ object Scd01 {
   def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
     merged(target, delta, cfg, bucket = None)
 
-  /** [[incremental]] over a target slice clustered by `bucket`, a column
-    * that both `target` and `delta` carry and that is a function of the
-    * business key (the bucketed layout of [[graft.ScdEngine]]): ONE exchange
-    * on `bucket`, kept by the snapshot, as in [[Scd2.incrementalClustered]].
+  /** [[incremental]]; with `bucket`, a column that both `target` and `delta`
+    * carry and that is a function of the business key (the bucketed layout
+    * of [[graft.ScdEngine]]), over ONE exchange on it, kept by the snapshot,
+    * as in [[Scd2.merged]].
     */
-  private[graft] def incrementalClustered(target: DataFrame, delta: DataFrame, cfg: ScdConfig,
-                                          bucket: String): DataFrame =
-    merged(target, delta, cfg, Some(bucket))
-
-  private def merged(target: DataFrame, delta: DataFrame, cfg: ScdConfig,
-                     bucket: Option[String]): DataFrame = {
+  private[graft] def merged(target: DataFrame, delta: DataFrame, cfg: ScdConfig,
+                            bucket: Option[String]): DataFrame = {
     cfg.validate()
     require(cfg.scdType == 0 || cfg.scdType == 1, s"scdType 0|1, got ${cfg.scdType}")
     val cols = delta.columns.toSeq.filterNot(bucket.contains)

@@ -20,9 +20,15 @@ import graft.functions.ScdFunctions._
   * and the timeline runs over the batch ∪ the selected versions. The
   * target's layout decides how they are selected: broadcast probe joins
   * for an unclustered target, so cost tracks batch size; for a bucketed
-  * slice ([[incrementalClustered]], the pruned path of [[graft.ScdEngine]])
+  * slice ([[merged]] with a bucket, the pruned path of [[graft.ScdEngine]])
   * a per-key window flag after ONE exchange on the bucket column, which
   * the timeline's windows and the bucketed write reuse.
+  *
+  * The reference's MERGE source also carries its redundant versions as
+  * `'delete'` rows (`get_incremental_scd2_sql.sql:218-229`), because a
+  * Snowflake MERGE deletes only what a source row matches. The merge here
+  * returns the post-MERGE snapshot itself, so a deleted version is a row
+  * the timeline does not keep.
   */
 object Scd2 {
 
@@ -39,7 +45,6 @@ object Scd2 {
   val PrevHashCol = "_prev_hash"
   val RunIdCol = "_run_id"
   val PriorityCol = "_priority"
-  val OpCol = "_scd2_op"
   val KeepCol = "_keep"
 
   /** Initial (full-refresh) load: delta batch -> complete SCD2 history.
@@ -59,87 +64,35 @@ object Scd2 {
       .select(cols.map(col) ++ cfg.auditColumns.map(col): _*)
   }
 
-  /** The MERGE source relation: `scd2_versions UNION ALL redundant_versions`
-    * with `_scd2_op` ('upsert'/'delete'); the version identity stays the raw
-    * (unique_key, updated_at) columns (see note on the key hashes above).
-    * Mirrors the `using (...)` subquery of `get_incremental_scd2_sql.sql:76-236`.
-    *
-    * Rows the [[affected]] timeline keeps are upserts carrying recomputed
-    * audit columns; persisted rows it does not keep are the redundant
-    * versions, deletes with NULL audit columns. One lineage with one
-    * consumer, so building the relation runs no Spark job and its plan holds
-    * no materialized leaf.
-    *
-    * Exposed separately so callers can inspect the planned actions;
-    * `incremental` returns the snapshot they produce.
-    */
-  def mergeSource(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame = {
-    val (destCols, _, merged) = affected(target, delta, cfg, bucket = None)
-    merged.select(destCols.map(col) ++
-                    cfg.auditColumns.map(c => when(col(KeepCol), col(c)).as(c)) :+
-                    when(col(KeepCol), lit("upsert")).otherwise(lit("delete")).as(OpCol): _*)
-  }
-
   /** Incremental update: the target snapshot the reference MERGE
-    * (`get_incremental_scd2_sql.sql:238-268`, SURVEY.md §4.3) leaves. The
-    * [[affected]] timeline already pairs each batch version with its stored
-    * one (previous wins the dedup), so no join replays the MERGE: the target
-    * rows the selection leaves out pass through as stored, and the rows the
-    * timeline keeps replace the selected ones. A kept persisted row takes
-    * the recomputed `merge_update_cols` and keeps its other stored audit
-    * columns (the matched update); persisted rows not kept are the deletes.
+    * (`get_incremental_scd2_sql.sql:238-268`, SURVEY.md §4.3) leaves, over
+    * an unclustered target ([[merged]]).
     */
   def incremental(target: DataFrame, delta: DataFrame, cfg: ScdConfig): DataFrame =
     merged(target, delta, cfg, bucket = None)
 
-  /** [[incremental]] over a target slice clustered by `bucket`, a column
-    * that both `target` and `delta` carry and that is a function of the
-    * business key (the bucketed layout of [[graft.ScdEngine]]). The merge
-    * runs over ONE exchange on `bucket`, and the snapshot keeps the column
-    * and that clustering, so a write partitioned on it needs no second one.
-    */
-  private[graft] def incrementalClustered(target: DataFrame,
-                                          delta: DataFrame,
-                                          cfg: ScdConfig,
-                                          bucket: String): DataFrame =
-    merged(target, delta, cfg, Some(bucket))
-
-  /** The snapshot of both layouts: the target rows the selection leaves out
-    * pass through as stored, the kept timeline rows replace the rest.
-    */
-  private def merged(target: DataFrame,
-                     delta: DataFrame,
-                     cfg: ScdConfig,
-                     bucket: Option[String]): DataFrame = {
-    val (_, passed, timelined) = affected(target, delta, cfg, bucket)
-    val isPrevious = col(SourceCol) === "previous"
-    val out = target.columns.map { c =>
-      cfg.auditColumns.find(_.equalsIgnoreCase(c)).fold(col(c)) { a =>
-        // a merge-update column is stored only on the rows the filter below
-        // drops; still reading it keeps every stored column in this branch,
-        // so both branches of a clustered split prune its exchange alike and
-        // it is planned once
-        val stored = if (cfg.mergeUpdateCols.contains(a)) !col(KeepCol) else lit(true)
-        when(isPrevious && stored, col(s"_t_$a")).otherwise(col(a))
-      }.as(c)
-    }
-    passed.unionByName(timelined.filter(col(KeepCol)).select(out: _*))
-  }
-
-  /** The batch's business columns, the target rows the selection
-    * ([[graft.functions.ScdFunctions.splitStored]]) leaves out, and the
-    * [[timeline]] of the batch ∪ the persisted versions it selects: stored
-    * rows of batch keys (J1/J2) that pass the `incremental_predicates`.
-    * Clustered on `bucket`, every timeline window is partitioned by
-    * (`bucket`, keys), so it reuses the selection's exchange.
+  /** The post-MERGE snapshot. The selection
+    * ([[graft.functions.ScdFunctions.splitStored]]) picks the persisted
+    * versions the batch affects: stored rows of batch keys (J1/J2) that
+    * pass the `incremental_predicates`. The target rows it leaves out pass
+    * through as stored; the [[timeline]] of the batch ∪ the selected rows
+    * replaces the rest. That timeline already pairs each batch version with
+    * its stored one (previous wins the dedup), so no join replays the
+    * MERGE. A kept persisted row takes the recomputed `merge_update_cols`
+    * and keeps its other stored audit columns (the matched update); a
+    * selected row the timeline does not keep is deleted.
     *
-    * Persisted rows carry their stored audit columns as `_t_<col>` (NULL on
-    * batch rows).
+    * With `bucket`, a column that both `target` and `delta` carry and that
+    * is a function of the business key (the bucketed layout of
+    * [[graft.ScdEngine]]), the merge runs over ONE exchange on it: every
+    * timeline window is partitioned by (`bucket`, keys) and reuses it, and
+    * the snapshot keeps the column and that clustering, so a write
+    * partitioned on it needs no second one.
     */
-  private def affected(target: DataFrame,
-                       delta: DataFrame,
-                       cfg: ScdConfig,
-                       bucket: Option[String]): (Seq[String], DataFrame, DataFrame) = {
+  private[graft] def merged(target: DataFrame,
+                            delta: DataFrame,
+                            cfg: ScdConfig,
+                            bucket: Option[String]): DataFrame = {
     cfg.validate()
     val deltaCols = delta.columns.toSeq.filterNot(bucket.contains)
     cfg.validateSchema(deltaCols)
@@ -159,14 +112,26 @@ object Scd2 {
       updatedAt -> resolveCi(target.columns.toSeq, cfg.validToCol))
     val (passed, rows) = splitStored(target, delta.select((destCols ++ bucket).map(col): _*),
                                      keys, cfg.incrementalPredicates, landing, bucket)
-    // all_records (:123-145) through scd2_versions + redundant_versions
-    // (:149-229). The content hash and dedup priority are added after the
-    // split, so a clustered exchange carries only the rows and their source
-    // tag, and passed-through rows need no hash.
+    // all_records (:123-145) through scd2_versions (:149-211). The content
+    // hash and dedup priority are added after the split, so a clustered
+    // exchange carries only the rows and their source tag, and
+    // passed-through rows need no hash. Persisted rows carry their stored
+    // audit columns as `_t_<col>` (NULL on batch rows).
     val renamed = rows.withColumnsRenamed(cfg.auditColumns.map(a => a -> s"_t_$a").toMap)
-    (destCols, passed,
-     timeline(withTags(renamed, cfg.checkColumns(destCols)), cfg, bucket.toSeq ++ keys, updatedAt,
-              loadedAt))
+    val kept = timeline(withTags(renamed, cfg.checkColumns(destCols)), cfg, bucket.toSeq ++ keys,
+                        updatedAt, loadedAt)
+    val isPrevious = col(SourceCol) === "previous"
+    val out = target.columns.map { c =>
+      cfg.auditColumns.find(_.equalsIgnoreCase(c)).fold(col(c)) { a =>
+        // `!_keep` is never true on the timeline's output. The term only
+        // keeps the stored merge-update column read in this branch, so both
+        // branches of a clustered split feed the same columns to its
+        // exchange and it is planned once; pruned here, it is planned twice
+        val stored = if (cfg.mergeUpdateCols.contains(a)) !col(KeepCol) else lit(true)
+        when(isPrevious && stored, col(s"_t_$a")).otherwise(col(a))
+      }.as(c)
+    }
+    passed.unionByName(kept.select(out: _*))
   }
 
   /** Source-tagged rows with the reference's dedup priority (0 = previous
@@ -178,16 +143,14 @@ object Scd2 {
 
   /** The SCD2 timeline over tagged rows ([[withTags]]): one flag-and-window
     * pass, every window partitioned by `keys` (the business key, or with it
-    * a bucket) so the whole pass shares one exchange.
+    * a bucket) so the whole pass shares one exchange and, but for the
+    * `loaded_at` run window, one sort.
     *
     *   1. one row per version (keys, updated_at), previous rows winning;
     *   2. the lag of the content hash;
     *   3. `_keep`: the row belongs to the canonical timeline;
-    *   4. kept rows, plus persisted rows that are not kept (the redundant
-    *      versions a merge deletes);
-    *   5. audit columns over the kept rows, partitioned by (keys, `_keep`);
-    *      on the other rows they are meaningless: [[mergeSource]] NULLs
-    *      them and [[merged]] drops the rows.
+    *   4. the kept rows only, with `_keep` (always true) still on them;
+    *   5. their audit columns.
     *
     * `loadedAt` names the load-watermark column that picks each content
     * run's winner when collapsing; without it the run opener wins.
@@ -238,11 +201,9 @@ object Scd2 {
           .withColumn(KeepCol, prevRun.isNull || prevRun =!= col(RunIdCol))
     }
 
-    // scd2_versions (:201-211) ∪ redundant_versions (:218-229): partitioning
-    // the audit windows by (keys, _keep) computes them over the kept rows
-    // alone, and the business-key exchange already satisfies it.
-    withAuditColumns(flagged.filter(col(KeepCol) || isPrevious),
-                     cfg, keys :+ KeepCol, updatedAt)
+    // scd2_versions (:201-211); the redundant versions (:218-229) are the
+    // rows the filter drops
+    withAuditColumns(flagged.filter(col(KeepCol)), cfg, keys, updatedAt)
   }
 
   /** The four audit columns over a canonical timeline (W3-W6).

@@ -14,16 +14,15 @@ import graft.{ScdConfig, ScdEngine}
   * what `MERGE ... OUTPUT` exports on a warehouse, recovered here from the
   * two states the engine already has in hand.
   *
-  * The pre-merge snapshot is pinned with an eager `localCheckpoint` BEFORE
-  * the merge swaps the target directory underneath its file listing —
-  * without it the lazy read would resolve against the post-swap files. A
-  * micro-batch cut off mid-swap, past the swap's commit point, is finished
-  * by the next one before that one reads its pre-merge snapshot; the
-  * cut-off batch's own changes then reach no changelog (a replay of it
-  * finds them already applied). The
-  * changelog write is append-only with a `_batch_id` column: at-least-once
-  * `foreachBatch` retries overwrite their own batch deterministically
-  * (same inputs -> same delta), so consumers dedup on (_batch_id, key).
+  * The delta is taken between the rows the merge's staged snapshot
+  * replaces and that snapshot, and written before the swap's commit point
+  * (`ScdEngine.runWithCdc`), so a micro-batch cut off anywhere in its swap
+  * has already written its changelog: the retry finds its changes applied
+  * and appends nothing, or, cut off before the commit point, appends the
+  * same rows again. The changelog write is append-only with a `_batch_id`
+  * column: at-least-once `foreachBatch` retries rewrite their own batch
+  * deterministically (same inputs -> same delta), so consumers dedup on
+  * (_batch_id, key).
   *
   * SCD Type 2 only — types 0/1 rewrite rows in place and their delta is the
   * batch itself.

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -208,6 +208,9 @@ class BucketedMergeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val write = writes.head
       assert(collect(write) { case e: ShuffleExchangeLike => e }.size === 1, write)
       assert(collect(write) { case e: BroadcastExchangeLike => e }.isEmpty, write)
+      // the slice's two (bucket, keys) sorts, one for the merge's windows
+      // and the write's sort by bucket
+      assert(collect(write) { case s: SortExec => s }.size <= 4, write)
 
       // type 1 lets the later batch win even with a back-dated row (keys 50
       // and 99) and keeps a key's first-seen _valid_from, neither of which a

@@ -144,13 +144,9 @@ class Scd2EdgeCaseSpec extends SparkTestBase {
            (collapse.copy(collapseRedundantVersions = false), false))) {
       def shape(df: DataFrame) = if (keepLoadedAt) df else df.drop("_loaded_at")
       val target = Scd2.initialLoad(shape(history), cfg)
-      val ((source, merged), jobs) = jobsDuring {
-        (Scd2.mergeSource(target, shape(batch), cfg),
-         Scd2.incremental(target, shape(batch), cfg))
-      }
+      val (merged, jobs) = jobsDuring(Scd2.incremental(target, shape(batch), cfg))
       val mode = s"collapse=${cfg.collapseRedundantVersions} loaded_at=$keepLoadedAt"
       assert(jobs === 0, s"$mode: construction ran $jobs jobs")
-      assert(!hasLogicalRdd(source), s"$mode: LogicalRDD in the merge source plan")
       assert(!hasLogicalRdd(merged), s"$mode: LogicalRDD in the merge plan")
       assertInvariantsGreen(merged, cfg)
       // key 1's back-dated copy of content 'a': collapsing keeps one version
@@ -171,13 +167,14 @@ class Scd2EdgeCaseSpec extends SparkTestBase {
     val session = spark
     import session.implicits._
     // the q27 shape: input hash-partitioned on the key; every window of the
-    // load, including the audit windows over (keys, _keep), reuses it
+    // load reuses it, and the audit windows reuse the dedup window's sort
     val in = Seq((1, "a", ts("2025-01-01 00:00:00")), (1, "b", ts("2025-01-02 00:00:00")),
                  (2, "a", ts("2025-01-01 00:00:00")))
       .toDF("k", "v", "_updated_at").repartition(4, col("k"))
     val plan = Scd2.initialLoad(in, ScdConfig(uniqueKey = Seq("k")))
       .queryExecution.executedPlan.toString
     assert("Exchange ".r.findAllIn(plan).size === 1, plan)
+    assert("Sort \\[".r.findAllIn(plan).size === 1, plan)
   }
 
   test("a row back-dated before a key's first version moves that version's start") {

@@ -237,6 +237,57 @@ class ScdEngineWriterSpec extends SparkTestBase {
         s"changelog:\n${got.collect().mkString("\n")}\nwanted:\n${want.collect().mkString("\n")}")
     }
   }
+
+  test("runWithCdc cut off at any rename keeps its run's changelog once replayed") {
+    val n = 8
+    val bucketOfKey = (1 to n).toDF("k")
+      .select($"k", ScdEngine.bucketOf(Seq("k"), n)).as[(Int, Int)].collect().toMap
+    // two keys in different buckets, so a run over both stages 2 buckets
+    val keys = Seq(1, (2 to n).find(bucketOfKey(_) != bucketOfKey(1)).get)
+    def dirOf(k: Int) = s"${ScdEngine.BucketCol}=${bucketOfKey(k)}"
+    val cuts = Seq(
+      CutSwap("whole table: live -> .old", None, (_, dst) => dst.getName == "dim.old",
+              pastCommit = false),
+      CutSwap("whole table: .tmp -> live", None, (src, _) => src.getName == "dim.tmp",
+              pastCommit = true)) ++ keys.flatMap(k => Seq(
+      CutSwap(s"bucket of key $k: live -> .old", Some(n),
+              (_, dst) => dst.getParent.getName == "dim.old" && dst.getName == dirOf(k),
+              pastCommit = true),
+      CutSwap(s"bucket of key $k: .tmp -> live", Some(n),
+              (src, _) => src.getParent.getName == "dim.tmp" && src.getName == dirOf(k),
+              pastCommit = true)))
+    val failures = cuts.flatMap { cut =>
+      var failure = Option.empty[String]
+      withNoRenameFs("graft-writer-cdc-cut") { (d, root) =>
+        val all = keys ++ (1 to n).filterNot(keys.contains).take(1)
+        val (a, b) = (rows("a", "2025-01-01 00:00:00", all: _*),
+                      rows("b", "2025-01-02 00:00:00", keys: _*))
+        def runCdc(table: String, df: org.apache.spark.sql.DataFrame, runId: Long) =
+          ScdEngine.runWithCdc(spark, df, table, s"$d/${new Path(table).getName}_cdc", runId,
+                               cfg, numBuckets = cut.buckets)
+        // the uninterrupted runs, then the same runs with b's cut off and
+        // replayed under its run id
+        for ((df, i) <- Seq(a, b).zipWithIndex) runCdc(s"$d/ref", df, i.toLong)
+        runCdc(s"$root/dim", a, 0L)
+        NoRenameFs.refuse = cut.refuse
+        val cutOff = scala.util.Try(runCdc(s"$root/dim", b, 1L)).failed.toOption
+        NoRenameFs.refuse = (_, _) => false
+        runCdc(s"$root/dim", b, 1L)
+        def changelog(table: String) = spark.read.parquet(s"$d/${table}_cdc")
+          .dropDuplicates("_batch_id", "k", "_updated_at").collect().toSet
+        val (want, got) = (changelog("ref"), changelog("dim"))
+        val problems = Seq(
+          Option.when(!cutOff.exists(_.isInstanceOf[java.io.IOException]))(
+            s"run of b did not throw at the refused rename: $cutOff"),
+          Option.when(got != want)(
+            s"changelog:\n${got.mkString("\n")}\nwanted:\n${want.mkString("\n")}")
+        ).flatten
+        if (problems.nonEmpty) failure = Some(s"${cut.name}: ${problems.mkString("; ")}")
+      }
+      failure
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
 }
 
 /** Local file system under its own `norename` scheme whose `rename`
